@@ -525,10 +525,11 @@ object Probe {
     // configurable state-partition count and optional RocksDB changelog
     // checkpointing, reporting per-hop seconds, micro-batch and
     // state-partition counts, and the idle re-drain.
-    //   runMain graft.Probe streambench <sfDir> [statePartitions|0] [changelog]
+    //   runMain graft.Probe streambench <sfDir> [statePartitions] [changelog]
     case "streambench" :: sfDir :: rest =>
       import org.apache.spark.sql.functions._
-      val parts = rest.headOption.map(_.toInt).filter(_ > 0)
+      val parts = rest.headOption.flatMap(s => scala.util.Try(s.toInt).toOption)
+        .filter(_ > 0)
       val changelog = rest.contains("changelog")
       val spark = GraftSession.get()
       spark.sparkContext.setLogLevel("WARN")
@@ -581,9 +582,11 @@ object Probe {
       plan.runOnce(stream())
       val idle = (System.nanoTime() - ti0) / 1e9
       val survivors = graft.operators.TxLog.read(spark, plan.corpusZone).count()
+      // hidden `.<id>.crc` checksums and `_` markers are not batches
       def countDir(p: String, dirsOnly: Boolean): Int =
         Option(new java.io.File(p).listFiles())
-          .map(_.count(f => !dirsOnly || f.isDirectory)).getOrElse(-1)
+          .map(_.count(f => !f.getName.startsWith(".") && !f.getName.startsWith("_") &&
+            (!dirsOnly || f.isDirectory))).getOrElse(-1)
       println(f"streambench parts=${parts.getOrElse(-1)}%d changelog=$changelog " +
         hops.map { case (n, s) => f"$n=$s%.2f" }.mkString(" ") +
         f" full=${hops.map(_._2).sum}%.2f idle=$idle%.2f survivors=$survivors%d " +

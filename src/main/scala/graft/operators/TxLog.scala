@@ -611,7 +611,7 @@ object TxLog {
 
   /** The per-file line families (s/t/b/f), rendered in the canonical
     * order — the unit multi-part checkpoints shard on. */
-  private def perFileLines(files: Seq[String],
+  private[graft] def perFileLines(files: Seq[String],
                            stats: Map[String, (Double, Double)],
                            colStats: Map[String, Map[String, ColStat]],
                            sizes: Map[String, (Long, Long)]): Vector[String] = {
@@ -920,7 +920,7 @@ object TxLog {
     val (newStats, newColStats) =
       if (newFiles.isEmpty) (Map.empty[String, (Double, Double)],
         Map.empty[String, Map[String, ColStat]])
-      else collectFileStats(spark, root, dir,
+      else collectFileStats(spark, root, dir, newInfo, physicalSchema(head),
         head.format, head.meta.get("stats.col").filter(_.nonEmpty),
         effectiveStatsCols(Nil, head.meta), colMap(head.meta))
     val removedSet = removed.toSet
@@ -1355,22 +1355,193 @@ object TxLog {
     base.fold(df.schema)(mergeSchemas(_, df.schema))
   }
 
-  /** Per-file stats over the files just written to `dataDir` — the legacy
-    * single-column doubles (`legacyCol`) and the typed multi-column
-    * min/max/null-counts (`typedCols`) computed in ONE bounded extra scan
-    * of the new files, all columns aggregated in the same
-    * `groupBy(input_file_name)` job (Delta-style stats collection; a zone
-    * carrying both meta keys must not pay two read passes per commit).
-    * Legacy entries with a null/NaN bound are dropped (those files are
-    * always read). Typed numeric columns record doubles ("num");
-    * everything else records its string form ("str" — ISO date/timestamp
-    * strings order chronologically). */
+  /** Per-file stats over the files a commit just wrote to `dataDir`: the
+    * legacy single-column doubles (`legacyCol`) and the typed
+    * multi-column min/max/null counts (`typedCols`). Parquet already
+    * keeps these numbers per row group, so the usual commit reads only
+    * the footers of `files` (the committer's own listing of `dataDir`)
+    * and runs no Spark job; [[footerFileStats]] names the column types
+    * whose footer values are byte-identical to Spark's `min`/`max`.
+    * Everything else — another format; a float, double, decimal,
+    * timestamp or other stats column; a row group without min/max —
+    * runs [[aggregateFileStats]] once over the whole data dir. `written`
+    * is the schema of the frame the files were written from (physical
+    * column names), which fixes each column's type without inference. */
   private def collectFileStats(spark: SparkSession, root: Path, dataDir: Path,
+                               files: Seq[(String, (Long, Long))],
+                               written: Option[org.apache.spark.sql.types.StructType],
                                format: String, legacyCol: Option[String],
                                typedCols: Seq[String],
                                colmap: Map[String, String] = Map.empty)
       : (Map[String, (Double, Double)], Map[String, Map[String, ColStat]]) = {
     if (legacyCol.isEmpty && typedCols.isEmpty) return (Map.empty, Map.empty)
+    written.flatMap(w => footerFileStats(spark.sparkContext.hadoopConfiguration,
+        root, files, w, format, legacyCol, typedCols, colmap))
+      .getOrElse(aggregateFileStats(spark, root, dataDir, files, format,
+        legacyCol, typedCols, colmap))
+  }
+
+  /** [[collectFileStats]] from Parquet footers, or None when some stats
+    * column or row group cannot give exactly what [[aggregateFileStats]]
+    * commits. Footers serve three column types:
+    *  - integral ("num"): Parquet's signed INT32/INT64 bounds are Spark's,
+    *    and `Double.toString(v.toDouble)` is what the aggregation's
+    *    `cast("double")` prints; the legacy doubles are served only for
+    *    an integral column;
+    *  - UTF-8 strings ("str"): Parquet orders them as unsigned bytes, the
+    *    order of `UTF8String`;
+    *  - dates ("str") in years 1583-9999: one-width ISO strings order
+    *    chronologically, and no Julian/Gregorian rebase applies.
+    * Floats, doubles and decimals (NaN ordering, scale formatting),
+    * timestamps (their string form follows the session time zone) and
+    * every other type go to the aggregation, as does any row group
+    * without min/max or a null count (parquet-mr leaves them out for
+    * binary bounds above 4 KiB) — the answer is all-footer or
+    * all-aggregate, never mixed. A
+    * zero-row file (an empty write partition) has no row groups and
+    * records rows=0 with no bounds, exactly the aggregation's fill. */
+  private[graft] def footerFileStats(conf: org.apache.hadoop.conf.Configuration,
+                                     root: Path, files: Seq[(String, (Long, Long))],
+                                     written: org.apache.spark.sql.types.StructType,
+                                     format: String, legacyCol: Option[String],
+                                     typedCols: Seq[String],
+                                     colmap: Map[String, String] = Map.empty)
+      : Option[(Map[String, (Double, Double)], Map[String, Map[String, ColStat]])] = {
+    import org.apache.parquet.column.statistics.Statistics
+    import org.apache.parquet.io.api.Binary
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, IntLogicalTypeAnnotation, StringLogicalTypeAnnotation}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
+    import org.apache.spark.sql.types.{ByteType, DateType, IntegerType, LongType, ShortType, StringType}
+    import scala.jdk.CollectionConverters._
+    if (format != "parquet") return None
+    val cols = (legacyCol.toSeq ++ typedCols).distinct
+    val physical = cols.map(c => c -> colmap.getOrElse(c, c)).toMap
+    // 'i' integral, 's' UTF-8 string, 'd' date
+    val tpe = cols.map(c => c -> written.find(_.name == physical(c)).map(_.dataType).collect {
+      case ByteType | ShortType | IntegerType | LongType => 'i'
+      case dt if dt == StringType => 's' // default (UTF8_BINARY) collation only
+      case DateType => 'd'
+    }).toMap
+    if (tpe.values.exists(_.isEmpty) || legacyCol.exists(c => !tpe(c).contains('i')))
+      return None
+    val (minDay, maxDay) = (java.time.LocalDate.of(1583, 1, 1).toEpochDay,
+      java.time.LocalDate.of(9999, 12, 31).toEpochDay)
+    // (rows, nulls, bounds as committed strings) of one column in one
+    // file; None when the footer cannot answer exactly
+    def fold(meta: org.apache.parquet.hadoop.metadata.ParquetMetadata, c: String)
+        : Option[(Long, Long, Option[(String, String)])] = {
+      val t = tpe(c).get
+      var rows = 0L
+      var nulls = 0L
+      var acc: Statistics[_] = null
+      val blocks = meta.getBlocks.iterator()
+      while (blocks.hasNext) {
+        val b = blocks.next()
+        val chunk = b.getColumns.iterator().asScala
+          .find(_.getPath.toArray.sameElements(Array(physical(c)))).orNull
+        if (chunk == null) return None
+        val pt = chunk.getPrimitiveType
+        val ann = pt.getLogicalTypeAnnotation
+        val typeOk = t match {
+          case 'i' => (pt.getPrimitiveTypeName == INT32 || pt.getPrimitiveTypeName == INT64) &&
+            (ann == null || ann.isInstanceOf[IntLogicalTypeAnnotation] &&
+              ann.asInstanceOf[IntLogicalTypeAnnotation].isSigned)
+          case 's' => pt.getPrimitiveTypeName == BINARY &&
+            ann.isInstanceOf[StringLogicalTypeAnnotation]
+          case _ => pt.getPrimitiveTypeName == INT32 &&
+            ann.isInstanceOf[DateLogicalTypeAnnotation]
+        }
+        // parquet-mr leaves out the whole statistics of a chunk whose
+        // binary bounds pass 4 KiB; other writers may keep the null count
+        // but drop the bounds — either way the footer can't answer
+        val st = chunk.getStatistics
+        if (!typeOk || st == null || !st.isNumNullsSet) return None
+        if (!st.hasNonNullValue && st.getNumNulls != b.getRowCount) return None
+        rows += b.getRowCount
+        nulls += st.getNumNulls
+        if (st.hasNonNullValue) {
+          if (acc == null) acc = Statistics.createStats(pt)
+          acc.mergeStatistics(st)
+        }
+      }
+      if (acc == null) return Some((rows, nulls, None))
+      def num(v: Any) = v.asInstanceOf[Number].longValue
+      val (mn, mx) = (acc.genericGetMin, acc.genericGetMax)
+      val render: Any => String = t match {
+        case 'i' => v => java.lang.Double.toString(num(v).toDouble)
+        case 's' => v => v.asInstanceOf[Binary].toStringUsingUTF8
+        case _ => v => java.time.LocalDate.ofEpochDay(num(v)).toString
+      }
+      if (t == 'd' && (num(mn) < minDay || num(mx) > maxDay)) None
+      else Some((rows, nulls, Some((render(mn), render(mx)))))
+    }
+    val footers = readFooters(conf, files.map { case (rel, (len, mtime)) =>
+      new org.apache.hadoop.fs.FileStatus(len, false, 1, 0L, mtime, new Path(root, rel))
+    })
+    val perFile = files.map(_._1).zip(footers).map { case (rel, meta) =>
+      rel -> cols.map(c => c -> fold(meta, c)).toMap
+    }
+    if (perFile.exists(_._2.values.exists(_.isEmpty))) return None
+    val legacy = legacyCol.toSeq.flatMap(c => perFile.flatMap { case (rel, m) =>
+      m(c).get._3.map { case (mn, mx) => rel -> ((mn.toDouble, mx.toDouble)) }
+    }).toMap
+    val typed =
+      if (typedCols.isEmpty) Map.empty[String, Map[String, ColStat]]
+      else perFile.map { case (rel, m) =>
+        rel -> typedCols.map { c =>
+          val (rows, nulls, bounds) = m(c).get
+          c -> ColStat(if (tpe(c).contains('i')) "num" else "str", rows, nulls,
+            bounds.map(_._1), bounds.map(_._2))
+        }.toMap
+      }.toMap
+    Some((legacy, typed))
+  }
+
+  /** The Parquet footers of `files`, in order — read on a small thread
+    * pool past a handful of files, like Spark's
+    * `readParquetFootersInParallel`, since each read is one round trip. */
+  private def readFooters(conf: org.apache.hadoop.conf.Configuration,
+                          files: Seq[org.apache.hadoop.fs.FileStatus])
+      : Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    def read(st: org.apache.hadoop.fs.FileStatus) = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try r.getFooter finally r.close()
+    }
+    if (files.size <= 4) files.map(read)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(8, files.size), { (r: Runnable) =>
+          val t = new Thread(r, "txlog-footers"); t.setDaemon(true); t
+        })
+      try {
+        val futures = files.map(st => pool.submit(
+          new java.util.concurrent.Callable[org.apache.parquet.hadoop.metadata.ParquetMetadata] {
+            def call() = read(st)
+          }))
+        futures.map { f =>
+          try f.get()
+          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+        }
+      } finally pool.shutdownNow()
+    }
+  }
+
+  /** [[collectFileStats]] by aggregation: read the data dir back and
+    * compute every column's bounds and null count in ONE
+    * `groupBy(input_file_name)` job (a zone carrying both stats meta keys
+    * must not pay two read passes per commit). Legacy entries with a
+    * null/NaN bound are dropped (those files are always read). Typed
+    * numeric columns record doubles ("num"); everything else records its
+    * string form ("str" — ISO date/timestamp strings order
+    * chronologically). */
+  private[graft] def aggregateFileStats(spark: SparkSession, root: Path, dataDir: Path,
+                                        files: Seq[(String, (Long, Long))],
+                                        format: String, legacyCol: Option[String],
+                                        typedCols: Seq[String],
+                                        colmap: Map[String, String] = Map.empty)
+      : (Map[String, (Double, Double)], Map[String, Map[String, ColStat]]) = {
     import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min, when}
     // stats are keyed by LOGICAL column names throughout the manifest;
     // freshly-written files carry physical names, so surface them
@@ -1436,9 +1607,7 @@ object TxLog {
       if (typedCols.isEmpty) typed
       else {
         val seen = typed.keySet
-        val empties = listRel(
-          dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration),
-          root, dataDir).filterNot(seen)
+        val empties = files.map(_._1).filterNot(seen)
         typed ++ empties.map(rel =>
           rel -> typedCols.map(c => c -> ColStat(kinds(c), 0L, 0L, None, None)).toMap)
       }
@@ -1505,14 +1674,15 @@ object TxLog {
           "name retired by a drop/rename — add them via ALTER TABLE ADD " +
           "COLUMNS (addColumns), which maps them to a fresh physical name")
     }
-    toPhysical(df, cmap).write.mode(SaveMode.ErrorIfExists)
-      .format(head0.format).save(dataDir.toString)
+    val out = toPhysical(df, cmap)
+    out.write.mode(SaveMode.ErrorIfExists).format(head0.format).save(dataDir.toString)
     val addedInfo = listRelInfo(f, root, dataDir)
     val added = addedInfo.map(_._1)
     val cName = statsCol.orElse(head0.meta.get("stats.col")).filter(_.nonEmpty)
     val tCols = effectiveStatsCols(statsCols, head0.meta)
     val (addedStats, addedColStats) =
-      collectFileStats(spark, root, dataDir, head0.format, cName, tCols, cmap)
+      collectFileStats(spark, root, dataDir, addedInfo, Some(out.schema),
+        head0.format, cName, tCols, cmap)
     val statsMeta = cName.map(c => Map("stats.col" -> c)).getOrElse(Map.empty) ++
       (if (tCols.nonEmpty) Map("stats.cols" -> tCols.mkString(",")) else Map.empty)
     var attempt = 0
@@ -1758,7 +1928,8 @@ object TxLog {
     val cName = statsCol.orElse(head0.meta.get("stats.col")).filter(_.nonEmpty)
     val tCols = effectiveStatsCols(statsCols, head0.meta)
     val (stats, colStats) =
-      collectFileStats(spark, root, dataDir, head0.format, cName, tCols)
+      collectFileStats(spark, root, dataDir, filesInfo, Some(df.schema),
+        head0.format, cName, tCols)
     val statsMeta = cName.map(c => Map("stats.col" -> c)).getOrElse(Map.empty) ++
       (if (tCols.nonEmpty) Map("stats.cols" -> tCols.mkString(",")) else Map.empty)
     var attempt = 0
@@ -1854,7 +2025,8 @@ object TxLog {
     * update row for that key (Delta's `WHEN MATCHED UPDATE SET *` is
     * cardinality-preserving instead; this merge treats `key` as the
     * primary key it prunes on). `updates` must be unique per key (the
-    * standard multiple-match ambiguity is rejected, like Delta's).
+    * standard multiple-match ambiguity is rejected, like Delta's) and
+    * free of null keys (a null key can match no row).
     *
     * The 100 TB shape is the point: only files whose committed [min, max]
     * for `key` OVERLAPS the updates' key range are read and rewritten
@@ -1890,36 +2062,53 @@ object TxLog {
     * are TOMBSTONES — their keys' target rows are removed and nothing is
     * re-inserted; every other row upserts as in [[merge]]. The op column
     * never lands in the zone. Same pruned-rewrite bound (files whose
-    * `key` stats overlap the batch's key range), same OCC loop. */
+    * `key` stats overlap the batch's key range), same OCC loop.
+    *
+    * Spark jobs per merge: one aggregate over the persisted batch (key
+    * bounds and every count the merge reports), the matched-key count,
+    * and the rewrite — the new files' stats come from their Parquet
+    * footers ([[collectFileStats]]), not from reading them back. A batch
+    * with a null key is refused loudly; an empty batch is a no-op. */
   private def mergeImpl(spark: SparkSession, zone: String, updates: DataFrame,
                         key: String, maxAttempts: Int,
                         prePublishHook: () => Unit,
                         batchId: Option[Long],
                         opCol: Option[String] = None): Option[MergeStats] = {
-    import org.apache.spark.sql.functions.{col, count, countDistinct, lit, max, min}
+    import org.apache.spark.sql.functions.{col, count, countDistinct, lit, max, min, when}
     require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
     val f = fs(spark, zone)
     val root = f.makeQualified(new Path(zone))
-    // bounded driver state: two key bounds + three row counts
+    // bounded driver state: two key bounds + four row counts
     val updRows = updates.persist()
     try {
+      // ONE aggregate answers every question the merge asks of the batch
+      // — key bounds, rows, distinct keys, null keys, upserting rows — as
+      // each further action would be one more Spark job on the commit path
+      val upserts = opCol.fold(count(lit(1)))(c => count(when(col(c) =!= "D", 1)))
       val kr = updRows
-        .agg(min(col(key)), max(col(key)), count(lit(1)), countDistinct(col(key)))
+        .agg(min(col(key)), max(col(key)), count(lit(1)), countDistinct(col(key)),
+          count(when(col(key).isNull, 1)), upserts)
         .first()
-      if (kr.isNullAt(0))
+      val (nRows, nKeys, nullKeys, upsertCount) =
+        (kr.getLong(2), kr.getLong(3), kr.getLong(4), kr.getLong(5))
+      if (nRows == 0L)
         return Some(MergeStats(latest(spark, zone).map(_.gen).getOrElse(0L),
           0L, latest(spark, zone).map(_.files.size.toLong).getOrElse(0L), 0L, 0L))
-      require(kr.getLong(2) == kr.getLong(3),
-        s"merge updates must be unique per '$key': ${kr.getLong(2)} rows over " +
-          s"${kr.getLong(3)} distinct keys (resolve duplicates first — e.g. " +
+      // a null key matches nothing and prunes nothing: refuse the batch
+      // rather than drop its rows (countDistinct skips nulls, so the
+      // uniqueness check below would misreport them as duplicates)
+      require(nullKeys == 0L,
+        s"merge key '$key' is null in $nullKeys of $nRows update rows — drop " +
+          "or fill null keys before merging")
+      require(nRows == nKeys,
+        s"merge updates must be unique per '$key': $nRows rows over " +
+          s"$nKeys distinct keys (resolve duplicates first — e.g. " +
           "Cdc.snapshot's last-writer-wins)")
       val (lo, hi) = (kr.get(0), kr.get(1))
       // the re-insert side: tombstone rows remove their key and nothing
       // else; the op marker itself never lands in the zone
       val dataRows = opCol.map(c =>
         updRows.filter(col(c) =!= "D").drop(c)).getOrElse(updRows)
-      val upsertCount =
-        if (opCol.isEmpty) kr.getLong(2) else dataRows.count()
       var attempt = 0
       while (attempt < maxAttempts) {
         val head = latest(spark, zone).getOrElse(init(spark, zone))
@@ -1939,18 +2128,20 @@ object TxLog {
             else None)
           base.fold(dataRows.schema)(mergeSchemas(_, dataRows.schema))
         }
-        val updKeys = updRows.select(col(key)).distinct()
+        // no distinct: the requires above prove the keys unique and non-null
+        val updKeys = updRows.select(col(key))
         val touchedDf =
           if (touched.isEmpty)
             conform(dataRows, schema).filter(lit(false))
           else loadFiles(spark, head, touched.map(p => zone.stripSuffix("/") + "/" + p))
         val survivors = touchedDf.join(updKeys, Seq(key), "left_anti")
-        // count distinct MATCHED KEYS, not matched target rows: a zone
+        // count MATCHED UPDATE KEYS, not matched target rows: a zone
         // holding duplicate rows for one key would overcount updates and
-        // push insertedRows negative. (Those duplicate target rows are
-        // collapsed to the single update row for their key — upsert-by-key
-        // semantics; updates are unique per key by the require above, so
-        // updatedRows <= total update rows and insertedRows >= 0.)
+        // push insertedRows negative. The semi join keeps each (unique)
+        // update key at most once however many target rows it matches.
+        // (Those duplicate target rows are collapsed to the single update
+        // row for their key — upsert-by-key semantics — so updatedRows <=
+        // total update rows and insertedRows >= 0.)
         val updatedRows =
           updKeys.join(touchedDf.select(col(key)), Seq(key), "left_semi").count()
         val insertedRows = math.max(0L, upsertCount - updatedRows)
@@ -1961,13 +2152,13 @@ object TxLog {
         val newData =
           if (touched.isEmpty) conform(dataRows, schema)
           else conform(survivors, schema).unionByName(conform(dataRows, schema))
-        toPhysical(newData, colMap(head.meta)).write
-          .mode(SaveMode.ErrorIfExists).format(head.format)
+        val out = toPhysical(newData, colMap(head.meta))
+        out.write.mode(SaveMode.ErrorIfExists).format(head.format)
           .save(dataDir.toString)
         val newInfo = listRelInfo(f, root, dataDir)
         val newFiles = newInfo.map(_._1)
         val (newStats, newColStats) = collectFileStats(spark, root, dataDir,
-          head.format, head.meta.get("stats.col").filter(_.nonEmpty),
+          newInfo, Some(out.schema), head.format, head.meta.get("stats.col").filter(_.nonEmpty),
           effectiveStatsCols(Nil, head.meta), colMap(head.meta))
         val nextFiles = (head.files.filter(untouchedSet) ++ newFiles).sorted
         // untouched files keep their committed stats; touched files' entries drop
@@ -2171,13 +2362,13 @@ object TxLog {
           org.apache.spark.sql.functions.lit(false)))
       val deleted = touchedDf.count() - survivors.count()
       val dataDir = new Path(root, "d-" + UUID.randomUUID().toString.take(8))
-      toPhysical(survivors, colMap(head.meta)).write
-        .mode(SaveMode.ErrorIfExists).format(head.format)
+      val out = toPhysical(survivors, colMap(head.meta))
+      out.write.mode(SaveMode.ErrorIfExists).format(head.format)
         .save(dataDir.toString)
       val newInfo = listRelInfo(f, root, dataDir)
       val newFiles = newInfo.map(_._1)
       val (newStats, newColStats) = collectFileStats(spark, root, dataDir,
-        head.format, head.meta.get("stats.col").filter(_.nonEmpty),
+        newInfo, Some(out.schema), head.format, head.meta.get("stats.col").filter(_.nonEmpty),
         effectiveStatsCols(Nil, head.meta), colMap(head.meta))
       val nextFiles = (head.files.filter(untouchedSet) ++ newFiles).sorted
       val nextStats = head.stats.filter { case (p, _) => untouchedSet(p) } ++ newStats
@@ -2415,13 +2606,14 @@ object TxLog {
       return CompactStats(head.gen, head.files.size.toLong, head.files.size.toLong,
         bytes, rewritten = false)
     val dataDir = new Path(root, "d-" + UUID.randomUUID().toString.take(8))
-    readSnapshot(spark, zone, head).repartition(wantFiles.toInt)
-      .write.mode(SaveMode.ErrorIfExists).format(head.format).save(dataDir.toString)
+    val out = readSnapshot(spark, zone, head).repartition(wantFiles.toInt)
+    out.write.mode(SaveMode.ErrorIfExists).format(head.format).save(dataDir.toString)
     val newInfo = listRelInfo(f, root, dataDir)
     val newFiles = newInfo.map(_._1)
     // a stats-tracked zone recomputes per-file stats for the rewrite
     val (newStats, newColStats) = collectFileStats(spark, root, dataDir,
-      head.format, head.meta.get("stats.col").filter(_.nonEmpty), effectiveStatsCols(Nil, head.meta))
+      newInfo, Some(out.schema), head.format,
+      head.meta.get("stats.col").filter(_.nonEmpty), effectiveStatsCols(Nil, head.meta))
     prePublishHook()
     // meta carries forward: compaction must not erase e.g. the streaming
     // sink's batchId high-water mark. The column mapping RESETS: the
@@ -2466,13 +2658,13 @@ object TxLog {
     val bytes = committedBytes(f, zone, head)
     val wantFiles = math.max(1L, math.ceil(bytes.toDouble / targetBytes).toLong).toInt
     val dataDir = new Path(root, "d-" + UUID.randomUUID().toString.take(8))
-    Layout.clusterByZ(readSnapshot(spark, zone, head), cols, bits, wantFiles)
-      .write.mode(SaveMode.ErrorIfExists).format(head.format).save(dataDir.toString)
+    val out = Layout.clusterByZ(readSnapshot(spark, zone, head), cols, bits, wantFiles)
+    out.write.mode(SaveMode.ErrorIfExists).format(head.format).save(dataDir.toString)
     val newInfo = listRelInfo(f, root, dataDir)
     val newFiles = newInfo.map(_._1)
     val statsCols = (effectiveStatsCols(Nil, head.meta) ++ cols).distinct
     val (newStats, newColStats) = collectFileStats(spark, root, dataDir,
-      head.format, head.meta.get("stats.col").filter(_.nonEmpty), statsCols)
+      newInfo, Some(out.schema), head.format, head.meta.get("stats.col").filter(_.nonEmpty), statsCols)
     // mapping resets with the rewrite, like compact
     val meta = (head.meta -- ColMapMetaKeys) ++
       (if (statsCols.nonEmpty) Map("stats.cols" -> statsCols.mkString(",")) else Map.empty)

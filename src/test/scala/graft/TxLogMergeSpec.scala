@@ -219,6 +219,57 @@ class TxLogMergeSpec extends SparkSpec {
     }
   }
 
+  test("a batch whose keys are ALL null fails loudly instead of dropping its rows") {
+    val zone = bandedZone()
+    val genBefore = TxLog.latest(spark, zone).get.gen
+    val allNull = Seq((None: Option[Long], "a"), (None: Option[Long], "b"))
+      .toDF("id", "payload")
+    val e = intercept[IllegalArgumentException] {
+      TxLog.mergeExactlyOnce(spark, zone, allNull, "id", batchId = 7L)
+    }
+    assert(e.getMessage.contains("'id'") && e.getMessage.contains("null in 2 of 2"),
+      e.getMessage)
+    val head = TxLog.latest(spark, zone).get
+    assert(head.gen === genBefore && !head.meta.contains("batchId"),
+      "a refused batch must not be reported as merged")
+    assert(rows(zone).size === 400)
+  }
+
+  test("a batch with SOME null keys names the null count, not a uniqueness failure") {
+    val zone = bandedZone()
+    val someNull = Seq((Some(10L), "u10"), (None: Option[Long], "x"), (Some(1000L), "n"))
+      .toDF("id", "payload")
+    val e = intercept[IllegalArgumentException] {
+      TxLog.merge(spark, zone, someNull, "id")
+    }
+    assert(e.getMessage.contains("'id'") && e.getMessage.contains("null in 1 of 3"),
+      e.getMessage)
+    assert(!e.getMessage.contains("unique"), e.getMessage)
+    val changes = Seq((Some(10L), "u10", "U"), (None: Option[Long], "x", "D"))
+      .toDF("id", "payload", "op")
+    intercept[IllegalArgumentException] {
+      TxLog.changesExactlyOnce(spark, zone, changes, "id", "op", batchId = 1L)
+    }
+    assert(rows(zone)(10L) === "v10")
+  }
+
+  test("updated/inserted counts stay exact over a zone holding duplicate keys") {
+    val zone = freshZone()
+    TxLog.replace(spark, zone,
+      Seq((1L, "a"), (1L, "a2"), (2L, "b"), (3L, "c")).toDF("id", "payload"),
+      statsCols = Seq("id"))
+    val st = TxLog.merge(spark, zone,
+      Seq((1L, "u1"), (3L, "u3"), (9L, "n9")).toDF("id", "payload"), "id")
+    assert(st.updatedRows === 2L && st.insertedRows === 1L, st)
+    assert(TxLog.read(spark, zone).count() === 4L, "both key-1 rows collapse to the update")
+    assert(rows(zone) === Map(1L -> "u1", 2L -> "b", 3L -> "u3", 9L -> "n9"))
+    val ch = TxLog.changesExactlyOnce(spark, zone,
+      Seq((2L, "x", "D"), (3L, "u3b", "U"), (10L, "n10", "U")).toDF("id", "payload", "op"),
+      "id", "op", batchId = 1L)
+    assert(ch)
+    assert(rows(zone) === Map(1L -> "u1", 3L -> "u3b", 9L -> "n9", 10L -> "n10"))
+  }
+
   test("empty updates frame is a no-op merge") {
     val zone = bandedZone()
     val genBefore = TxLog.latest(spark, zone).get.gen

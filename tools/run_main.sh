@@ -4,7 +4,9 @@
 #   tools/run_main.sh graft.Probe streamlake /tmp/sf3 attrib
 # Env: SPARK_DRIVER_MEM (default 8g), SPARK_GRAFT_CPUS pass-through.
 set -euo pipefail
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+# classes of the checkout this script lives in (build them with `sbt compile`)
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
