@@ -586,20 +586,6 @@ object Pipeline {
       splits: Seq[(String, Double)] = Seq("train" -> 0.9, "valid" -> 0.05, "test" -> 0.05),
       semantic: Option[StreamingSemanticSpec] = None,
       triggerSeconds: Long = 60L,
-      // STATE-PARTITION COUNT for both hops (None = the session's
-      // spark.sql.shuffle.partitions). A streaming query's stateful
-      // operators materialize ONE state-store instance (a live RocksDB
-      // database: open + writes + per-batch checkpoint upload + close)
-      // per (operator, shuffle partition) per micro-batch, and the count
-      // is PINNED by the first batch's offset metadata — so the right
-      // number tracks the stream's PER-TRIGGER volume, never the box's
-      // core count. Hop 1 alone runs two stateful operators: at 32
-      // session partitions that is 64 RocksDB instances per trigger
-      // doing pure spin-up when triggers carry megabytes, while a
-      // 100 TB/day deployment wants hundreds. Size it like a shuffle
-      // partition (guide §2.2: 100 MB-1 GB of keyed state per
-      // partition); the drain benchmarks derive it from input bytes.
-      statePartitions: Option[Int] = None,
       // KEYED-CDC mode (round-15 directive #4): when set, the doc stream
       // carries this op column with the reference's eventName vocabulary
       // (INSERT/MODIFY upsert the key's document, REMOVE retracts it; a
@@ -628,8 +614,6 @@ object Pipeline {
       containment.foreach(t =>
         require(t > 0.0 && t <= 1.0, s"containment in (0,1], got $t"))
       require(containmentDfCap >= 2, s"containmentDfCap must be >= 2, got $containmentDfCap")
-      statePartitions.foreach(n =>
-        require(n >= 1, s"statePartitions must be >= 1, got $n"))
       opCol.foreach(c => require(c.nonEmpty, "opCol must be non-empty when set"))
       semantic.foreach(_.validate())
     }
@@ -696,27 +680,6 @@ object Pipeline {
         spark.conf.set(key, rocks)
       }
     }
-
-    /** Run `body` (which must START the streaming queries) with the
-      * spec's state-partition override scoped to those queries:
-      * Structured Streaming clones the session when a query starts, so
-      * the override is captured by the query's own session — and pinned
-      * thereafter by the checkpoint's offset metadata, as every stateful
-      * query's partition count is — while the caller's session conf is
-      * restored on exit. No override, no conf churn. */
-    private def withScopedShufflePartitions[A](body: => A): A =
-      spec.statePartitions match {
-        case None => body
-        case Some(n) =>
-          val key = "spark.sql.shuffle.partitions"
-          val prev = spark.conf.getOption(key)
-          spark.conf.set(key, n.toString)
-          try body
-          finally prev match {
-            case Some(v) => spark.conf.set(key, v)
-            case None => spark.conf.unset(key)
-          }
-      }
 
     /** The quality-gate failure predicate (null quality fails). */
     private def gateFail: Column =
@@ -971,22 +934,18 @@ object Pipeline {
       ensureStateStore()
       primeDedupedZone(docs.schema)
       val t0 = System.nanoTime()
-      val q1 = withScopedShufflePartitions {
-        textualStream(docs).writeStream
-          .option("checkpointLocation", ckpt("textual"))
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .foreachBatch(textualSink).start()
-      }
+      val q1 = textualStream(docs).writeStream
+        .option("checkpointLocation", ckpt("textual"))
+        .outputMode("append").trigger(Trigger.AvailableNow())
+        .foreachBatch(textualSink).start()
       q1.awaitTermination()
       val hop1 = (System.nanoTime() - t0) / 1e9
       val hop2 = spec.semantic.map { sem =>
         val t1 = System.nanoTime()
-        val q2 = withScopedShufflePartitions {
-          semanticStream(sem).writeStream
-            .option("checkpointLocation", ckpt("semantic"))
-            .outputMode("append").trigger(Trigger.AvailableNow())
-            .foreachBatch(semanticSink).start()
-        }
+        val q2 = semanticStream(sem).writeStream
+          .option("checkpointLocation", ckpt("semantic"))
+          .outputMode("append").trigger(Trigger.AvailableNow())
+          .foreachBatch(semanticSink).start()
         q2.awaitTermination()
         (System.nanoTime() - t1) / 1e9
       }
@@ -1003,19 +962,17 @@ object Pipeline {
       ensureStateStore()
       primeDedupedZone(docs.schema)
       val t = Trigger.ProcessingTime(s"${spec.triggerSeconds} seconds")
-      withScopedShufflePartitions {
-        val q1 = textualStream(docs).writeStream
-          .option("checkpointLocation", ckpt("textual"))
+      val q1 = textualStream(docs).writeStream
+        .option("checkpointLocation", ckpt("textual"))
+        .outputMode("append").trigger(t)
+        .foreachBatch(textualSink).start()
+      val q2 = spec.semantic.map { sem =>
+        semanticStream(sem).writeStream
+          .option("checkpointLocation", ckpt("semantic"))
           .outputMode("append").trigger(t)
-          .foreachBatch(textualSink).start()
-        val q2 = spec.semantic.map { sem =>
-          semanticStream(sem).writeStream
-            .option("checkpointLocation", ckpt("semantic"))
-            .outputMode("append").trigger(t)
-            .foreachBatch(semanticSink).start()
-        }
-        Seq(q1) ++ q2
+          .foreachBatch(semanticSink).start()
       }
+      Seq(q1) ++ q2
     }
 
     /** The corpus read model: the final zone with the deterministic

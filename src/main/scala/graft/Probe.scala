@@ -15,6 +15,11 @@ package graft
   *    Writes each named query's `explain("formatted")` physical plan to
   *    `<outDir>/<name>.txt` — the before/after plan evidence the
   *    optimization rounds commit under `plans/`.
+  *  - `runMain graft.Probe lakeplan <sfDir> [sem]`,
+  *    `streamlake <sfDir> [attrib]`, `streambench <sfDir> [changelog]`
+  *    Time the batch training lake, the streaming lake against it, and
+  *    the streaming-lake drain at bench scale (each described at its
+  *    case below).
   */
 object Probe {
   def main(args: Array[String]): Unit = args.toList match {
@@ -61,211 +66,6 @@ object Probe {
         val w = new java.io.PrintWriter(s"$outDir/$name.txt", "UTF-8")
         try w.println(txt) finally w.close()
         println(s"[explain] $name -> $outDir/$name.txt (${txt.length} chars)")
-      }
-      spark.stop()
-
-    // The SHARED pair-stats relation's scale contract (round-11
-    // directive #2, round-12 directive #1 — the q36/q147/q173/q194/q223
-    // kernel, now SELF-TUNING): per corpus size, report docs, distinct
-    // shingles, the corpus-derived cap the adaptive solve picked, the
-    // shingles it drops, max df, the candidate-pair cardinality
-    // Σ [df ≤ cap]·C(df, 2) the equi-join materializes under that cap,
-    // the post-agg pair count, and the quiet build seconds. Run at
-    // sf0.1 / sf1 / sf3 to measure the growth curve (SURVEY §9).
-    case "pairstats" :: sfDir :: Nil =>
-      import org.apache.spark.sql.functions._
-      val spark = GraftSession.get()
-      spark.sparkContext.setLogLevel("WARN")
-      val docs = sources.Tables.documents(spark, sfDir)
-      val nDocs = docs.count()
-      val cap = graft.operators.Dedup
-        .adaptiveShingleDfCap(docs, "doc_id", "text", n = 3)
-      val stats = graft.operators.Dedup
-        .shingleIndex(docs, "doc_id", "text", n = 3, maxShingleDf = 0L)
-        .groupBy("shingle").agg(count(lit(1)).as("df"))
-        .agg(count(lit(1)).as("shingles"),
-          sum(when(col("df") > cap, 1L).otherwise(0L)).as("cappedOut"),
-          max(col("df")).as("maxDf"),
-          sum(when(col("df") <= cap, expr("df * (df - 1) div 2"))
-            .otherwise(0L)).as("candidates"))
-        .collect().head
-      val t0 = System.nanoTime()
-      val pairs = graft.operators.Dedup
-        .pairStats(docs, "doc_id", "text", n = 3, maxShingleDf = cap)
-        .count()
-      val secs = (System.nanoTime() - t0) / 1e9
-      println(f"pairstats dir=$sfDir docs=$nDocs cap=$cap " +
-        f"shingles=${stats.getLong(0)} cappedOut=${stats.getLong(1)} " +
-        f"maxDf=${stats.getLong(2)} candidates=${stats.getLong(3)} " +
-        f"pairs=$pairs quietSecs=$secs%.2f")
-      spark.stop()
-
-    // The IVF cell partition's scale shape at a given sf: N, adaptive k,
-    // the cell-size distribution, and the candidate-pair cardinality
-    // sum C(|cell|,2) the q170/q184 cell join materializes — the number
-    // that decides whether the adaptive-k knob is winning (round-11
-    // directive #1's diagnostic: nominal pair work is N^2/2k, but CELL
-    // SKEW can put most of the mass in few cells).
-    case "ivfstats" :: sfDir :: Nil =>
-      import org.apache.spark.sql.functions._
-      val spark = GraftSession.get()
-      spark.sparkContext.setLogLevel("WARN")
-      val emb = sources.Tables.embeddings(spark, sfDir)
-      val n = emb.count()
-      val cents = ExtendedQueries.trainedCentroids(spark, sfDir)
-      val sizes = graft.operators.Similarity
-        .assignToCentroidsLocal(emb, cents)
-        .groupBy("cent_id").count()
-        .orderBy(col("count").desc)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val cand = sizes.map { case (_, c) => c * (c - 1) / 2 }.sum
-      // candidates AFTER the mega-cell hyperplane sub-split (the shape
-      // the q170/q184 join actually pays)
-      val blockSizes = graft.operators.Similarity
-        .ivfCellBlocks(emb, cents)
-        .groupBy("_cell", "_blk").count()
-        .select(col("count")).as[Long](org.apache.spark.sql.Encoders.scalaLong)
-        .collect()
-      val blockedCand = blockSizes.map(c => c * (c - 1) / 2).sum
-      val outRows = graft.operators.Similarity
-        .ivfCellNearDupPairs(emb, 0.45, cents).count()
-      println(s"ivfstats outRows(>=0.45)=$outRows")
-      println(s"ivfstats dir=$sfDir n=$n k=${cents.size} " +
-        s"cells=${sizes.length} maxCell=${sizes.head._2} " +
-        s"top5=${sizes.take(5).map(_._2).mkString(",")} " +
-        s"candidates=$cand blockedCandidates=$blockedCand " +
-        s"maxBlock=${blockSizes.max} nominalN2over2k=${n * n / (2L * cents.size)}")
-      spark.stop()
-
-    // The banded embedding near-dup tier's precision contract (round-12
-    // directive #3, the q143 shape; q43 is the brute all-pairs baseline):
-    // candidate pairs the band join materializes (first-agreeing-band
-    // dedup, pre-threshold) vs pairs >= 0.45 (the output) vs — with the
-    // `exact` flag — the true all-pairs count, plus the quiet output
-    // build seconds. precision = output/candidates decides verify-bound
-    // (tune bands) vs output-bound (cost = result cardinality, close the
-    // question); recall = output/true (with `exact`). One aggregation
-    // pass counts both, so the candidate relation never materializes.
-    case "bandstats" :: sfDir :: rest =>
-      import org.apache.spark.sql.functions._
-      val spark = GraftSession.get()
-      spark.sparkContext.setLogLevel("WARN")
-      val emb = sources.Tables.embeddings(spark, sfDir)
-      val n = emb.count()
-      val w = graft.operators.Similarity.adaptiveBandBits(n)
-      val counts = graft.operators.Similarity
-        .lshBandedScoredPairs(emb, dim = 64, nBits = 4 * w, bands = 4)
-        .agg(count(lit(1)).as("cands"),
-          sum(when(col("sim") >= 0.45, 1L).otherwise(0L)).as("out"))
-        .collect().head
-      val (cands, out) = (counts.getLong(0), counts.getLong(1))
-      val t0 = System.nanoTime()
-      val outRows = graft.operators.Similarity
-        .lshBandedNearDupPairs(emb, threshold = 0.45, dim = 64,
-          nBits = 4 * w, bands = 4).count()
-      val secs = (System.nanoTime() - t0) / 1e9
-      val truePairs =
-        if (rest.contains("exact"))
-          graft.operators.Similarity.cosineNearDupPairs(emb, 0.45).count()
-        else -1L
-      println(f"bandstats dir=$sfDir n=$n bandBits=$w candidates=$cands " +
-        f"out=$out outRows=$outRows truePairs=$truePairs " +
-        f"precision=${if (cands == 0) 0.0 else out.toDouble / cands}%.4f " +
-        f"quietSecs=$secs%.2f")
-      // the MULTI-PROBE tier's same contract (round-13 directive #4: the
-      // sf3 point that proves witness-key cost ≈ output cardinality at
-      // 3× data): Hamming-ball-1 candidates vs output, plus quiet secs
-      if (rest.contains("mp")) {
-        val mpCounts = graft.operators.Similarity
-          .lshBandedMultiProbeScoredPairs(emb, dim = 64, nBits = 4 * w, bands = 4)
-          .agg(count(lit(1)).as("cands"),
-            sum(when(col("sim") >= 0.45, 1L).otherwise(0L)).as("out"))
-          .collect().head
-        val (mpCands, mpOut) = (mpCounts.getLong(0), mpCounts.getLong(1))
-        val t1 = System.nanoTime()
-        val mpRows = graft.operators.Similarity
-          .lshBandedNearDupPairsMultiProbe(emb, threshold = 0.45, dim = 64,
-            nBits = 4 * w, bands = 4).count()
-        val mpSecs = (System.nanoTime() - t1) / 1e9
-        println(f"bandstats-mp dir=$sfDir n=$n bandBits=$w candidates=$mpCands " +
-          f"out=$mpOut outRows=$mpRows " +
-          f"precision=${if (mpCands == 0) 0.0 else mpOut.toDouble / mpCands}%.4f " +
-          f"quietSecs=$mpSecs%.2f")
-      }
-      spark.stop()
-
-    // The banded tier's recall on a STRUCTURED corpus (round-13
-    // directive #4): plant perturbed copies of 200 corpus vectors at
-    // controlled target cosines (v' = cosθ·v̂ + sinθ·û for a
-    // deterministic orthogonal û — exact planted-pair cosine ≈ θ), then
-    // measure, at the q143 operating point (threshold 0.45, adaptive
-    // width, 4 bands), what fraction of planted pairs the base banded
-    // tier and the multi-probe variant each recover, with their output
-    // cardinalities and quiet seconds. recall-vs-target-cosine is the
-    // curve SURVEY §9 records; sub-~0.9 recall at the operating point is
-    // what the multi-probe variant exists to fix.
-    case "plantstats" :: sfDir :: Nil =>
-      import org.apache.spark.sql.functions._
-      val spark = GraftSession.get()
-      spark.sparkContext.setLogLevel("WARN")
-      import spark.implicits._
-      val emb = sources.Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding"))
-      val n = emb.count()
-      val w = graft.operators.Similarity.adaptiveBandBits(n)
-      val seeds = emb.filter(col("vec_id") < 200)
-        .as[(Long, Array[Float])].collect()
-      // planted ids must collide with NOTHING: a fixed offset aliased
-      // ScaleUp's replica key shifts at sf1 (replica r = id + r·10⁷), so
-      // planted copies duplicated real ids and "recall" counted replica
-      // pairs — derive the offset from the corpus itself
-      val offset = emb.agg(max(col("vec_id"))).head().getLong(0) + 1000000L
-      Seq(0.95, 0.9, 0.8, 0.7, 0.6, 0.5).foreach { t =>
-        val theta = math.acos(t)
-        val planted = seeds.flatMap { case (id, v) =>
-          val vd = v.map(_.toDouble)
-          val nv = math.sqrt(vd.map(x => x * x).sum)
-          if (nv == 0.0) None
-          else {
-            val vh = vd.map(_ / nv)
-            // deterministic companion direction: rotate-by-one with
-            // alternating sign, Gram-Schmidt'd against v̂
-            val u0 = Array.tabulate(vd.length)(i =>
-              vh((i + 1) % vd.length) * (if (i % 2 == 0) 1.0 else -1.0))
-            val proj = u0.zip(vh).map { case (a, b) => a * b }.sum
-            val ur = u0.zip(vh).map { case (a, b) => a - proj * b }
-            val un = math.sqrt(ur.map(x => x * x).sum)
-            if (un < 1e-9) None
-            else Some((id + offset, Array.tabulate(vd.length)(i =>
-              ((math.cos(theta) * vh(i) + math.sin(theta) * ur(i) / un) * nv).toFloat)))
-          }
-        }
-        val corpus = emb.unionByName(
-          planted.toSeq.toDF("vec_id", "embedding")
-            .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding")))
-          .localCheckpoint(true)
-        def drive(f: => org.apache.spark.sql.DataFrame): (Long, Long, Double) = {
-          val t0 = System.nanoTime()
-          val pairs = f.localCheckpoint(true)
-          val total = pairs.count()
-          val secs = (System.nanoTime() - t0) / 1e9
-          val rec = pairs.filter(col("b_id") === col("a_id") + offset &&
-            col("b_id") >= offset).count()
-          graft.operators.Lineage.free(pairs)
-          (rec, total, secs)
-        }
-        val (baseRec, baseTot, baseSecs) = drive(
-          graft.operators.Similarity.lshBandedNearDupPairs(
-            corpus, 0.45, dim = 64, nBits = 4 * w, bands = 4))
-        val (mpRec, mpTot, mpSecs) = drive(
-          graft.operators.Similarity.lshBandedNearDupPairsMultiProbe(
-            corpus, 0.45, dim = 64, nBits = 4 * w, bands = 4))
-        graft.operators.Lineage.free(corpus)
-        println(f"plantstats dir=$sfDir n=$n planted=${planted.length} " +
-          f"target=$t%.2f baseRecall=${baseRec.toDouble / planted.length}%.3f " +
-          f"mpRecall=${mpRec.toDouble / planted.length}%.3f " +
-          f"basePairs=$baseTot mpPairs=$mpTot " +
-          f"baseSecs=$baseSecs%.1f mpSecs=$mpSecs%.1f")
       }
       spark.stop()
 
@@ -498,38 +298,15 @@ object Probe {
       }
       spark.stop()
 
-    // q187's scale contract (round-8 directive #6): the df-capped
-    // candidate relation's cardinality at a given sf, beside the corpus
-    // size — run at sf0.1 and sf1 to measure candidate growth vs data
-    // growth (recorded in SURVEY §9).
-    case "spanstats" :: sfDir :: Nil =>
-      val spark = GraftSession.get()
-      spark.sparkContext.setLogLevel("WARN")
-      val toks = TrainingQueries.cachedDocToks(spark, sfDir)
-      val docs = toks.count()
-      // one materialized candidate frame feeds BOTH counts (the gram
-      // build + df-filter + self-join dominates; don't pay it twice)
-      val candFrame = graft.operators.Dedup
-        .sharedSpanCandidates(toks, n = 8, maxGramDf = 64L)
-        .localCheckpoint(true)
-      val cands = candFrame.count()
-      val spans = graft.operators.Dedup
-        .spansFromCandidates(candFrame, n = 8, minSpan = 12).count()
-      graft.operators.Lineage.free(candFrame)
-      println(s"spanstats dir=$sfDir docs=$docs candidates=$cands spans=$spans")
-      spark.stop()
-
     // Isolated A/B for the composed streaming-lake DRAIN (round-17: the
     // bench's largest tracked entry is per-batch RocksDB spin-up, not
-    // query shape): replicates Bench.streamlakeEntry's setup with a
-    // configurable state-partition count and optional RocksDB changelog
-    // checkpointing, reporting per-hop seconds, micro-batch and
-    // state-partition counts, and the idle re-drain.
-    //   runMain graft.Probe streambench <sfDir> [statePartitions] [changelog]
+    // query shape): replicates Bench.streamlakeEntry's setup with
+    // optional RocksDB changelog checkpointing, reporting per-hop
+    // seconds, micro-batch and state-partition counts, and the idle
+    // re-drain.
+    //   runMain graft.Probe streambench <sfDir> [changelog]
     case "streambench" :: sfDir :: rest =>
       import org.apache.spark.sql.functions._
-      val parts = rest.headOption.flatMap(s => scala.util.Try(s.toInt).toOption)
-        .filter(_ > 0)
       val changelog = rest.contains("changelog")
       val spark = GraftSession.get()
       spark.sparkContext.setLogLevel("WARN")
@@ -572,7 +349,6 @@ object Probe {
       val plan = Pipeline.plan(spark, Pipeline.StreamingLakeSpec(
         lakeDir = s"$base/lake", checkpointDir = s"$base/ckpt",
         minQuality = 0.05,
-        statePartitions = parts,
         semantic = Some(Pipeline.StreamingSemanticSpec(
           embZone = Some(embZone), threshold = 0.95, indexDir = Some(idxDir)))))
       def stream() = spark.readStream
@@ -587,7 +363,7 @@ object Probe {
         Option(new java.io.File(p).listFiles())
           .map(_.count(f => !f.getName.startsWith(".") && !f.getName.startsWith("_") &&
             (!dirsOnly || f.isDirectory))).getOrElse(-1)
-      println(f"streambench parts=${parts.getOrElse(-1)}%d changelog=$changelog " +
+      println(s"streambench changelog=$changelog " +
         hops.map { case (n, s) => f"$n=$s%.2f" }.mkString(" ") +
         f" full=${hops.map(_._2).sum}%.2f idle=$idle%.2f survivors=$survivors%d " +
         s"batches_textual=${countDir(s"$base/ckpt/textual/commits", dirsOnly = false)} " +
@@ -599,11 +375,10 @@ object Probe {
       System.err.println(
         s"""usage: graft.Probe entry
            |       graft.Probe time <sfDir> <q1,q2,...> [reps]
-           |       graft.Probe spanstats <sfDir>
-           |       graft.Probe pairstats <sfDir>
-           |       graft.Probe bandstats <sfDir> [exact]
-           |       graft.Probe plantstats <sfDir>
-           |       graft.Probe lakeplan <sfDir>
+           |       graft.Probe explain <sfDir> <q1,q2,...> <outDir>
+           |       graft.Probe lakeplan <sfDir> [sem]
+           |       graft.Probe streamlake <sfDir> [attrib]
+           |       graft.Probe streambench <sfDir> [changelog]
            |got: ${other.mkString(" ")}""".stripMargin)
       sys.exit(2)
   }

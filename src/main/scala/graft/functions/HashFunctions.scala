@@ -35,9 +35,4 @@ object HashFunctions {
     * fold h = (h*31 + x) mod FP_MOD, left-to-right from 0. */
   def rollingFingerprint(hashes: Column): Column =
     aggregate(hashes, lit(0L), (acc, x) => (acc * 31L + x) % FP_MOD)
-
-  /** Bit b (0-based from LSB) of a non-negative long below 2^32, written as
-    * floor-div so the oracle can use the identical arithmetic form. */
-  def bitAt(h: Column, b: Column): Column =
-    (floor(h / pow(lit(2.0), b)).cast("long") % 2L)
 }

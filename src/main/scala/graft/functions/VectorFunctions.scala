@@ -48,8 +48,4 @@ object VectorFunctions {
     val denom = normA * normB
     when(denom === 0.0, lit(0.0)).otherwise(dot(a, b) / denom)
   }
-
-  /** Euclidean (L2) distance. */
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(arraySum(zip_with(a, b, (x, y) => (x.cast(D) - y.cast(D)) * (x.cast(D) - y.cast(D)))))
 }

@@ -61,10 +61,6 @@ object Cdc {
       .select(col("r.eventName").as("eventName"), col("r.dynamodb").as("dynamodb"),
         col("r._corrupt_record").as("_corrupt_record"))
 
-  /** Read a directory/glob of (optionally gzipped) JSON-lines CDC files. */
-  def readJson(spark: SparkSession, path: String): DataFrame =
-    parse(spark.read.text(path), "value")
-
   /** A7: pick the image for the event type. Unknown events yield a null
     * image (callers route them via [[split]]). */
   def imageFor(eventName: Column, newImage: Column, oldImage: Column): Column =

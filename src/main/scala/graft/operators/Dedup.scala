@@ -712,8 +712,8 @@ object Dedup {
 
   /** The df-capped candidate relation [[sharedSpanPairs]] chains runs
     * over — one (a_id, b_id, pa, diag) row per matched gram-position
-    * pair. Exposed so the scale probe (`Probe spanstats`) can measure
-    * the candidate count directly against its contract: each kept gram
+    * pair. Split out so the candidate count can be measured directly
+    * against its contract: each kept gram
     * occurrence set O_g (df ∈ [2, maxGramDf] docs) contributes at most
     * C(|O_g|, 2) rows, so candidates grow with Σ_g |O_g|² — LINEAR in
     * corpus size while per-gram density is bounded by the df cap, and

@@ -58,22 +58,6 @@ object TextCat {
       .select("lang", "gram", "rl")
   }
 
-  /** Per-document rank profiles, same total order as [[langProfiles]]:
-    * (`doc_id`, `gram`, `rd`). Documents with no trigrams (< 3 chars)
-    * are absent. */
-  def docProfiles(docs: DataFrame, idCol: String, textCol: String,
-                  k: Int): DataFrame = {
-    require(k > 0, s"profile size must be positive, got $k")
-    val g = docs
-      .select(col(idCol).as("doc_id"),
-        explode(charTrigrams(col(textCol))).as("gram"))
-    val counts = g.groupBy("doc_id", "gram").agg(count(lit(1)).as("c"))
-    val w = Window.partitionBy("doc_id").orderBy(col("c").desc, col("gram"))
-    counts.withColumn("rd", row_number().over(w))
-      .filter(col("rd") <= k)
-      .select("doc_id", "gram", "rd")
-  }
-
   /** Classify every document against the model trained on the same
     * frame's `langCol` labels: out-of-place distance
     * dist(d, L) = Σ_{g ∈ profile(d)} |r_d(g) − r_L(g)|, with the

@@ -66,7 +66,6 @@ object TxLog {
 
   final case class Snapshot(gen: Long, format: String, files: Seq[String],
                             meta: Map[String, String] = Map.empty,
-                            stats: Map[String, (Double, Double)] = Map.empty,
                             colStats: Map[String, Map[String, ColStat]] = Map.empty,
                             /** generation this one was rebased on (gen-1
                               * unless skip-forward claimed past a torn
@@ -251,7 +250,6 @@ object TxLog {
       gen: Long, base: Long, format: String,
       adds: Vector[String], removes: Vector[String],
       meta: Map[String, String],
-      stats: Map[String, (Double, Double)],
       colStats: Map[String, Map[String, ColStat]],
       sizes: Map[String, (Long, Long)] = Map.empty) extends Commit {
     def baseGen: Long = base
@@ -317,21 +315,20 @@ object TxLog {
       }.toMap
       val gen = kv("gen").toLong
       if (!pathGen(p).contains(gen)) return None
+      // the stats.col key named the single-column stats of older writers
+      // (the "s " lines below): retired, so read and dropped
       val meta = body.filter(_.startsWith("m ")).map { l =>
         val i = l.indexOf('=', 2); (l.substring(2, i), l.substring(i + 1))
-      }.toMap
+      }.toMap - "stats.col"
       // per-file line families — shared by the inline body and any
       // multi-part checkpoint shards spliced in below:
-      // "s <relpath>=<min>,<max>"                         legacy doubles
       // "t <relpath>|<col>=<kind>,<rows>,<nulls>,<mn>,<mx>"  typed stats
       // "b <relpath>=<bytes>,<mtimeMillis>"         sizes (optional, new)
       // "f <relpath>"                                             files
+      // "s <relpath>=<min>,<max>" — single-column doubles that older
+      // writers emitted; still part of v1, so accepted, but no longer
+      // written and ignored on read (such files are simply unpruned)
       def parsePerFile(b: Vector[String]) = {
-        val st = b.filter(_.startsWith("s ")).map { l =>
-          val i = l.lastIndexOf('=')
-          val Array(mn, mx) = l.substring(i + 1).split(",", 2)
-          (l.substring(2, i), (mn.toDouble, mx.toDouble))
-        }.toMap
         val cst = b.filter(_.startsWith("t ")).map { l =>
           val eq = l.indexOf('=', 2)
           val key = l.substring(2, eq)
@@ -347,7 +344,7 @@ object TxLog {
           val Array(len, mt) = l.substring(i + 1).split(",", 2)
           (l.substring(2, i), (len.toLong, mt.toLong))
         }.toMap
-        (st, cst, sz, b.filter(_.startsWith("f ")).map(_.substring(2)))
+        (cst, sz, b.filter(_.startsWith("f ")).map(_.substring(2)))
       }
       // multi-part checkpoint: splice every shard's per-file lines in
       // BEFORE the completeness count check — a torn/missing shard makes
@@ -393,7 +390,7 @@ object TxLog {
           }
         case None => Vector.empty
       }
-      val (stats, colStats, sizes, files) = parsePerFile(body ++ partBody)
+      val (colStats, sizes, files) = parsePerFile(body ++ partBody)
       val base = kv.get("base").map(_.toLong).getOrElse(-1L)
       if (kv.get("kind").contains("delta")) {
         val removes = body.filter(_.startsWith("r ")).map(_.substring(2))
@@ -403,11 +400,11 @@ object TxLog {
             kv.get("rmcount").map(_.toLong).contains(removes.size.toLong) &&
             base >= 0L)
           Some(DeltaCommit(gen, base, kv("format"), files.toVector,
-            removes.toVector, meta, stats, colStats, sizes))
+            removes.toVector, meta, colStats, sizes))
         else None
       } else {
         if (kv.get("count").map(_.toLong).contains(files.size.toLong))
-          Some(FullCommit(Snapshot(gen, kv("format"), files, meta, stats,
+          Some(FullCommit(Snapshot(gen, kv("format"), files, meta,
             colStats, base = base, sizes = sizes)))
         else None
       }
@@ -426,7 +423,7 @@ object TxLog {
     val rm = d.removes.toSet
     Snapshot(d.gen, d.format,
       (s.files.filterNot(rm) ++ d.adds).distinct.sorted, d.meta,
-      (s.stats -- rm) ++ d.stats, (s.colStats -- rm) ++ d.colStats,
+      (s.colStats -- rm) ++ d.colStats,
       base = d.base, sizes = (s.sizes -- rm) ++ d.sizes)
   }
 
@@ -473,13 +470,13 @@ object TxLog {
     * correctness. */
   private def writeCheckpoint(f: FileSystem, zone: String, s: Snapshot): Unit =
     try {
-      val pf = perFileLines(s.files, s.stats, s.colStats, s.sizes)
+      val pf = perFileLines(s.files, s.colStats, s.sizes)
       val shard = checkpointShardLines
       if (pf.size <= shard) {
         tryCreate(f, chkPath(zone, s.gen)).foreach { out =>
           try out.write(manifestBody(delta = false, gen = s.gen,
             base = s.baseGen, format = s.format, files = s.files,
-            removes = Nil, meta = s.meta, stats = s.stats,
+            removes = Nil, meta = s.meta,
             colStats = s.colStats, sizes = s.sizes).getBytes("UTF-8"))
           finally out.close()
         }
@@ -586,7 +583,6 @@ object TxLog {
   private def manifestBody(delta: Boolean, gen: Long, base: Long,
                            format: String, files: Seq[String],
                            removes: Seq[String], meta: Map[String, String],
-                           stats: Map[String, (Double, Double)],
                            colStats: Map[String, Map[String, ColStat]],
                            sizes: Map[String, (Long, Long)] = Map.empty): String = {
     val body = new StringBuilder(Header).append('\n')
@@ -602,22 +598,19 @@ object TxLog {
       body.append("count=").append(files.size).append('\n')
     meta.toSeq.sortBy(_._1).foreach { case (k, v) =>
       body.append("m ").append(k).append('=').append(v).append('\n') }
-    perFileLines(files, stats, colStats, sizes)
+    perFileLines(files, colStats, sizes)
       .foreach(l => body.append(l).append('\n'))
     removes.sorted.foreach(fl => body.append("r ").append(fl).append('\n'))
     body.append("end\n")
     body.toString
   }
 
-  /** The per-file line families (s/t/b/f), rendered in the canonical
+  /** The per-file line families (t/b/f), rendered in the canonical
     * order — the unit multi-part checkpoints shard on. */
   private[graft] def perFileLines(files: Seq[String],
-                           stats: Map[String, (Double, Double)],
                            colStats: Map[String, Map[String, ColStat]],
                            sizes: Map[String, (Long, Long)]): Vector[String] = {
     val out = Vector.newBuilder[String]
-    stats.toSeq.sortBy(_._1).foreach { case (k, (mn, mx)) =>
-      out += s"s $k=$mn,$mx" }
     colStats.toSeq.sortBy(_._1).foreach { case (file, perCol) =>
       perCol.toSeq.sortBy(_._1).foreach { case (c, st) =>
         out += s"t $file|$c=${st.kind},${st.rows},${st.nulls}," +
@@ -676,7 +669,6 @@ object TxLog {
   private def publish(spark: SparkSession, zone: String, gen: Long,
                       format: String, files: Seq[String],
                       meta: Map[String, String] = Map.empty,
-                      stats: Map[String, (Double, Double)] = Map.empty,
                       colStats: Map[String, Map[String, ColStat]] = Map.empty,
                       base: Option[Snapshot] = None,
                       sizes: Map[String, (Long, Long)] = Map.empty): Option[Long] = {
@@ -744,16 +736,15 @@ object TxLog {
           val removes = b.files.filterNot(nextSet)
           if (adds.size + removes.size >= files.size)
             manifestBody(delta = false, g, baseGen, format, files, Nil,
-              meta, stats, colStats, sizes)
+              meta, colStats, sizes)
           else
             manifestBody(delta = true, g, baseGen, format, adds, removes,
               meta,
-              stats.filter { case (k, _) => !baseSet(k) || !b.stats.get(k).contains(stats(k)) },
               colStats.filter { case (k, _) => !baseSet(k) || !b.colStats.get(k).contains(colStats(k)) },
               sizes.filter { case (k, _) => !baseSet(k) || !b.sizes.get(k).contains(sizes(k)) })
         case None =>
           manifestBody(delta = false, g, baseGen, format, files, Nil,
-            meta, stats, colStats, sizes)
+            meta, colStats, sizes)
       }
       out.write(body.getBytes("UTF-8"))
     } finally out.close()
@@ -781,7 +772,7 @@ object TxLog {
       // complete next state in memory, so this is one extra small write —
       // and best-effort: a crash here only lengthens chains.
       if (g > 0L && g % CheckpointInterval == 0L)
-        writeCheckpoint(f, zone, Snapshot(g, format, files, meta, stats,
+        writeCheckpoint(f, zone, Snapshot(g, format, files, meta,
           colStats, base = baseGen, sizes = sizes))
       Some(g)
     }
@@ -800,8 +791,6 @@ object TxLog {
   private def isForkRivalGen(gen: Long, base: Long, ourBase: Long): Boolean =
     gen > ourBase && base <= ourBase
 
-  /** Zone-relative data files currently under `dir` (one `d-<uuid>`
-    * write dir), skipping Spark's _SUCCESS/hidden files. */
   /** Recursive data-file listing under `dir`, zone-relative, WITH each
     * file's (bytes, mtimeMillis) — the committer already pays this
     * listing, so stamping sizes into the manifest is free here and saves
@@ -917,28 +906,24 @@ object TxLog {
     // matching every row of the touched files writes nothing — lazy
     // writers create no files, possibly not even the dir); reading the
     // empty/missing dir for stats would throw, so skip collection
-    val (newStats, newColStats) =
-      if (newFiles.isEmpty) (Map.empty[String, (Double, Double)],
-        Map.empty[String, Map[String, ColStat]])
+    val newColStats =
+      if (newFiles.isEmpty) Map.empty[String, Map[String, ColStat]]
       else collectFileStats(spark, root, dir, newInfo, physicalSchema(head),
-        head.format, head.meta.get("stats.col").filter(_.nonEmpty),
-        effectiveStatsCols(Nil, head.meta), colMap(head.meta))
+        head.format, effectiveStatsCols(Nil, head.meta), colMap(head.meta))
     val removedSet = removed.toSet
     val newSet = newFiles.toSet
     val nextFiles = (head.files.filterNot(removedSet) ++ newFiles).sorted
-    val nextStats = head.stats.filter { case (p, _) => !removedSet(p) } ++
-      newStats.filter { case (p, _) => newSet(p) }
     val nextColStats =
       head.colStats.filter { case (p, _) => !removedSet(p) } ++
         newColStats.filter { case (p, _) => newSet(p) }
     val nextSizes =
       head.sizes.filter { case (p, _) => !removedSet(p) } ++ newInfo.toMap
     publish(spark, zone, head.gen + 1, head.format, nextFiles,
-      head.meta ++ Map("op" -> op), nextStats, nextColStats,
+      head.meta ++ Map("op" -> op), nextColStats,
       base = Some(head), sizes = nextSizes) match {
       case Some(g) =>
         Snapshot(g, head.format, nextFiles, head.meta ++ Map("op" -> op),
-          nextStats, nextColStats, base = head.gen, sizes = nextSizes)
+          nextColStats, base = head.gen, sizes = nextSizes)
       case None =>
         // a rival landed between the check and the claim
         abortMoved(latest(spark, zone).map(_.gen).getOrElse(-1L))
@@ -959,20 +944,19 @@ object TxLog {
                  /** optional per-attempt stats transform (RENAME/DROP
                    * COLUMN re-key the logical-named stat entries in the
                    * same commit — still zero file actions) */
-                 statsFor: Snapshot => Option[(Map[String, (Double, Double)],
-                   Map[String, Map[String, ColStat]])] = _ => None): Snapshot = {
+                 statsFor: Snapshot => Option[Map[String, Map[String, ColStat]]] =
+                   _ => None): Snapshot = {
     require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
     var attempt = 0
     while (attempt < maxAttempts) {
       val head = latest(spark, zone).getOrElse(sys.error(
         s"txlog commitMeta($op): $zone has no transaction log"))
       val m = head.meta ++ updatesFor(head) ++ Map("op" -> op)
-      val (st, cst) = statsFor(head).getOrElse((head.stats, head.colStats))
+      val cst = statsFor(head).getOrElse(head.colStats)
       publish(spark, zone, head.gen + 1, head.format, head.files, m,
-        st, cst, base = Some(head),
-        sizes = head.sizes) match {
+        cst, base = Some(head), sizes = head.sizes) match {
         case Some(g) =>
-          return Snapshot(g, head.format, head.files, m, st,
+          return Snapshot(g, head.format, head.files, m,
             cst, base = head.gen, sizes = head.sizes)
         case None => ()
       }
@@ -1066,10 +1050,6 @@ object TxLog {
         (if (phys == from) Set(from) else Set.empty[String])
       val newSchema = org.apache.spark.sql.types.StructType(
         current.fields.map(f => if (f.name == from) f.copy(name = to) else f))
-      val statsColMeta = head.meta.get("stats.col") match {
-        case Some(c) if c == from => Map("stats.col" -> to)
-        case _ => Map.empty[String, String]
-      }
       val statsColsMeta = head.meta.get("stats.cols") match {
         case Some(cs) if cs.split(",").contains(from) =>
           Map("stats.cols" -> cs.split(",").map(c =>
@@ -1079,16 +1059,14 @@ object TxLog {
       Map("schema" -> newSchema.json,
         "colmap" -> encodeColMap(nextMap),
         "colmap.used" -> nextUsed.toSeq.sorted.map(encName).mkString(",")) ++
-        statsColMeta ++ statsColsMeta
+        statsColsMeta
     }
     commitMeta(spark, zone, "rename-column", updates,
-      statsFor = head => Some((head.stats,
-        // stats are LOGICAL-keyed: re-key this column's entries so
-        // pruning keeps working under the new name, same commit
-        head.colStats.map { case (file, perCol) =>
-          file -> perCol.map { case (c, st) =>
-            (if (c == from) to else c) -> st }
-        })))
+      // stats are LOGICAL-keyed: re-key this column's entries so pruning
+      // keeps working under the new name, same commit
+      statsFor = head => Some(head.colStats.map { case (file, perCol) =>
+        file -> perCol.map { case (c, st) => (if (c == from) to else c) -> st }
+      }))
   }
 
   /** ALTER TABLE DROP COLUMN, meta-only: the schema shrinks, the bytes
@@ -1109,29 +1087,19 @@ object TxLog {
       val nextUsed = usedPhysical(head.meta) + phys
       val newSchema = org.apache.spark.sql.types.StructType(
         current.fields.filterNot(_.name == name))
-      val statsColMeta: Map[String, String] =
-        if (head.meta.get("stats.col").contains(name)) Map.empty
-        else head.meta.get("stats.col").map("stats.col" -> _).toMap
       val statsColsMeta = head.meta.get("stats.cols") match {
         case Some(cs) if cs.split(",").contains(name) =>
           Map("stats.cols" -> cs.split(",").filterNot(_ == name).mkString(","))
         case _ => Map.empty[String, String]
       }
-      // NB: meta is MERGED (head.meta ++ updates), so a dropped stats.col
-      // must be erased via the sentinel below, not by omission
       Map("schema" -> newSchema.json,
         "colmap" -> encodeColMap(cmap - name),
         "colmap.used" -> nextUsed.toSeq.sorted.map(encName).mkString(",")) ++
-        statsColMeta ++ statsColsMeta ++
-        (if (head.meta.get("stats.col").contains(name))
-           Map("stats.col" -> "") else Map.empty)
+        statsColsMeta
     }
-    val snap = commitMeta(spark, zone, "drop-column", updates,
-      statsFor = head => Some((
-        if (head.meta.get("stats.col").contains(name)) Map.empty
-        else head.stats,
-        head.colStats.map { case (file, perCol) => file -> (perCol - name) })))
-    snap
+    commitMeta(spark, zone, "drop-column", updates,
+      statsFor = head => Some(head.colStats.map { case (file, perCol) =>
+        file -> (perCol - name) }))
   }
 
   /** Is `from -> to` a widening every committed byte decodes into
@@ -1271,10 +1239,6 @@ object TxLog {
   private def encName(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
   private def decName(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
 
-  /** The physical name a logical column's bytes live under. */
-  private[graft] def physicalOf(meta: Map[String, String], logical: String): String =
-    colMap(meta).getOrElse(logical, logical)
-
   /** The snapshot's schema with every field under its PHYSICAL name —
     * what the per-file reader must request. */
   private[graft] def physicalSchema(s: Snapshot)
@@ -1355,39 +1319,37 @@ object TxLog {
     base.fold(df.schema)(mergeSchemas(_, df.schema))
   }
 
-  /** Per-file stats over the files a commit just wrote to `dataDir`: the
-    * legacy single-column doubles (`legacyCol`) and the typed
-    * multi-column min/max/null counts (`typedCols`). Parquet already
-    * keeps these numbers per row group, so the usual commit reads only
-    * the footers of `files` (the committer's own listing of `dataDir`)
-    * and runs no Spark job; [[footerFileStats]] names the column types
-    * whose footer values are byte-identical to Spark's `min`/`max`.
-    * Everything else — another format; a float, double, decimal,
-    * timestamp or other stats column; a row group without min/max —
-    * runs [[aggregateFileStats]] once over the whole data dir. `written`
-    * is the schema of the frame the files were written from (physical
-    * column names), which fixes each column's type without inference. */
+  /** The typed per-file stats ([[ColStat]]: rows, null count, min/max)
+    * of the `statsCols` columns, over the files a commit just wrote to
+    * `dataDir`, keyed by zone-relative file then LOGICAL column name.
+    * Parquet already keeps these numbers per row group, so the usual
+    * commit reads only the footers of `files` (the committer's own
+    * listing of `dataDir`) and runs no Spark job; [[footerFileStats]]
+    * names the column types whose footer values are byte-identical to
+    * Spark's `min`/`max`. Everything else — another format; a float,
+    * double, decimal, timestamp or other stats column; a row group
+    * without min/max — runs [[aggregateFileStats]] once over the whole
+    * data dir. `written` is the schema of the frame the files were
+    * written from (physical column names), which fixes each column's
+    * type without inference. No stats columns, no work. */
   private def collectFileStats(spark: SparkSession, root: Path, dataDir: Path,
                                files: Seq[(String, (Long, Long))],
                                written: Option[org.apache.spark.sql.types.StructType],
-                               format: String, legacyCol: Option[String],
-                               typedCols: Seq[String],
+                               format: String, statsCols: Seq[String],
                                colmap: Map[String, String] = Map.empty)
-      : (Map[String, (Double, Double)], Map[String, Map[String, ColStat]]) = {
-    if (legacyCol.isEmpty && typedCols.isEmpty) return (Map.empty, Map.empty)
-    written.flatMap(w => footerFileStats(spark.sparkContext.hadoopConfiguration,
-        root, files, w, format, legacyCol, typedCols, colmap))
+      : Map[String, Map[String, ColStat]] =
+    if (statsCols.isEmpty) Map.empty
+    else written.flatMap(w => footerFileStats(spark.sparkContext.hadoopConfiguration,
+        root, files, w, format, statsCols, colmap))
       .getOrElse(aggregateFileStats(spark, root, dataDir, files, format,
-        legacyCol, typedCols, colmap))
-  }
+        statsCols, colmap))
 
   /** [[collectFileStats]] from Parquet footers, or None when some stats
     * column or row group cannot give exactly what [[aggregateFileStats]]
     * commits. Footers serve three column types:
     *  - integral ("num"): Parquet's signed INT32/INT64 bounds are Spark's,
     *    and `Double.toString(v.toDouble)` is what the aggregation's
-    *    `cast("double")` prints; the legacy doubles are served only for
-    *    an integral column;
+    *    `cast("double")` prints;
     *  - UTF-8 strings ("str"): Parquet orders them as unsigned bytes, the
     *    order of `UTF8String`;
     *  - dates ("str") in years 1583-9999: one-width ISO strings order
@@ -1403,10 +1365,9 @@ object TxLog {
   private[graft] def footerFileStats(conf: org.apache.hadoop.conf.Configuration,
                                      root: Path, files: Seq[(String, (Long, Long))],
                                      written: org.apache.spark.sql.types.StructType,
-                                     format: String, legacyCol: Option[String],
-                                     typedCols: Seq[String],
+                                     format: String, statsCols: Seq[String],
                                      colmap: Map[String, String] = Map.empty)
-      : Option[(Map[String, (Double, Double)], Map[String, Map[String, ColStat]])] = {
+      : Option[Map[String, Map[String, ColStat]]] = {
     import org.apache.parquet.column.statistics.Statistics
     import org.apache.parquet.io.api.Binary
     import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, IntLogicalTypeAnnotation, StringLogicalTypeAnnotation}
@@ -1414,7 +1375,7 @@ object TxLog {
     import org.apache.spark.sql.types.{ByteType, DateType, IntegerType, LongType, ShortType, StringType}
     import scala.jdk.CollectionConverters._
     if (format != "parquet") return None
-    val cols = (legacyCol.toSeq ++ typedCols).distinct
+    val cols = statsCols.distinct
     val physical = cols.map(c => c -> colmap.getOrElse(c, c)).toMap
     // 'i' integral, 's' UTF-8 string, 'd' date
     val tpe = cols.map(c => c -> written.find(_.name == physical(c)).map(_.dataType).collect {
@@ -1422,8 +1383,7 @@ object TxLog {
       case dt if dt == StringType => 's' // default (UTF8_BINARY) collation only
       case DateType => 'd'
     }).toMap
-    if (tpe.values.exists(_.isEmpty) || legacyCol.exists(c => !tpe(c).contains('i')))
-      return None
+    if (tpe.values.exists(_.isEmpty)) return None
     val (minDay, maxDay) = (java.time.LocalDate.of(1583, 1, 1).toEpochDay,
       java.time.LocalDate.of(9999, 12, 31).toEpochDay)
     // (rows, nulls, bounds as committed strings) of one column in one
@@ -1482,19 +1442,13 @@ object TxLog {
       rel -> cols.map(c => c -> fold(meta, c)).toMap
     }
     if (perFile.exists(_._2.values.exists(_.isEmpty))) return None
-    val legacy = legacyCol.toSeq.flatMap(c => perFile.flatMap { case (rel, m) =>
-      m(c).get._3.map { case (mn, mx) => rel -> ((mn.toDouble, mx.toDouble)) }
-    }).toMap
-    val typed =
-      if (typedCols.isEmpty) Map.empty[String, Map[String, ColStat]]
-      else perFile.map { case (rel, m) =>
-        rel -> typedCols.map { c =>
-          val (rows, nulls, bounds) = m(c).get
-          c -> ColStat(if (tpe(c).contains('i')) "num" else "str", rows, nulls,
-            bounds.map(_._1), bounds.map(_._2))
-        }.toMap
+    Some(perFile.map { case (rel, m) =>
+      rel -> cols.map { c =>
+        val (rows, nulls, bounds) = m(c).get
+        c -> ColStat(if (tpe(c).contains('i')) "num" else "str", rows, nulls,
+          bounds.map(_._1), bounds.map(_._2))
       }.toMap
-    Some((legacy, typed))
+    }.toMap)
   }
 
   /** The Parquet footers of `files`, in order — read on a small thread
@@ -1529,19 +1483,15 @@ object TxLog {
   }
 
   /** [[collectFileStats]] by aggregation: read the data dir back and
-    * compute every column's bounds and null count in ONE
-    * `groupBy(input_file_name)` job (a zone carrying both stats meta keys
-    * must not pay two read passes per commit). Legacy entries with a
-    * null/NaN bound are dropped (those files are always read). Typed
-    * numeric columns record doubles ("num"); everything else records its
-    * string form ("str" — ISO date/timestamp strings order
-    * chronologically). */
+    * compute every stats column's bounds and null count in ONE
+    * `groupBy(input_file_name)` job. Numeric columns record doubles
+    * ("num"); everything else records its string form ("str" — ISO
+    * date/timestamp strings order chronologically). */
   private[graft] def aggregateFileStats(spark: SparkSession, root: Path, dataDir: Path,
                                         files: Seq[(String, (Long, Long))],
-                                        format: String, legacyCol: Option[String],
-                                        typedCols: Seq[String],
+                                        format: String, statsCols: Seq[String],
                                         colmap: Map[String, String] = Map.empty)
-      : (Map[String, (Double, Double)], Map[String, Map[String, ColStat]]) = {
+      : Map[String, Map[String, ColStat]] = {
     import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min, when}
     // stats are keyed by LOGICAL column names throughout the manifest;
     // freshly-written files carry physical names, so surface them
@@ -1551,51 +1501,33 @@ object TxLog {
     val df =
       if (rev.isEmpty || !dfRaw.columns.exists(rev.contains)) dfRaw
       else dfRaw.toDF(dfRaw.columns.map(c => rev.getOrElse(c, c)).toIndexedSeq: _*)
-    val kinds = typedCols.map { c =>
+    val kinds = statsCols.map { c =>
       c -> (df.schema(c).dataType match {
         case _: org.apache.spark.sql.types.NumericType => "num"
         case _ => "str"
       })
     }.toMap
-    val legacyAggs = legacyCol.toSeq.flatMap { c =>
-      Seq(min(col(c).cast("double")), max(col(c).cast("double")))
-    }
-    val typedAggs = typedCols.flatMap { c =>
+    val colAggs = statsCols.flatMap { c =>
       val v = if (kinds(c) == "num") col(c).cast("double") else col(c).cast("string")
       Seq(min(v), max(v), count(when(col(c).isNull, 1)))
     }
-    val aggs = count(lit(1)).as("_rows") +: (legacyAggs ++ typedAggs)
+    val aggs = count(lit(1)).as("_rows") +: colAggs
     val rootPath = root.toUri.getPath.stripSuffix("/")
     val rows = df.groupBy(input_file_name().as("_file"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
-    val typedBase = 2 + legacyAggs.size
-    val legacy = rows.flatMap { r =>
-      if (legacyCol.isEmpty || r.isNullAt(2) || r.isNullAt(3)) None
-      else {
-        val (mn, mx) = (r.getDouble(2), r.getDouble(3))
-        if (mn.isNaN || mx.isNaN) None
-        else {
-          val rel = new Path(new java.net.URI(r.getString(0))).toUri.getPath
-            .stripPrefix(rootPath).stripPrefix("/")
-          Some(rel -> (mn, mx))
-        }
-      }
-    }.toMap
-    val typed =
-      if (typedCols.isEmpty) Map.empty[String, Map[String, ColStat]]
-      else rows.map { r =>
-        val rel = new Path(new java.net.URI(r.getString(0))).toUri.getPath
-          .stripPrefix(rootPath).stripPrefix("/")
-        val nRows = r.getLong(1)
-        val perCol = typedCols.zipWithIndex.map { case (c, i) =>
-          val base = typedBase + i * 3
-          def v(at: Int): Option[String] =
-            if (r.isNullAt(at)) None else Some(r.get(at).toString)
-          c -> ColStat(kinds(c), nRows, r.getLong(base + 2), v(base), v(base + 1))
-        }.toMap
-        rel -> perCol
+    val stats = rows.map { r =>
+      val rel = new Path(new java.net.URI(r.getString(0))).toUri.getPath
+        .stripPrefix(rootPath).stripPrefix("/")
+      val nRows = r.getLong(1)
+      val perCol = statsCols.zipWithIndex.map { case (c, i) =>
+        val base = 2 + i * 3
+        def v(at: Int): Option[String] =
+          if (r.isNullAt(at)) None else Some(r.get(at).toString)
+        c -> ColStat(kinds(c), nRows, r.getLong(base + 2), v(base), v(base + 1))
       }.toMap
+      rel -> perCol
+    }.toMap
     // ZERO-ROW files (an empty write partition — e.g. a merge whose
     // touched side vanished entirely) never appear in the
     // groupBy(input_file_name) result, which would leave them stat-less:
@@ -1603,15 +1535,9 @@ object TxLog {
     // metadataCount refuses the zone. Record them explicitly as
     // rows=0 / all-null stats — pruning then correctly always skips them
     // and the row count stays exact.
-    val typedFilled =
-      if (typedCols.isEmpty) typed
-      else {
-        val seen = typed.keySet
-        val empties = files.map(_._1).filterNot(seen)
-        typed ++ empties.map(rel =>
-          rel -> typedCols.map(c => c -> ColStat(kinds(c), 0L, 0L, None, None)).toMap)
-      }
-    (legacy, typedFilled)
+    val empties = files.map(_._1).filterNot(stats.contains)
+    stats ++ empties.map(rel =>
+      rel -> statsCols.map(c => c -> ColStat(kinds(c), 0L, 0L, None, None)).toMap)
   }
 
   /** The stats columns a zone tracks: this write's request, else the
@@ -1627,15 +1553,14 @@ object TxLog {
     * `d-<uuid>/` dir, the manifest is head.files ++ new files. On a lost
     * publish race the file list is recomputed against the new head and
     * retried — appends never conflict on data, only on the gen number.
-    * With `statsCol`, per-file min/max of that column are committed in
-    * the same manifest, enabling [[readWhere]] file skipping. */
+    * The new files' typed stats ([[ColStat]]) for `statsCols` — or, when
+    * empty, for the zone's committed `stats.cols` — are committed in the
+    * same manifest, enabling [[readWhereCol]] file skipping. */
   def append(spark: SparkSession, zone: String, df: DataFrame,
              maxRetries: Int = 5,
              meta: Map[String, String] = Map.empty,
-             statsCol: Option[String] = None,
              statsCols: Seq[String] = Nil): Snapshot =
-    appendImpl(spark, zone, df, maxRetries, meta, statsCol, statsCols,
-      batchId = None)
+    appendImpl(spark, zone, df, maxRetries, meta, statsCols, batchId = None)
       .getOrElse(sys.error("unreachable: append without a batchId never skips"))
 
   /** Shared append body. With `batchId`, the committed high-water mark is
@@ -1646,7 +1571,7 @@ object TxLog {
     * (the staged data dir is removed). */
   private def appendImpl(spark: SparkSession, zone: String, df: DataFrame,
                          maxRetries: Int, meta: Map[String, String],
-                         statsCol: Option[String], statsCols: Seq[String],
+                         statsCols: Seq[String],
                          batchId: Option[Long]): Option[Snapshot] = {
     val f = fs(spark, zone)
     val root = f.makeQualified(new Path(zone))
@@ -1678,13 +1603,12 @@ object TxLog {
     out.write.mode(SaveMode.ErrorIfExists).format(head0.format).save(dataDir.toString)
     val addedInfo = listRelInfo(f, root, dataDir)
     val added = addedInfo.map(_._1)
-    val cName = statsCol.orElse(head0.meta.get("stats.col")).filter(_.nonEmpty)
     val tCols = effectiveStatsCols(statsCols, head0.meta)
-    val (addedStats, addedColStats) =
+    val addedColStats =
       collectFileStats(spark, root, dataDir, addedInfo, Some(out.schema),
-        head0.format, cName, tCols, cmap)
-    val statsMeta = cName.map(c => Map("stats.col" -> c)).getOrElse(Map.empty) ++
-      (if (tCols.nonEmpty) Map("stats.cols" -> tCols.mkString(",")) else Map.empty)
+        head0.format, tCols, cmap)
+    val statsMeta =
+      if (tCols.nonEmpty) Map("stats.cols" -> tCols.mkString(",")) else Map.empty
     var attempt = 0
     while (attempt <= maxRetries) {
       val head = latest(spark, zone).getOrElse(head0)
@@ -1707,10 +1631,10 @@ object TxLog {
       val next = Snapshot(head.gen + 1, head.format,
         (head.files ++ added).distinct.sorted,
         head.meta ++ statsMeta ++ schemaMeta ++ meta ++ Map("op" -> "append"),
-        head.stats ++ addedStats, head.colStats ++ addedColStats,
+        head.colStats ++ addedColStats,
         base = head.gen, sizes = head.sizes ++ addedInfo.toMap)
       publish(spark, zone, next.gen, next.format, next.files, next.meta,
-        next.stats, next.colStats, base = Some(head),
+        next.colStats, base = Some(head),
         sizes = next.sizes) match {
         // base stays head.gen even when publish skip-forwarded past a
         // corpse (g > head.gen + 1) — it names the REBASED head, exactly
@@ -1725,40 +1649,6 @@ object TxLog {
     }
     f.delete(dataDir, true)
     sys.error(s"txlog append to $zone lost the publish race $maxRetries times")
-  }
-
-  /** The live files a range predicate on the stats column can touch:
-    * files without stats are kept (never skip blind), files whose
-    * [min, max] misses [lo, hi] are pruned. */
-  def prunedFiles(s: Snapshot, lo: Double, hi: Double): Seq[String] =
-    s.files.filter { f =>
-      s.stats.get(f) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      }
-    }
-
-  /** Range read with manifest-based file skipping: scans ONLY the files
-    * whose committed min/max overlap [lo, hi] (plus stat-less files),
-    * then applies the exact predicate. At 100 TB this is the difference
-    * between touching 3 files and 800k — the reason the stats live in
-    * the manifest. The zone must have been written with a `statsCol`. */
-  def readWhere(spark: SparkSession, zone: String,
-                lo: Double, hi: Double): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val head = latest(spark, zone).getOrElse(
-      sys.error(s"$zone has no transaction log"))
-    // .filter(_.nonEmpty): dropColumn erases a dropped stats.col via the
-    // "" sentinel (meta is merged, not replaced) — without the filter this
-    // would build col("") and fail with an unresolved-column error instead
-    // of the intended message (same guard as every other read site)
-    val cName = head.meta.get("stats.col").filter(_.nonEmpty).getOrElse(
-      sys.error(s"$zone has no stats column — write with statsCol to enable skipping"))
-    val pred = col(cName).cast("double") >= lo && col(cName).cast("double") <= hi
-    val keep = prunedFiles(head, lo, hi)
-    if (keep.isEmpty) readSnapshot(spark, zone, head).filter(org.apache.spark.sql.functions.lit(false))
-    else loadFiles(spark, head, keep.map(f => zone.stripSuffix("/") + "/" + f))
-      .filter(pred)
   }
 
   /** Common-prefix string comparison for "str" stats: compares only the
@@ -1799,10 +1689,6 @@ object TxLog {
       }
     }
 
-  /** Typed-stats range read: scans ONLY the files whose committed
-    * min/max for `column` overlap [lo, hi], then applies the exact
-    * predicate. The multi-column twin of [[readWhere]]; the zone must
-    * have been written with `statsCols` including `column`. */
   /** Range predicate that keeps PARQUET PUSHDOWN alive: the literal is
     * cast to the COLUMN's native type, never the column to the
     * literal's — a cast around the column makes the filter opaque to the
@@ -1819,6 +1705,12 @@ object TxLog {
       col(column) <= lit(hi.toString).cast(dt)
   }
 
+  /** Range read with manifest-based file skipping: scans ONLY the files
+    * whose committed min/max for `column` overlap [lo, hi] (plus files
+    * without a stat for it), then applies the exact predicate. At 100 TB
+    * this is the difference between touching 3 files and 800k — the
+    * reason the stats live in the manifest. The zone must track
+    * `column` in its `statsCols`. */
   def readWhereCol(spark: SparkSession, zone: String, column: String,
                    lo: Any, hi: Any): DataFrame = {
     val head = latest(spark, zone).getOrElse(
@@ -1911,7 +1803,6 @@ object TxLog {
   def replace(spark: SparkSession, zone: String, df: DataFrame,
               maxRetries: Int = 5,
               meta: Map[String, String] = Map.empty,
-              statsCol: Option[String] = None,
               statsCols: Seq[String] = Nil,
               expectedBase: Option[Long] = None): Snapshot = {
     val f = fs(spark, zone)
@@ -1925,13 +1816,12 @@ object TxLog {
     df.write.mode(SaveMode.ErrorIfExists).format(head0.format).save(dataDir.toString)
     val filesInfo = listRelInfo(f, root, dataDir)
     val files = filesInfo.map(_._1)
-    val cName = statsCol.orElse(head0.meta.get("stats.col")).filter(_.nonEmpty)
     val tCols = effectiveStatsCols(statsCols, head0.meta)
-    val (stats, colStats) =
+    val colStats =
       collectFileStats(spark, root, dataDir, filesInfo, Some(df.schema),
-        head0.format, cName, tCols)
-    val statsMeta = cName.map(c => Map("stats.col" -> c)).getOrElse(Map.empty) ++
-      (if (tCols.nonEmpty) Map("stats.cols" -> tCols.mkString(",")) else Map.empty)
+        head0.format, tCols)
+    val statsMeta =
+      if (tCols.nonEmpty) Map("stats.cols" -> tCols.mkString(",")) else Map.empty
     var attempt = 0
     while (attempt <= maxRetries) {
       val head = latest(spark, zone).getOrElse(head0)
@@ -1949,10 +1839,10 @@ object TxLog {
       // with it — the rewrite wrote logical names everywhere.
       val m = (head.meta -- ColMapMetaKeys) ++ statsMeta ++
         Map("schema" -> df.schema.json) ++ meta ++ Map("op" -> "replace")
-      publish(spark, zone, head.gen + 1, head.format, files, m, stats,
+      publish(spark, zone, head.gen + 1, head.format, files, m,
         colStats, base = Some(head), sizes = filesInfo.toMap) match {
         case Some(g) =>
-          return Snapshot(g, head.format, files, m, stats, colStats,
+          return Snapshot(g, head.format, files, m, colStats,
             base = head.gen, sizes = filesInfo.toMap)
         case None => ()
       }
@@ -1975,7 +1865,6 @@ object TxLog {
                  compute: Option[Snapshot] => DataFrame,
                  maxAttempts: Int = 5,
                  meta: Map[String, String] = Map.empty,
-                 statsCol: Option[String] = None,
                  statsCols: Seq[String] = Nil): Snapshot = {
     require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
     var attempt = 0
@@ -1987,8 +1876,7 @@ object TxLog {
       }
       try {
         return replace(spark, zone, compute(head), meta = meta,
-          statsCol = statsCol, statsCols = statsCols,
-          expectedBase = Some(base))
+          statsCols = statsCols, expectedBase = Some(base))
       } catch {
         case e: SnapshotMovedException => lastMove = e
       }
@@ -2157,12 +2045,11 @@ object TxLog {
           .save(dataDir.toString)
         val newInfo = listRelInfo(f, root, dataDir)
         val newFiles = newInfo.map(_._1)
-        val (newStats, newColStats) = collectFileStats(spark, root, dataDir,
-          newInfo, Some(out.schema), head.format, head.meta.get("stats.col").filter(_.nonEmpty),
-          effectiveStatsCols(Nil, head.meta), colMap(head.meta))
+        val newColStats = collectFileStats(spark, root, dataDir, newInfo,
+          Some(out.schema), head.format, effectiveStatsCols(Nil, head.meta),
+          colMap(head.meta))
         val nextFiles = (head.files.filter(untouchedSet) ++ newFiles).sorted
         // untouched files keep their committed stats; touched files' entries drop
-        val nextStats = head.stats.filter { case (p, _) => untouchedSet(p) } ++ newStats
         val nextColStats =
           head.colStats.filter { case (p, _) => untouchedSet(p) } ++ newColStats
         val nextSizes =
@@ -2173,7 +2060,7 @@ object TxLog {
         publish(spark, zone, head.gen + 1, head.format, nextFiles,
           head.meta ++ Map("schema" -> schema.json) ++ batchMeta ++
             Map("op" -> "merge"),
-          nextStats, nextColStats, base = Some(head),
+          nextColStats, base = Some(head),
           sizes = nextSizes) match {
           case Some(g) =>
             return Some(MergeStats(g, touched.size.toLong, head.files.size.toLong,
@@ -2367,11 +2254,10 @@ object TxLog {
         .save(dataDir.toString)
       val newInfo = listRelInfo(f, root, dataDir)
       val newFiles = newInfo.map(_._1)
-      val (newStats, newColStats) = collectFileStats(spark, root, dataDir,
-        newInfo, Some(out.schema), head.format, head.meta.get("stats.col").filter(_.nonEmpty),
-        effectiveStatsCols(Nil, head.meta), colMap(head.meta))
+      val newColStats = collectFileStats(spark, root, dataDir, newInfo,
+        Some(out.schema), head.format, effectiveStatsCols(Nil, head.meta),
+        colMap(head.meta))
       val nextFiles = (head.files.filter(untouchedSet) ++ newFiles).sorted
-      val nextStats = head.stats.filter { case (p, _) => untouchedSet(p) } ++ newStats
       val nextColStats =
         head.colStats.filter { case (p, _) => untouchedSet(p) } ++ newColStats
       val nextSizes =
@@ -2379,7 +2265,7 @@ object TxLog {
       prePublishHook()
       publish(spark, zone, head.gen + 1, head.format, nextFiles,
         head.meta ++ Map("op" -> "delete"),
-        nextStats, nextColStats, base = Some(head), sizes = nextSizes) match {
+        nextColStats, base = Some(head), sizes = nextSizes) match {
         case Some(g) =>
           return DeleteStats(g, touched.size.toLong, head.files.size.toLong, deleted)
         case None =>
@@ -2503,12 +2389,11 @@ object TxLog {
         target.meta.view.filterKeys(ColMapMetaKeys.contains).toMap ++
         Map("op" -> "restore")
       publish(spark, zone, head.gen + 1, target.format, target.files,
-        meta, target.stats, target.colStats, base = Some(head),
+        meta, target.colStats, base = Some(head),
         sizes = target.sizes) match {
         case Some(g) =>
           return Snapshot(g, target.format, target.files, meta,
-            target.stats, target.colStats, base = head.gen,
-            sizes = target.sizes)
+            target.colStats, base = head.gen, sizes = target.sizes)
         case None => ()
       }
       attempt += 1
@@ -2578,7 +2463,7 @@ object TxLog {
     val committed = latest(spark, zone).flatMap(_.meta.get("batchId")).map(_.toLong)
     if (committed.exists(_ >= batchId)) false
     else appendImpl(spark, zone, df, maxRetries = 5,
-      meta = Map("batchId" -> batchId.toString), statsCol = None,
+      meta = Map("batchId" -> batchId.toString),
       statsCols = statsCols, batchId = Some(batchId)).isDefined
   }
 
@@ -2611,9 +2496,8 @@ object TxLog {
     val newInfo = listRelInfo(f, root, dataDir)
     val newFiles = newInfo.map(_._1)
     // a stats-tracked zone recomputes per-file stats for the rewrite
-    val (newStats, newColStats) = collectFileStats(spark, root, dataDir,
-      newInfo, Some(out.schema), head.format,
-      head.meta.get("stats.col").filter(_.nonEmpty), effectiveStatsCols(Nil, head.meta))
+    val newColStats = collectFileStats(spark, root, dataDir,
+      newInfo, Some(out.schema), head.format, effectiveStatsCols(Nil, head.meta))
     prePublishHook()
     // meta carries forward: compaction must not erase e.g. the streaming
     // sink's batchId high-water mark. The column mapping RESETS: the
@@ -2621,7 +2505,7 @@ object TxLog {
     // names — maintenance normalizes the physical layout for free.
     publish(spark, zone, head.gen + 1, head.format, newFiles,
       (head.meta -- ColMapMetaKeys) ++ Map("op" -> "compact"),
-      newStats, newColStats, base = Some(head), sizes = newInfo.toMap) match {
+      newColStats, base = Some(head), sizes = newInfo.toMap) match {
       case Some(g) =>
         CompactStats(g, head.files.size.toLong, newFiles.size.toLong,
           bytes, rewritten = true)
@@ -2663,14 +2547,14 @@ object TxLog {
     val newInfo = listRelInfo(f, root, dataDir)
     val newFiles = newInfo.map(_._1)
     val statsCols = (effectiveStatsCols(Nil, head.meta) ++ cols).distinct
-    val (newStats, newColStats) = collectFileStats(spark, root, dataDir,
-      newInfo, Some(out.schema), head.format, head.meta.get("stats.col").filter(_.nonEmpty), statsCols)
+    val newColStats = collectFileStats(spark, root, dataDir,
+      newInfo, Some(out.schema), head.format, statsCols)
     // mapping resets with the rewrite, like compact
     val meta = (head.meta -- ColMapMetaKeys) ++
       (if (statsCols.nonEmpty) Map("stats.cols" -> statsCols.mkString(",")) else Map.empty)
     publish(spark, zone, head.gen + 1, head.format, newFiles,
       meta ++ Map("op" -> "compactClustered"),
-      newStats, newColStats, base = Some(head), sizes = newInfo.toMap) match {
+      newColStats, base = Some(head), sizes = newInfo.toMap) match {
       case Some(g) =>
         CompactStats(g, head.files.size.toLong, newFiles.size.toLong, bytes,
           rewritten = true)

@@ -56,13 +56,6 @@ object Winnow {
       .otherwise(array().cast("array<long>"))
   }
 
-  /** Per-row fingerprint array for a token-array column — the one-stop
-    * Column form (see [[windowMinima]] for why [[fingerprintIndex]]
-    * materializes the hash array first instead of using this). */
-  def fingerprintArray(toks: Column, n: Int, w: Int): Column =
-    windowMinima(transform(graft.operators.TextAnalysis.ngramStream(toks, n),
-      g => HashFunctions.h32(g)), w)
-
   /** (doc_id, fp) inverted-index rows over a [[Dedup.docToks]]-shaped
     * relation (`doc_id`, `toks`). The gram-hash array gets its OWN
     * projection step so the md5 chain runs once per document, not once

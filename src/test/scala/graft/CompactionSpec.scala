@@ -106,6 +106,52 @@ class CompactionSpec extends SparkSpec {
     assert(files(1).count(_.endsWith(".json")) === 8)
   }
 
+  test("a timed-out backlog cancels its hours' Spark jobs before the timeout surfaces") {
+    val dir = freshDir()
+    for (h <- Seq(0, 1)) {
+      spark.range(200L).select($"id", lit(2024).as("year"), lit(1).as("month"),
+          lit(1).as("day"), lit(h).as("hour"))
+        .repartition(4)
+        .write.mode("append").partitionBy("year", "month", "day", "hour").json(dir)
+    }
+    def files(h: Int) = dataFileNames(s"$dir/year=2024/month=1/day=1/hour=$h")
+    val before = Seq(0, 1).map(files)
+    val sc = spark.sparkContext
+    // the jobs the hours start, by their compaction job tag
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").exists(_.startsWith("graft-compact-hours-"))))
+          started.add(e.jobId)
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ended.add(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    HangingJson.hold = true
+    try {
+      val e = intercept[java.util.concurrent.TimeoutException] {
+        Compaction.compactClosedHours(spark, dir, beforeHour = (2025, 1, 1, 0),
+          format = classOf[HangingJson].getName, writeOptions = Map.empty,
+          hourTimeout = scala.concurrent.duration.Duration(2, "s"))
+      }
+      assert(e.getMessage.contains("no compaction is still running"), e.getMessage)
+      // the reads still block, yet every tagged job has ended (the listener
+      // bus delivers asynchronously, hence the short poll)
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while ((started.isEmpty || !ended.containsAll(started)) &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+      assert(!started.isEmpty, "the hours started no tagged job")
+      assert(ended.containsAll(started),
+        s"tagged jobs still active: ${started.toArray.filterNot(ended.contains).mkString(",")}")
+    } finally {
+      HangingJson.hold = false
+      sc.removeSparkListener(listener)
+    }
+    assert(Seq(0, 1).map(files) === before, "a cancelled hour was swapped")
+  }
+
   test("a concurrent append between planning and swap aborts the rewrite") {
     val dir = freshDir()
     spark.range(1000L).select($"id").repartition(16).write.parquet(dir)
@@ -196,4 +242,22 @@ class CompactionSpec extends SparkSpec {
     assert(back.count() === 2000L)
     assert(back.filter($"part" === 0).count() === 1000L)
   }
+}
+
+/** JSON whose schema inference first runs a Spark job that blocks while
+  * [[HangingJson.hold]] is set: a compaction read that hangs until
+  * released. */
+class HangingJson extends org.apache.spark.sql.execution.datasources.json.JsonFileFormat {
+  override def inferSchema(spark: org.apache.spark.sql.SparkSession,
+                           options: Map[String, String],
+                           files: Seq[org.apache.hadoop.fs.FileStatus])
+      : Option[org.apache.spark.sql.types.StructType] = {
+    spark.sparkContext.parallelize(1 to 2, 2)
+      .foreach(_ => while (HangingJson.hold) Thread.sleep(20))
+    super.inferSchema(spark, options, files)
+  }
+}
+
+object HangingJson {
+  @volatile var hold = false
 }

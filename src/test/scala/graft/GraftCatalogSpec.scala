@@ -411,19 +411,20 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("readWhere after dropping the stats column reports the intended error") {
-    // dropColumn erases stats.col via the "" merge sentinel; readWhere
-    // must surface the no-stats-column message, not col("") resolution
+    // dropColumn takes the column out of stats.cols; a range read on it
+    // must surface the untracked-stats message, not a column resolution
     val t = fresh()
     spark.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
     val zone = zoneOf(t)
     TxLog.append(spark,  zone,
-      spark.range(10).selectExpr("id AS k", "id * 2 AS v"), statsCol = Some("v"))
+      spark.range(10).selectExpr("id AS k", "id * 2 AS v"), statsCols = Seq("v"))
+    assert(TxLog.readWhereCol(spark, zone, "v", 0L, 5L).count() === 3L)
     spark.sql(s"ALTER TABLE $t DROP COLUMN v")
     val e = intercept[RuntimeException] {
-      TxLog.readWhere(spark, zone, 0.0, 5.0).count()
+      TxLog.readWhereCol(spark, zone, "v", 0L, 5L).count()
     }
-    assert(e.getMessage.contains("no stats column"),
-      s"expected the intended no-stats-column message, got: ${e.getMessage}")
+    assert(e.getMessage.contains("does not track stats"),
+      s"expected the intended untracked-stats message, got: ${e.getMessage}")
   }
 
   test("ALTER COLUMN TYPE widening is meta-only: old files promote, stats prune, eras travel") {

@@ -11,7 +11,7 @@ import graft.operators.TxLog
 
 /** Per-file stats from Parquet footers must be exactly what the
   * read-back aggregation commits: same rows, null counts and min/max
-  * strings, so the rendered `s `/`t ` manifest lines are byte-identical.
+  * strings, so the rendered `t ` manifest lines are byte-identical.
   * Columns whose footer bounds could differ (NaN-bearing doubles,
   * session-zoned timestamps, bounds parquet-mr dropped) must leave the
   * footer path and still be committed through the aggregation. */
@@ -43,29 +43,27 @@ class TxLogFooterStatsSpec extends SparkSpec {
 
   /** Write `df` as one data dir and return (footer stats, aggregate
     * stats, listed files). */
-  private def statsBothWays(df: DataFrame, legacy: Option[String], typed: Seq[String],
+  private def statsBothWays(df: DataFrame, typed: Seq[String],
                             colmap: Map[String, String] = Map.empty) = {
     val root = freshRoot()
     val dir = new Path(root, "d-test")
     df.write.parquet(dir.toString)
     val files = listed(root, dir)
     val foot = TxLog.footerFileStats(conf, root, files, df.schema, "parquet",
-      legacy, typed, colmap)
+      typed, colmap)
     val agg = TxLog.aggregateFileStats(spark, root, dir, files, "parquet",
-      legacy, typed, colmap)
+      typed, colmap)
     (foot, agg, files)
   }
 
-  private def assertIdentical(foot: Option[(Map[String, (Double, Double)],
-                                Map[String, Map[String, TxLog.ColStat]])],
-                              agg: (Map[String, (Double, Double)],
-                                Map[String, Map[String, TxLog.ColStat]]),
+  private def assertIdentical(foot: Option[Map[String, Map[String, TxLog.ColStat]]],
+                              agg: Map[String, Map[String, TxLog.ColStat]],
                               files: Seq[(String, (Long, Long))]): Unit = {
     assert(foot.isDefined, "expected the footer path to serve these columns")
     assert(foot.get === agg)
     val names = files.map(_._1)
-    assert(TxLog.perFileLines(names, foot.get._1, foot.get._2, Map.empty) ===
-      TxLog.perFileLines(names, agg._1, agg._2, Map.empty))
+    assert(TxLog.perFileLines(names, foot.get, Map.empty) ===
+      TxLog.perFileLines(names, agg, Map.empty))
   }
 
   private val allTypes = StructType(Seq(
@@ -96,12 +94,12 @@ class TxLogFooterStatsSpec extends SparkSpec {
   test("footer stats equal aggregate stats for every served type, with nulls") {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(allTypesRows, 3), allTypes)
-    val (foot, agg, files) = statsBothWays(df, Some("l"), allTypes.fieldNames.toSeq)
+    val (foot, agg, files) = statsBothWays(df, allTypes.fieldNames.toSeq)
     assert(files.size === 3)
     assertIdentical(foot, agg, files)
     // the entirely-null cases really occurred: the all-null column in
     // every file, and `str` in the third slice
-    val typed = foot.get._2
+    val typed = foot.get
     assert(typed.values.forall(m => m("allnull").min.isEmpty &&
       m("allnull").nulls === m("allnull").rows))
     assert(typed.values.count(m => m("str").min.isEmpty && m("str").rows === 4L) === 1)
@@ -113,20 +111,19 @@ class TxLogFooterStatsSpec extends SparkSpec {
     // four slices over two rows: two write partitions are empty
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(allTypesRows.take(2), 4), allTypes)
-    val (foot, agg, files) = statsBothWays(df, Some("l"), Seq("l", "str", "d"))
+    val (foot, agg, files) = statsBothWays(df, Seq("l", "str", "d"))
     assertIdentical(foot, agg, files)
-    foot.get._2.values.filter(_.values.exists(_.rows == 0L)).foreach { m =>
+    foot.get.values.filter(_.values.exists(_.rows == 0L)).foreach { m =>
       assert(m.values.forall(st => st.rows == 0L && st.nulls == 0L &&
         st.min.isEmpty && st.max.isEmpty))
     }
     // a wholly empty write leaves exactly one schema-only file
     val (foot0, agg0, files0) = statsBothWays(
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], allTypes),
-      Some("l"), Seq("l", "str"))
+      Seq("l", "str"))
     assert(files0.nonEmpty)
     assertIdentical(foot0, agg0, files0)
-    assert(foot0.get._1.isEmpty, "no legacy bounds for zero-row files")
-    assert(foot0.get._2.values.forall(_.values.forall(_.rows == 0L)))
+    assert(foot0.get.values.forall(_.values.forall(st => st.rows == 0L && st.min.isEmpty)))
   }
 
   test("a file with several row groups folds them to the aggregate's answer") {
@@ -145,9 +142,9 @@ class TxLogFooterStatsSpec extends SparkSpec {
     }
     assert(groups.exists(_ > 1), s"expected a multi-row-group file, got $groups")
     val foot = TxLog.footerFileStats(conf, root, files, df.schema, "parquet",
-      Some("l"), Seq("l", "str", "d"))
+      Seq("l", "str", "d"))
     val agg = TxLog.aggregateFileStats(spark, root, dir, files, "parquet",
-      Some("l"), Seq("l", "str", "d"))
+      Seq("l", "str", "d"))
     assertIdentical(foot, agg, files)
   }
 
@@ -155,9 +152,9 @@ class TxLogFooterStatsSpec extends SparkSpec {
     val phys = spark.range(0L, 50L, 1L, 6) // past 4 files: the parallel footer read
       .select($"id".as("col_0007"), concat(lit("p"), $"id").as("col_0008"))
     val cmap = Map("key" -> "col_0007", "name" -> "col_0008")
-    val (foot, agg, files) = statsBothWays(phys, Some("key"), Seq("key", "name"), cmap)
+    val (foot, agg, files) = statsBothWays(phys, Seq("key", "name"), cmap)
     assertIdentical(foot, agg, files)
-    assert(foot.get._2.values.forall(m => m.keySet === Set("key", "name")),
+    assert(foot.get.values.forall(m => m.keySet === Set("key", "name")),
       "stats stay keyed by LOGICAL names")
     // end to end: a renamed stats column keeps committing footer stats
     val zone = freshRoot().toString + "/zone"
@@ -170,8 +167,8 @@ class TxLogFooterStatsSpec extends SparkSpec {
     val root = new Path(zone).getFileSystem(conf).makeQualified(new Path(zone))
     val dir = new Path(root, added.head.takeWhile(_ != '/'))
     val aggAdded = TxLog.aggregateFileStats(spark, root, dir, listed(root, dir), "parquet",
-      None, Seq("key", "v"), Map("key" -> "id"))
-    assert(added.map(f => f -> head.colStats(f)).toMap === aggAdded._2)
+      Seq("key", "v"), Map("key" -> "id"))
+    assert(added.map(f => f -> head.colStats(f)).toMap === aggAdded)
     assert(TxLog.readWhereCol(spark, zone, "key", 25L, 27L).count() === 3L)
   }
 
@@ -182,17 +179,15 @@ class TxLogFooterStatsSpec extends SparkSpec {
       (3L, -0.0, null, null, true)
     ).toDF("id", "dbl", "ts", "dec", "flag").repartition(2)
     for (c <- Seq("dbl", "ts", "dec", "flag")) {
-      val (foot, _, _) = statsBothWays(df, None, Seq("id", c))
+      val (foot, _, _) = statsBothWays(df, Seq("id", c))
       assert(foot.isEmpty, s"$c must take the aggregation")
     }
     // dates outside 1583-9999 (calendar rebase, non-ISO widths) too
     val old = Seq((1L, Date.valueOf("1200-03-01")), (2L, Date.valueOf("2020-01-01")))
       .toDF("id", "d").coalesce(1)
-    val (footOld, aggOld, _) = statsBothWays(old, None, Seq("id", "d"))
+    val (footOld, aggOld, _) = statsBothWays(old, Seq("id", "d"))
     assert(footOld.isEmpty, "an out-of-range date must take the aggregation")
-    assert(aggOld._2.values.head("d").max.contains("2020-01-01"))
-    // a non-integral legacy column never comes from footers either
-    assert(statsBothWays(df.select($"id".cast("string").as("id")), Some("id"), Nil)._1.isEmpty)
+    assert(aggOld.values.head("d").max.contains("2020-01-01"))
     // committed through a zone: byte-identical to the aggregation
     val zone = freshRoot().toString + "/zone"
     TxLog.replace(spark, zone, df, statsCols = Seq("id", "dbl", "ts"))
@@ -200,16 +195,16 @@ class TxLogFooterStatsSpec extends SparkSpec {
     val root = new Path(zone).getFileSystem(conf).makeQualified(new Path(zone))
     val dir = new Path(root, head.files.head.takeWhile(_ != '/'))
     val agg = TxLog.aggregateFileStats(spark, root, dir, listed(root, dir), "parquet",
-      None, Seq("id", "dbl", "ts"))
-    assert(head.colStats === agg._2)
+      Seq("id", "dbl", "ts"))
+    assert(head.colStats === agg)
     assert(head.colStats.values.exists(_("dbl").max.contains("NaN")))
   }
 
   test("a row group whose string bounds parquet-mr dropped falls back to the aggregation") {
     val big = "x" * 5000 // above parquet-mr's 4 KiB statistics limit
     val df = Seq((1L, big), (2L, "short")).toDF("id", "str").coalesce(1)
-    val (foot, agg, _) = statsBothWays(df, None, Seq("id", "str"))
+    val (foot, agg, _) = statsBothWays(df, Seq("id", "str"))
     assert(foot.isEmpty, "missing min/max must not read as an all-null column")
-    assert(agg._2.values.head("str").max.contains(big))
+    assert(agg.values.head("str").max.contains(big))
   }
 }

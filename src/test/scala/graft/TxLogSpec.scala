@@ -149,33 +149,38 @@ class TxLogSpec extends SparkSpec {
     for (lo <- Seq(0L, 1000L, 2000L))
       TxLog.append(spark, zone,
         spark.range(lo, lo + 1000L).toDF("id").coalesce(2),
-        statsCol = Some("id"))
+        statsCols = Seq("id"))
     val head = TxLog.latest(spark, zone).get
-    assert(head.meta("stats.col") === "id")
-    // the gen-0 root file (empty, pre-log) has no stats and is never
-    // skipped; every APPENDED file carries stats
-    assert(head.stats.size === head.files.count(_.startsWith("d-")),
+    assert(head.meta("stats.cols") === "id")
+    // the gen-0 root file (empty, pre-log) has no stats; every APPENDED
+    // file carries them
+    val unstatted = head.files.filterNot(_.startsWith("d-"))
+    assert(unstatted.nonEmpty)
+    assert(head.colStats.keySet === head.files.filter(_.startsWith("d-")).toSet,
       "an appended data file is missing stats")
 
-    // the predicate touches ONLY the middle range's files
-    val keep = TxLog.prunedFiles(head, 1200d, 1300d)
-    assert(keep.size < head.files.size && keep.nonEmpty,
+    // the predicate touches ONLY the middle range's files, plus the
+    // unstatted gen-0 file, which is never skipped blind
+    val keep = TxLog.prunedFilesFor(head, "id", 1200L, 1300L)
+    assert(keep.size < head.files.size && keep.exists(_.startsWith("d-")),
       s"no skipping happened: ${keep.size} of ${head.files.size}")
-    assert(keep.forall(f => head.stats.get(f)
-      .forall { case (mn, mx) => mx >= 1200d && mn <= 1300d }))
+    assert(unstatted.forall(keep.contains), "an unstatted file was skipped")
+    assert(keep.flatMap(head.colStats.get).forall { m =>
+      m("id").max.get.toDouble >= 1200d && m("id").min.get.toDouble <= 1300d })
 
-    val got = TxLog.readWhere(spark, zone, 1200d, 1300d)
+    val got = TxLog.readWhereCol(spark, zone, "id", 1200L, 1300L)
       .select($"id").as[Long].collect().toSet
     assert(got === (1200L to 1300L).toSet, "pruned read lost or gained rows")
-    // a range beyond all stats reads nothing
-    assert(TxLog.readWhere(spark, zone, 10000d, 20000d).count() === 0L)
+    // a range beyond all stats reads nothing (only the empty gen-0 file)
+    assert(TxLog.prunedFilesFor(head, "id", 10000L, 20000L) === unstatted)
+    assert(TxLog.readWhereCol(spark, zone, "id", 10000L, 20000L).count() === 0L)
 
     // compaction recomputes stats for the rewritten files; skipping survives
     val c = TxLog.compact(spark, zone, targetBytes = 1L << 30)
     assert(c.rewritten)
     val afterHead = TxLog.latest(spark, zone).get
-    assert(afterHead.stats.nonEmpty, "compaction dropped the stats")
-    val got2 = TxLog.readWhere(spark, zone, 1200d, 1300d)
+    assert(afterHead.colStats.nonEmpty, "compaction dropped the stats")
+    val got2 = TxLog.readWhereCol(spark, zone, "id", 1200L, 1300L)
       .select($"id").as[Long].collect().toSet
     assert(got2 === (1200L to 1300L).toSet)
   }
@@ -238,7 +243,7 @@ class TxLogSpec extends SparkSpec {
       spark.range(0L).select(col("id"), col("id").as("v")).limit(0)
         .write.parquet(zone)
       TxLog.init(spark, zone)
-      TxLog.replace(spark, zone, df, statsCol = Some("v"))
+      TxLog.replace(spark, zone, df, statsCols = Seq("v"))
       zone
     }
     val clustered = build(rows.repartitionByRange(8, col("v"))
@@ -246,15 +251,15 @@ class TxLogSpec extends SparkSpec {
     val shuffled = build(rows.repartition(8))
     def touched(zone: String): Int = {
       val h = TxLog.latest(spark, zone).get
-      TxLog.prunedFiles(h, 100d, 150d).count(f => h.stats.contains(f))
+      TxLog.prunedFilesFor(h, "v", 100L, 150L).count(f => h.colStats.contains(f))
     }
     assert(touched(clustered) <= 2,
       s"clustered zone should prune to ~1 file, touched ${touched(clustered)}")
     assert(touched(shuffled) === 8, "shuffled layout cannot prune — every file overlaps")
     // both layouts return the identical exact result
     import spark.implicits._
-    val a = TxLog.readWhere(spark, clustered, 100d, 150d).select($"id").as[Long].collect().toSet
-    val b = TxLog.readWhere(spark, shuffled, 100d, 150d).select($"id").as[Long].collect().toSet
+    val a = TxLog.readWhereCol(spark, clustered, "v", 100L, 150L).select($"id").as[Long].collect().toSet
+    val b = TxLog.readWhereCol(spark, shuffled, "v", 100L, 150L).select($"id").as[Long].collect().toSet
     assert(a === b && a.nonEmpty)
   }
 
