@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Second-JVM writer for the cross-process TxLog OCC race spec: appends
+/** TEST FIXTURE, not an entry point: the forked-JVM writer that
+  * `TxLogRaceSpec` launches (it lives in main only so the child JVM finds
+  * it on the plain classpath). Appends
   * `n` one-row generations to `zone`, each tagged with this writer's
   * name, relying ONLY on the log's create-exclusive generation claim to
   * serialize against whatever other process is appending to the same

@@ -404,8 +404,7 @@ object AnnIndex {
     val keep = filesForCells(head, cells)
     val codes = (if (keep.isEmpty)
         TxLog.readSnapshot(spark, cz, head).filter(lit(false))
-      else TxLog.loadFiles(spark, head,
-        keep.map(f => cz.stripSuffix("/") + "/" + f)))
+      else TxLog.loadFiles(spark, cz, head, keep))
       .select(col(idCol), col("cent_id"), col("code").as("_code"))
     val corp = corpus.getOrElse(readSourceAt(spark, h))
     Similarity.knnJoinIvfInt8Codes(codes, corp, queries, h.centroids,
@@ -445,8 +444,7 @@ object AnnIndex {
     if (keep.isEmpty)
       return (spark.emptyDataFrame
         .select(lit(0L).as(idCol), lit(0.0).as("sim")).limit(0), pruning)
-    val codes = TxLog.loadFiles(spark, head,
-      keep.map(f => cz.stripSuffix("/") + "/" + f))
+    val codes = TxLog.loadFiles(spark, cz, head, keep)
       .filter(col("cent_id").isin(cells: _*))
     val qCode = Similarity.quantizeInt8(
       typedLit(qe.toSeq).cast("array<float>"), h.mins, h.maxs)

@@ -678,7 +678,8 @@ object Similarity {
     // memo's own meta-only commit advances the gen without touching data
     // (and so must any other DDL), while an append/replace/compact
     // changes the file set and correctly misses
-    val filesFp = md5hex(head.files.sorted.mkString("\n"))
+    // (a merge-on-read delete adds only a key file)
+    val filesFp = md5hex((head.files ++ head.keys.keys.map("k " + _)).sorted.mkString("\n"))
     if (head.meta.get(key("files")).contains(filesFp)
         && head.meta.get(key("conf")).contains(conf))
       return (head.meta(key("est")).toDouble, head.meta(key("pairs")).toLong)

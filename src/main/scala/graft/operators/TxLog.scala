@@ -43,14 +43,53 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *  - [[vacuum]] is the only deletion path, and it keeps the newest
   *    `keepGens` generations, so snapshots handed out up to `keepGens-1`
   *    publishes ago remain readable (time travel within the retention
-  *    window, like Delta's VACUUM).
+  *    window, like Delta's VACUUM) — their data files and their pending
+  *    key files alike.
+  *
+  * Merge-on-read (protocol 2; Iceberg v2 equality deletes on the merge
+  * key, Delta deletion vectors in spirit):
+  *  - A streaming keyed merge ([[mergeExactlyOnce]], [[changesExactlyOnce]]
+  *    and the sinks over them) writes the batch's upsert rows as new data
+  *    files and ONE key file — a `k-<uuid>/` Parquet file, sorted, holding
+  *    every key of the batch, upserts and tombstones alike — and publishes
+  *    both with the `batchId` mark in one generation. Nothing of the zone
+  *    is read or rewritten.
+  *  - The manifest records each pending key file with the generation
+  *    that committed it and its key bounds (`k ` lines; a delta drops
+  *    them with `x ` lines), and while any is pending, each data file's
+  *    DATA generation (`g ` lines; a file without one predates every
+  *    key file). A file's data generation is the generation that added
+  *    it — or, for a REWRITE (the fold, [[compact]], deletes,
+  *    [[commitRewrite]] under row-level SQL), the generation the rewrite
+  *    read (Iceberg's data sequence number). [[restore]] brings back the
+  *    target's key files and data generations with its files.
+  *  - LIVENESS: a row of data file F is live iff no pending key file
+  *    with a generation above F's data generation holds the row's key.
+  *    Every reader applies this once, through [[loadFiles]] (DataFrame
+  *    reads) or the DSv2 per-file reader's mask; rewrites are optimistic
+  *    — they publish only right after the generation they read, so a key
+  *    file landing mid-rewrite fails their claim and they recompute.
+  *  - THE FOLD: once the pending key files would reach the count of data
+  *    files that predate them ([[foldDue]]), the merge commits
+  *    copy-on-write instead: it rewrites every file a pending key file or
+  *    the batch can touch, range-clustered by the merge key, and drops
+  *    the key files. The batch [[merge]] always folds; [[compact]] folds
+  *    whatever the file count. Pending key files hold at most
+  *    [[MaxPendingKeys]] keys of an integral or string merge key (readers
+  *    hold them on the driver): a batch that would pass the bound, and
+  *    every merge on another key type, folds too.
+  *  - Protocol: a manifest carrying any of the new lines, or describing a
+  *    state with pending key files, is stamped `protocol=2`, which a v1
+  *    reader refuses; every other manifest stays `protocol=1`, so a zone
+  *    that never took a merge-on-read commit is written exactly as
+  *    before.
   *
   * Scale shape: a CHECKPOINT is O(live files) — at 100 TB with 128 MB
   * targets that is ~800k lines (~60 MB), read once per query plan on the
   * driver, never shuffled, and paid once per [[CheckpointInterval]]
   * commits rather than per commit (production formats shard checkpoints
   * past that point — Delta's multi-part checkpoint; the same refinement
-  * applies here). A streaming merge commit writes only its touched-file
+  * applies here). A streaming merge commit writes only its own files'
   * actions. Create-exclusive is atomic on HDFS and POSIX; an
   * eventually-consistent object store needs a conditional-put primitive
   * here (the same LogStore caveat Delta documents).
@@ -82,11 +121,53 @@ object TxLog {
                               * Manifests written before the field existed
                               * read back empty; readers fall back to a
                               * per-directory listing for uncovered files. */
-                            sizes: Map[String, (Long, Long)] = Map.empty) {
+                            sizes: Map[String, (Long, Long)] = Map.empty,
+                            /** pending key-delete files (zone-relative)
+                              * with their generations: merge-on-read
+                              * commits not yet folded into the data */
+                            keys: Map[String, KeyFile] = Map.empty,
+                            /** per-file DATA generation, recorded only
+                              * while key files are pending; a file
+                              * without an entry predates every pending
+                              * key file ([[NoDataGen]]) */
+                            dataGens: Map[String, Long] = Map.empty) {
     def resolve(zone: String): Seq[String] =
       files.map(f => zone.stripSuffix("/") + "/" + f)
     def baseGen: Long = if (base >= 0L) base else gen - 1L
+    def dataGen(file: String): Long = dataGens.getOrElse(file, NoDataGen)
+    /** True while merge-on-read deletes wait to be folded: manifest row
+      * counts then overcount the live rows. */
+    def pendingDeletes: Boolean = keys.nonEmpty
   }
+
+  /** One key-delete file: the generation that committed it and its key
+    * column's stats (bounds bound which data files it can mask). */
+  final case class KeyFile(gen: Long, stat: ColStat)
+
+  /** The data generation of a file with no recorded one: older than any
+    * key file. */
+  private[graft] val NoDataGen = -1L
+
+  /** Placeholder for "the generation this publish claims" in the key
+    * files and data generations handed to [[publish]], which substitutes
+    * the claimed number before anything is written. */
+  private val ThisGen = Long.MinValue
+
+  private def atGen(g: Long)(v: Long): Long = if (v == ThisGen) g else v
+
+  /** `s` as published at generation `g`: [[ThisGen]] placeholders
+    * resolved, data generations dropped when no key file is pending. */
+  private def publishedAs(s: Snapshot, g: Long): Snapshot = {
+    val keys = s.keys.map { case (p, k) => p -> k.copy(gen = atGen(g)(k.gen)) }
+    s.copy(gen = g, keys = keys,
+      dataGens = if (keys.isEmpty) Map.empty else s.dataGens.map { case (p, d) => p -> atGen(g)(d) })
+  }
+
+  /** The zone meta key naming the merge key the pending key files hold. */
+  private[graft] val MergeKeyMeta = "merge.key"
+
+  /** The single column of every key file. */
+  private val KeyFileCol = "key"
 
   /** `rewritten` false = no-op (already compact) or lost-race abort. */
   final case class CompactStats(gen: Long, filesBefore: Long, filesAfter: Long,
@@ -96,12 +177,16 @@ object TxLog {
   private val Header = "graft-txlog v1"
 
   /** Highest manifest protocol this reader/writer understands. Writers
-    * stamp it into every commit (`protocol=N`); readers REFUSE any
-    * manifest claiming a higher one — a future format must fail loudly,
-    * never be half-parsed as the fields this version happens to know
-    * (Delta's minReaderVersion contract). Manifests written before the
-    * stamp existed read as protocol 1. */
-  private[graft] val ProtocolVersion = 1L
+    * stamp every commit (`protocol=N`) with the lowest protocol that can
+    * read it: 2 when the manifest carries key-file or data-generation
+    * lines or describes a state with pending key deletes, else 1 — a
+    * zone that never took a merge-on-read commit stays readable by v1
+    * readers. Readers REFUSE any manifest claiming a higher protocol
+    * than theirs — a future format must fail loudly, never be
+    * half-parsed as the fields this version happens to know (Delta's
+    * minReaderVersion contract). Manifests written before the stamp
+    * existed read as protocol 1. */
+  private[graft] val ProtocolVersion = 2L
 
   /** Loud forward-compat refusal — deliberately NOT an IOException /
     * parse failure, so the torn-manifest recovery paths (which treat
@@ -251,9 +336,16 @@ object TxLog {
       adds: Vector[String], removes: Vector[String],
       meta: Map[String, String],
       colStats: Map[String, Map[String, ColStat]],
-      sizes: Map[String, (Long, Long)] = Map.empty) extends Commit {
+      sizes: Map[String, (Long, Long)] = Map.empty,
+      keyAdds: Map[String, KeyFile] = Map.empty,
+      keyRemoves: Vector[String] = Vector.empty,
+      dataGens: Map[String, Long] = Map.empty) extends Commit {
     def baseGen: Long = base
   }
+
+  /** The per-file line families, which carry no `=`-free kv shape. */
+  private def isLineFamily(l: String): Boolean =
+    l.length > 1 && l.charAt(1) == ' ' && "fstbrkgx".indexOf(l.charAt(0)) >= 0
 
   /** The generation number a manifest path CLAIMS via its filename; a
     * complete body whose recorded gen disagrees (e.g. a stray copy of
@@ -266,7 +358,11 @@ object TxLog {
     scala.util.Try(num.toLong).toOption
   }
 
-  private def readCommit(f: FileSystem, p: Path): Option[Commit] = {
+  /** Parse one manifest. `understands` is the highest protocol the
+    * reader accepts; only the compat spec passes a lower one, to read as
+    * a v1 reader would. */
+  private[graft] def readCommit(f: FileSystem, p: Path,
+                                understands: Long = ProtocolVersion): Option[Commit] = {
     val in = try f.open(p) catch { case _: java.io.IOException => return None }
     try {
       val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
@@ -300,17 +396,15 @@ object TxLog {
         scala.util.Try(raw.trim.toLong).getOrElse(
           throw new UnsupportedProtocolException(
             s"$p carries an unparseable txlog protocol value '$raw' (this " +
-              s"reader understands up to $ProtocolVersion) — upgrade the " +
+              s"reader understands up to $understands) — upgrade the " +
               "reader; refusing to half-parse a future manifest"))
       }.getOrElse(1L)
-      if (proto > ProtocolVersion)
+      if (proto > understands)
         throw new UnsupportedProtocolException(
           s"$p claims txlog protocol $proto; this reader understands up to " +
-            s"$ProtocolVersion — upgrade the reader; refusing to half-parse " +
+            s"$understands — upgrade the reader; refusing to half-parse " +
             "a future manifest")
-      val kv = body.filterNot(l =>
-        l.startsWith("f ") || l.startsWith("m ") || l.startsWith("s ") ||
-          l.startsWith("t ") || l.startsWith("r ") || l.startsWith("b ")).map { l =>
+      val kv = body.filterNot(l => isLineFamily(l) || l.startsWith("m ")).map { l =>
         val i = l.indexOf('='); (l.substring(0, i), l.substring(i + 1))
       }.toMap
       val gen = kv("gen").toLong
@@ -328,6 +422,10 @@ object TxLog {
       // "s <relpath>=<min>,<max>" — single-column doubles that older
       // writers emitted; still part of v1, so accepted, but no longer
       // written and ignored on read (such files are simply unpruned)
+      // protocol 2 adds:
+      // "k <relpath>=<gen>,<kind>,<rows>,<nulls>,<mn>,<mx>" key file
+      // "g <relpath>=<dataGen>"                   data generation
+      // "x <relpath>"                 key file dropped (delta only)
       def parsePerFile(b: Vector[String]) = {
         val cst = b.filter(_.startsWith("t ")).map { l =>
           val eq = l.indexOf('=', 2)
@@ -344,7 +442,17 @@ object TxLog {
           val Array(len, mt) = l.substring(i + 1).split(",", 2)
           (l.substring(2, i), (len.toLong, mt.toLong))
         }.toMap
-        (cst, sz, b.filter(_.startsWith("f ")).map(_.substring(2)))
+        val keys = b.filter(_.startsWith("k ")).map { l =>
+          val i = l.lastIndexOf('=')
+          val Array(g, kind, rows, nulls, mn, mx) = l.substring(i + 1).split(",", 6)
+          (l.substring(2, i),
+            KeyFile(g.toLong, ColStat(kind, rows.toLong, nulls.toLong, decV(mn), decV(mx))))
+        }.toMap
+        val dgens = b.filter(_.startsWith("g ")).map { l =>
+          val i = l.lastIndexOf('=')
+          (l.substring(2, i), l.substring(i + 1).toLong)
+        }.toMap
+        (cst, sz, b.filter(_.startsWith("f ")).map(_.substring(2)), keys, dgens)
       }
       // multi-part checkpoint: splice every shard's per-file lines in
       // BEFORE the completeness count check — a torn/missing shard makes
@@ -363,8 +471,7 @@ object TxLog {
             if (plines.isEmpty || plines.last != "end" ||
                 plines.head != Header) return None
             val pbody = plines.tail.init
-            val pkv = pbody.filterNot(l => l.startsWith("f ") ||
-                l.startsWith("s ") || l.startsWith("t ") || l.startsWith("b "))
+            val pkv = pbody.filterNot(isLineFamily)
               .map { l => val j = l.indexOf('='); (l.substring(0, j), l.substring(j + 1)) }
               .toMap
             // each shard carries its own protocol line and gets the same
@@ -374,38 +481,43 @@ object TxLog {
               val pv = scala.util.Try(raw.trim.toLong).getOrElse(
                 throw new UnsupportedProtocolException(
                   s"$pp carries an unparseable txlog protocol value '$raw' " +
-                    s"(this reader understands up to $ProtocolVersion) — " +
+                    s"(this reader understands up to $understands) — " +
                     "upgrade the reader; refusing to half-parse a future shard"))
-              if (pv > ProtocolVersion)
+              if (pv > understands)
                 throw new UnsupportedProtocolException(
                   s"$pp claims txlog protocol $pv; this reader understands " +
-                    s"up to $ProtocolVersion — upgrade the reader; refusing " +
+                    s"up to $understands — upgrade the reader; refusing " +
                     "to half-parse a future shard")
             }
             if (!pkv.get("gen").contains(gen.toString) ||
                 !pkv.get("part").contains(i.toString) ||
                 !pkv.get("parts").contains(n.toString)) return None
-            pbody.filter(l => l.startsWith("f ") || l.startsWith("s ") ||
-              l.startsWith("t ") || l.startsWith("b "))
+            pbody.filter(isLineFamily)
           }
         case None => Vector.empty
       }
-      val (colStats, sizes, files) = parsePerFile(body ++ partBody)
+      val (colStats, sizes, files, keys, dgens) = parsePerFile(body ++ partBody)
       val base = kv.get("base").map(_.toLong).getOrElse(-1L)
+      // key-file counts are written only when nonzero (v1 manifests
+      // carry none)
+      def count(k: String) = kv.get(k).map(_.toLong).getOrElse(0L)
       if (kv.get("kind").contains("delta")) {
         val removes = body.filter(_.startsWith("r ")).map(_.substring(2))
-        // completeness: BOTH counts must match (a truncated delta could
+        val keyRemoves = body.filter(_.startsWith("x ")).map(_.substring(2))
+        // completeness: EVERY count must match (a truncated delta could
         // otherwise drop its tail removes and resurrect deleted files)
         if (kv.get("addcount").map(_.toLong).contains(files.size.toLong) &&
             kv.get("rmcount").map(_.toLong).contains(removes.size.toLong) &&
+            count("kaddcount") == keys.size && count("krmcount") == keyRemoves.size &&
             base >= 0L)
           Some(DeltaCommit(gen, base, kv("format"), files.toVector,
-            removes.toVector, meta, colStats, sizes))
+            removes.toVector, meta, colStats, sizes, keys, keyRemoves.toVector, dgens))
         else None
       } else {
-        if (kv.get("count").map(_.toLong).contains(files.size.toLong))
+        if (kv.get("count").map(_.toLong).contains(files.size.toLong) &&
+            count("kcount") == keys.size)
           Some(FullCommit(Snapshot(gen, kv("format"), files, meta,
-            colStats, base = base, sizes = sizes)))
+            colStats, base = base, sizes = sizes, keys = keys, dataGens = dgens)))
         else None
       }
     } catch {
@@ -421,10 +533,14 @@ object TxLog {
     * stat entries cover exactly its added files. */
   private def applyDelta(s: Snapshot, d: DeltaCommit): Snapshot = {
     val rm = d.removes.toSet
+    val keys = (s.keys -- d.keyRemoves) ++ d.keyAdds
     Snapshot(d.gen, d.format,
       (s.files.filterNot(rm) ++ d.adds).distinct.sorted, d.meta,
       (s.colStats -- rm) ++ d.colStats,
-      base = d.base, sizes = (s.sizes -- rm) ++ d.sizes)
+      base = d.base, sizes = (s.sizes -- rm) ++ d.sizes,
+      keys = keys,
+      // data generations only mean something next to pending key files
+      dataGens = if (keys.isEmpty) Map.empty else (s.dataGens -- rm) ++ d.dataGens)
   }
 
   /** The complete state at generation `gen`: walk base pointers back
@@ -470,14 +586,16 @@ object TxLog {
     * correctness. */
   private def writeCheckpoint(f: FileSystem, zone: String, s: Snapshot): Unit =
     try {
-      val pf = perFileLines(s.files, s.colStats, s.sizes)
+      val pf = perFileLines(s.files, s.colStats, s.sizes, s.keys, s.dataGens)
       val shard = checkpointShardLines
+      val proto = protocolFor(s.pendingDeletes)
       if (pf.size <= shard) {
         tryCreate(f, chkPath(zone, s.gen)).foreach { out =>
           try out.write(manifestBody(delta = false, gen = s.gen,
             base = s.baseGen, format = s.format, files = s.files,
             removes = Nil, meta = s.meta,
-            colStats = s.colStats, sizes = s.sizes).getBytes("UTF-8"))
+            colStats = s.colStats, sizes = s.sizes,
+            keys = s.keys, dataGens = s.dataGens).getBytes("UTF-8"))
           finally out.close()
         }
       } else {
@@ -491,7 +609,7 @@ object TxLog {
         pf.grouped(shard).zipWithIndex.foreach { case (chunk, idx) =>
           tryCreate(f, chpPath(zone, s.gen, idx + 1, n)).foreach { out =>
             val b = new StringBuilder(Header).append('\n')
-              .append("protocol=").append(ProtocolVersion).append('\n')
+              .append("protocol=").append(proto).append('\n')
               .append("gen=").append(s.gen).append('\n')
               .append("part=").append(idx + 1).append('\n')
               .append("parts=").append(n).append('\n')
@@ -502,12 +620,13 @@ object TxLog {
         }
         tryCreate(f, chkPath(zone, s.gen)).foreach { out =>
           val b = new StringBuilder(Header).append('\n')
-            .append("protocol=").append(ProtocolVersion).append('\n')
+            .append("protocol=").append(proto).append('\n')
             .append("gen=").append(s.gen).append('\n')
             .append("base=").append(s.baseGen).append('\n')
             .append("format=").append(s.format).append('\n')
             .append("parts=").append(n).append('\n')
             .append("count=").append(s.files.size).append('\n')
+          if (s.keys.nonEmpty) b.append("kcount=").append(s.keys.size).append('\n')
           s.meta.toSeq.sortBy(_._1).foreach { case (k, v) =>
             b.append("m ").append(k).append('=').append(v).append('\n') }
           b.append("end\n")
@@ -575,41 +694,60 @@ object TxLog {
       case _: java.io.IOException => Owned
     }
 
+  /** The protocol a manifest is stamped with: 2 only when it carries
+    * the merge-on-read line families (or describes a state with pending
+    * key deletes), so a v1 reader refuses exactly what it cannot read. */
+  private def protocolFor(mergeOnRead: Boolean): Long = if (mergeOnRead) 2L else 1L
+
   /** Serialize one manifest body. A FULL manifest (`delta = false`)
-    * lists every live file with its stats; a DELTA commit lists only
-    * `files` = the generation's ADDED files (with their stats) and
-    * `removes` = the files it dropped, each count pinned so a truncated
-    * tail can never parse as complete. */
+    * lists every live file with its stats, plus the pending key files;
+    * a DELTA commit lists only `files` = the generation's ADDED files
+    * (with their stats), `removes` = the files it dropped, and the key
+    * files it added (`keys`) and dropped (`keyRemoves`), each count
+    * pinned so a truncated tail can never parse as complete. */
   private def manifestBody(delta: Boolean, gen: Long, base: Long,
                            format: String, files: Seq[String],
                            removes: Seq[String], meta: Map[String, String],
                            colStats: Map[String, Map[String, ColStat]],
-                           sizes: Map[String, (Long, Long)] = Map.empty): String = {
+                           sizes: Map[String, (Long, Long)] = Map.empty,
+                           keys: Map[String, KeyFile] = Map.empty,
+                           keyRemoves: Seq[String] = Nil,
+                           dataGens: Map[String, Long] = Map.empty,
+                           pendingDeletes: Boolean = false): String = {
     val body = new StringBuilder(Header).append('\n')
-      .append("protocol=").append(ProtocolVersion).append('\n')
+      .append("protocol=").append(protocolFor(pendingDeletes || keys.nonEmpty ||
+        keyRemoves.nonEmpty || dataGens.nonEmpty)).append('\n')
       .append("gen=").append(gen).append('\n')
       .append("base=").append(base).append('\n')
     if (delta) body.append("kind=delta\n")
     body.append("format=").append(format).append('\n')
-    if (delta)
+    if (delta) {
       body.append("addcount=").append(files.size).append('\n')
         .append("rmcount=").append(removes.size).append('\n')
-    else
+      if (keys.nonEmpty) body.append("kaddcount=").append(keys.size).append('\n')
+      if (keyRemoves.nonEmpty) body.append("krmcount=").append(keyRemoves.size).append('\n')
+    } else {
       body.append("count=").append(files.size).append('\n')
+      if (keys.nonEmpty) body.append("kcount=").append(keys.size).append('\n')
+    }
     meta.toSeq.sortBy(_._1).foreach { case (k, v) =>
       body.append("m ").append(k).append('=').append(v).append('\n') }
-    perFileLines(files, colStats, sizes)
+    perFileLines(files, colStats, sizes, keys, dataGens)
       .foreach(l => body.append(l).append('\n'))
     removes.sorted.foreach(fl => body.append("r ").append(fl).append('\n'))
+    keyRemoves.sorted.foreach(fl => body.append("x ").append(fl).append('\n'))
     body.append("end\n")
     body.toString
   }
 
-  /** The per-file line families (t/b/f), rendered in the canonical
-    * order — the unit multi-part checkpoints shard on. */
+  /** The per-file line families (t/b/f, and k/g while key deletes are
+    * pending), rendered in the canonical order — the unit multi-part
+    * checkpoints shard on. */
   private[graft] def perFileLines(files: Seq[String],
                            colStats: Map[String, Map[String, ColStat]],
-                           sizes: Map[String, (Long, Long)]): Vector[String] = {
+                           sizes: Map[String, (Long, Long)],
+                           keys: Map[String, KeyFile] = Map.empty,
+                           dataGens: Map[String, Long] = Map.empty): Vector[String] = {
     val out = Vector.newBuilder[String]
     colStats.toSeq.sortBy(_._1).foreach { case (file, perCol) =>
       perCol.toSeq.sortBy(_._1).foreach { case (c, st) =>
@@ -617,6 +755,10 @@ object TxLog {
           s"${encV(st.min)},${encV(st.max)}" } }
     sizes.toSeq.sortBy(_._1).foreach { case (file, (len, mt)) =>
       out += s"b $file=$len,$mt" }
+    keys.toSeq.sortBy(_._1).foreach { case (file, KeyFile(g, st)) =>
+      out += s"k $file=$g,${st.kind},${st.rows},${st.nulls}," +
+        s"${encV(st.min)},${encV(st.max)}" }
+    dataGens.toSeq.sortBy(_._1).foreach { case (file, g) => out += s"g $file=$g" }
     files.sorted.foreach(fl => out += s"f $fl")
     out.result()
   }
@@ -671,7 +813,9 @@ object TxLog {
                       meta: Map[String, String] = Map.empty,
                       colStats: Map[String, Map[String, ColStat]] = Map.empty,
                       base: Option[Snapshot] = None,
-                      sizes: Map[String, (Long, Long)] = Map.empty): Option[Long] = {
+                      sizes: Map[String, (Long, Long)] = Map.empty,
+                      keys0: Map[String, KeyFile] = Map.empty,
+                      dataGens0: Map[String, Long] = Map.empty): Option[Long] = {
     require(meta.forall { case (k, v) =>
       !k.contains('=') && !(k + v).exists(c => c == '\n' || c == '\r') },
       s"manifest meta keys must be =-free and values newline-free: $meta")
@@ -721,6 +865,12 @@ object TxLog {
       f.delete(genPath(zone, g), false)
       return None
     }
+    // the claimed number is now known: stamp it into this commit's key
+    // files and data generations
+    val keys = keys0.map { case (p, k) => p -> k.copy(gen = atGen(g)(k.gen)) }
+    val dataGens =
+      if (keys.isEmpty) Map.empty[String, Long]
+      else dataGens0.map { case (p, d) => p -> atGen(g)(d) }
     try {
       // DELTA ENCODING: commit metadata must be O(touched files), never
       // O(table) — at a streaming merge sink's cadence a full-snapshot
@@ -736,15 +886,19 @@ object TxLog {
           val removes = b.files.filterNot(nextSet)
           if (adds.size + removes.size >= files.size)
             manifestBody(delta = false, g, baseGen, format, files, Nil,
-              meta, colStats, sizes)
+              meta, colStats, sizes, keys, dataGens = dataGens)
           else
             manifestBody(delta = true, g, baseGen, format, adds, removes,
               meta,
               colStats.filter { case (k, _) => !baseSet(k) || !b.colStats.get(k).contains(colStats(k)) },
-              sizes.filter { case (k, _) => !baseSet(k) || !b.sizes.get(k).contains(sizes(k)) })
+              sizes.filter { case (k, _) => !baseSet(k) || !b.sizes.get(k).contains(sizes(k)) },
+              keys.filter { case (k, v) => !b.keys.get(k).contains(v) },
+              b.keys.keys.filterNot(keys.contains).toSeq,
+              dataGens.filter { case (k, v) => !b.dataGens.get(k).contains(v) },
+              pendingDeletes = keys.nonEmpty)
         case None =>
           manifestBody(delta = false, g, baseGen, format, files, Nil,
-            meta, colStats, sizes)
+            meta, colStats, sizes, keys, dataGens = dataGens)
       }
       out.write(body.getBytes("UTF-8"))
     } finally out.close()
@@ -773,7 +927,7 @@ object TxLog {
       // and best-effort: a crash here only lengthens chains.
       if (g > 0L && g % CheckpointInterval == 0L)
         writeCheckpoint(f, zone, Snapshot(g, format, files, meta,
-          colStats, base = baseGen, sizes = sizes))
+          colStats, base = baseGen, sizes = sizes, keys = keys, dataGens = dataGens))
       Some(g)
     }
   }
@@ -918,12 +1072,18 @@ object TxLog {
         newColStats.filter { case (p, _) => newSet(p) }
     val nextSizes =
       head.sizes.filter { case (p, _) => !removedSet(p) } ++ newInfo.toMap
+    // the replacement rows were read through the pending deletes of
+    // `head`: stamped with its generation, only key files committed
+    // after it can mask them
+    val nextGens = (head.dataGens -- removed) ++ newFiles.map(_ -> head.gen)
     publish(spark, zone, head.gen + 1, head.format, nextFiles,
       head.meta ++ Map("op" -> op), nextColStats,
-      base = Some(head), sizes = nextSizes) match {
+      base = Some(head), sizes = nextSizes,
+      keys0 = head.keys, dataGens0 = nextGens) match {
       case Some(g) =>
-        Snapshot(g, head.format, nextFiles, head.meta ++ Map("op" -> op),
-          nextColStats, base = head.gen, sizes = nextSizes)
+        publishedAs(Snapshot(g, head.format, nextFiles, head.meta ++ Map("op" -> op),
+          nextColStats, base = head.gen, sizes = nextSizes, keys = head.keys,
+          dataGens = nextGens), g)
       case None =>
         // a rival landed between the check and the claim
         abortMoved(latest(spark, zone).map(_.gen).getOrElse(-1L))
@@ -954,10 +1114,12 @@ object TxLog {
       val m = head.meta ++ updatesFor(head) ++ Map("op" -> op)
       val cst = statsFor(head).getOrElse(head.colStats)
       publish(spark, zone, head.gen + 1, head.format, head.files, m,
-        cst, base = Some(head), sizes = head.sizes) match {
+        cst, base = Some(head), sizes = head.sizes,
+        keys0 = head.keys, dataGens0 = head.dataGens) match {
         case Some(g) =>
           return Snapshot(g, head.format, head.files, m,
-            cst, base = head.gen, sizes = head.sizes)
+            cst, base = head.gen, sizes = head.sizes,
+            keys = head.keys, dataGens = head.dataGens)
         case None => ()
       }
       attempt += 1
@@ -1056,10 +1218,14 @@ object TxLog {
             if (c == from) to else c).mkString(","))
         case _ => Map.empty[String, String]
       }
+      // the pending key files hold values, not names: they follow the key
+      val mergeKeyMeta =
+        if (head.meta.get(MergeKeyMeta).contains(from)) Map(MergeKeyMeta -> to)
+        else Map.empty[String, String]
       Map("schema" -> newSchema.json,
         "colmap" -> encodeColMap(nextMap),
         "colmap.used" -> nextUsed.toSeq.sorted.map(encName).mkString(",")) ++
-        statsColsMeta
+        statsColsMeta ++ mergeKeyMeta
     }
     commitMeta(spark, zone, "rename-column", updates,
       // stats are LOGICAL-keyed: re-key this column's entries so pruning
@@ -1082,6 +1248,10 @@ object TxLog {
         s"txlog dropColumn: no column '$name' in ${current.fieldNames.mkString(", ")}")
       require(current.fields.length > 1,
         s"txlog dropColumn: cannot drop the last column '$name'")
+      val isMergeKey = head.meta.get(MergeKeyMeta).contains(name)
+      require(!isMergeKey || !head.pendingDeletes,
+        s"txlog dropColumn: '$name' is the merge key of pending key deletes — " +
+          "fold them with TxLog.compact first")
       val cmap = colMap(head.meta)
       val phys = cmap.getOrElse(name, name)
       val nextUsed = usedPhysical(head.meta) + phys
@@ -1095,7 +1265,8 @@ object TxLog {
       Map("schema" -> newSchema.json,
         "colmap" -> encodeColMap(cmap - name),
         "colmap.used" -> nextUsed.toSeq.sorted.map(encName).mkString(",")) ++
-        statsColsMeta
+        statsColsMeta ++
+        (if (isMergeKey) Map(MergeKeyMeta -> "") else Map.empty[String, String])
     }
     commitMeta(spark, zone, "drop-column", updates,
       statsFor = head => Some(head.colStats.map { case (file, perCol) =>
@@ -1182,12 +1353,11 @@ object TxLog {
     }
 
   /** Read a SPECIFIC snapshot — stable under concurrent publishes, valid
-    * until `vacuum` retention passes it. */
-  def readSnapshot(spark: SparkSession, zone: String, s: Snapshot): DataFrame = {
-    val paths = s.resolve(zone)
-    if (paths.isEmpty) spark.emptyDataFrame
-    else loadFiles(spark, s, paths)
-  }
+    * until `vacuum` retention passes it. Pending key deletes are applied
+    * ([[loadFiles]]). */
+  def readSnapshot(spark: SparkSession, zone: String, s: Snapshot): DataFrame =
+    if (s.files.isEmpty) spark.emptyDataFrame
+    else loadFiles(spark, zone, s, s.files)
 
   // ---- schema tracking / evolution -----------------------------------------
 
@@ -1262,22 +1432,289 @@ object TxLog {
 
   private val ColMapMetaKeys = Seq("colmap", "colmap.used")
 
-  /** Load data files under a snapshot's tracked schema (Delta-style: the
-    * schema lives in the LOG, so an evolved zone never pays per-file
-    * footer merging — `mergeSchema` at 100 TB reads every footer on
-    * every plan; this reads none). Files written before a column was
-    * added simply surface it as null. Falls back to source inference for
-    * pre-tracking zones. Under a column mapping the files are requested
-    * by PHYSICAL name and the frame surfaces logical names (a pure
-    * positional rename — zero cost in the plan). */
-  private[graft] def loadFiles(spark: SparkSession, s: Snapshot,
-                               paths: Seq[String]): DataFrame = {
+  /** Load the zone-relative data files `relFiles` of snapshot `s` under
+    * its tracked schema (Delta-style: the schema lives in the LOG, so an
+    * evolved zone never pays per-file footer merging — `mergeSchema` at
+    * 100 TB reads every footer on every plan; this reads none). Files
+    * written before a column was added simply surface it as null. Falls
+    * back to source inference for pre-tracking zones. Under a column
+    * mapping the files are requested by PHYSICAL name and the frame
+    * surfaces logical names (a pure positional rename — zero cost in the
+    * plan).
+    *
+    * This is the one place DataFrame readers apply merge-on-read
+    * deletes: a row of file F is live iff no pending key file with a
+    * generation above F's data generation holds its key. The pending keys
+    * are read on the driver ([[pendingKeyGens]], cached per immutable key
+    * file, no Spark job) and tested as one hash-set membership per key
+    * generation ([[keyIn]]), so the data is never shuffled. With no
+    * pending key file the plan is the plain scan. */
+  private[graft] def loadFiles(spark: SparkSession, zone: String, s: Snapshot,
+                               relFiles: Seq[String]): DataFrame = {
     val r = spark.read.format(s.format)
-    val df = physicalSchema(s).fold(r)(r.schema).load(paths: _*)
+    val raw = physicalSchema(s).fold(r)(r.schema)
+      .load(relFiles.map(p => zone.stripSuffix("/") + "/" + p): _*)
     val logical = zoneSchema(s)
-    if (logical.exists(_.fieldNames.toSeq != df.columns.toSeq))
-      df.toDF(logical.get.fieldNames.toIndexedSeq: _*)
-    else df
+    val df =
+      if (logical.exists(_.fieldNames.toSeq != raw.columns.toSeq))
+        raw.toDF(logical.get.fieldNames.toIndexedSeq: _*)
+      else raw
+    val masks = maskingKeys(s, relFiles)
+    if (masks.isEmpty) df
+    else {
+      import org.apache.spark.sql.functions.{coalesce, lit}
+      val fileGens = relFiles.map(s.dataGen).distinct
+      // files of one data generation (the usual read: base files, or one
+      // batch) need no per-row lookup
+      val dataGen =
+        if (fileGens.size == 1) lit(fileGens.head)
+        else fileGen(relFiles.map(f => f -> s.dataGen(f)))
+      // one membership set per key generation: a row is masked iff its
+      // key is in the set of a generation above its file's
+      val masked = pendingKeyGens(spark, zone, s, masks).groupBy(_._2).toSeq.map {
+        case (g, kg) => (dataGen < lit(g)) && keyIn(df, mergeKeyOf(s), kg.keys)
+      }
+      // a null key is in no set
+      if (masked.isEmpty) df else df.filter(coalesce(!masked.reduce(_ || _), lit(true)))
+    }
+  }
+
+  /** `df`'s `key` is one of the Catalyst `keys` (false for a null key).
+    * The set rides in the task closure of a UDF, not in the plan as
+    * literals: an `InSet` renders every key, sorted, each time the plan
+    * is described — a read of a 400k-row zone with 200k pending keys took
+    * 4.3-5.0 s that way and 0.9-1.1 s this way (4-vCPU VM). */
+  private def keyIn(df: DataFrame, key: String, keys: Iterable[Any]): org.apache.spark.sql.Column = {
+    val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(df.schema(key).dataType)
+    val set = keys.iterator.map(toScala).toSet
+    org.apache.spark.sql.functions.udf(new org.apache.spark.sql.api.java.UDF1[Any, Boolean] {
+      def call(k: Any): Boolean = k != null && set.contains(k)
+    }, org.apache.spark.sql.types.BooleanType)(df.col(key))
+  }
+
+  /** Most keys a zone holds in pending key files, and so most keys one
+    * merge-on-read batch writes: every read holds them on the driver and
+    * ships them to each task as a hash set ([[keyIn]]). At this bound a
+    * read of a 400k-row zone took 0.29-0.36 s for one key and 0.41-0.50 s
+    * for a full count, against 0.18-0.21 s and 0.31-0.39 s with 1k
+    * pending keys (4-vCPU VM). A batch that would go past it folds
+    * instead ([[mergeOnReadWrite]]), so the writers keep every generation
+    * within it. */
+  private[graft] val MaxPendingKeys = 50000
+
+  /** Key types the key files' driver codec ([[KeyFileCache]]) reads and
+    * writes; a merge on any other key type always folds ([[mergeImpl]]). */
+  private def driverKeyType(dt: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case LongType | IntegerType | ShortType | ByteType | StringType => true
+      case _ => false
+    }
+  }
+
+  /** The batch's keys (`keys`: one column) in Catalyst form, from ONE
+    * Spark job over the batch's own partitions — or None when it holds
+    * more than [[MaxPendingKeys]]: each task returns at most one key past
+    * the bound and the driver stops keeping them once past it. */
+  private def collectBatchKeys(keys: DataFrame): Option[Array[Any]] = {
+    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(keys.schema.head.dataType)
+    val limit = MaxPendingKeys + 1
+    val kept = scala.collection.mutable.ArrayBuffer.empty[Any]
+    var seen = 0L
+    keys.sparkSession.sparkContext.runJob(
+      keys.rdd.mapPartitions(_.take(limit).map(_.get(0))),
+      (it: Iterator[Any]) => it.toArray,
+      (_: Int, part: Array[Any]) => {
+        seen += part.length
+        if (seen <= MaxPendingKeys) kept ++= part
+      })
+    if (seen > MaxPendingKeys) None else Some(kept.iterator.map(toCatalyst).toArray)
+  }
+
+  /** Non-null Catalyst keys of a [[driverKeyType]], in key order. */
+  private def sortKeys(keys: Array[Any]): Array[Any] =
+    keys.sortWith { (a, b) => (a, b) match {
+      case (x: org.apache.spark.unsafe.types.UTF8String,
+            y: org.apache.spark.unsafe.types.UTF8String) => x.compareTo(y) < 0
+      case (x, y) => x.asInstanceOf[Number].longValue < y.asInstanceOf[Number].longValue
+    } }
+
+  /** Write the batch's `sorted` keys ([[sortKeys]]) of the merge key's
+    * `keyType` as ONE key file under `keyDir`, on the driver, returning
+    * its zone-relative path and key stats; the file then sits in
+    * [[KeyFileCache]] for the reads that follow. */
+  private def writeKeyFile(spark: SparkSession, zone: String, keyDir: Path,
+                           keyType: org.apache.spark.sql.types.DataType,
+                           sorted: Array[Any]): (String, ColStat) = {
+    import org.apache.spark.sql.types.StringType
+    val rel = keyDir.getName + "/part-00000-" + UUID.randomUUID() + "-c000.parquet"
+    val path = new Path(zone.stripSuffix("/") + "/" + rel)
+    KeyFileCache.write(spark.sparkContext.hadoopConfiguration, path, keyType, sorted)
+    // rendered like the data files' footer stats
+    val render: Any => String =
+      if (keyType == StringType) _.toString
+      else v => java.lang.Double.toString(v.asInstanceOf[Number].longValue.toDouble)
+    rel -> ColStat(if (keyType == StringType) "str" else "num", sorted.length.toLong, 0L,
+      sorted.headOption.map(render), sorted.lastOption.map(render))
+  }
+
+  /** Each key of the key files `masks` with the highest generation among
+    * the files holding it, in Catalyst form, read on the driver — no
+    * Spark job. The writers keep a zone within [[MaxPendingKeys]] and
+    * [[driverKeyType]]; a generation outside them (a hand-made manifest)
+    * is refused, naming the fold that clears it. */
+  private[graft] def pendingKeyGens(spark: SparkSession, zone: String, s: Snapshot,
+                                    masks: Map[String, KeyFile]): Map[Any, Long] = {
+    val rows = masks.valuesIterator.map(_.stat.rows).sum
+    val keyType = mergeKeyType(s)
+    if (rows > MaxPendingKeys || !driverKeyType(keyType))
+      throw new UnsupportedOperationException(
+        s"txlog: $zone has $rows pending key deletes on a ${keyType.simpleString} key; " +
+          s"readers apply at most $MaxPendingKeys integral or string keys — " +
+          "fold them with TxLog.compact")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val out = scala.collection.mutable.HashMap.empty[Any, Long]
+    masks.foreach { case (rel, kf) =>
+      KeyFileCache.keys(conf, new Path(zone.stripSuffix("/") + "/" + rel), kf.stat.rows, keyType)
+        .foreach(k => if (out.get(k).forall(_ < kf.gen)) out(k) = kf.gen)
+    }
+    out.toMap
+  }
+
+  private def mergeKeyType(s: Snapshot): org.apache.spark.sql.types.DataType = {
+    val key = mergeKeyOf(s)
+    zoneSchema(s).flatMap(_.fields.find(_.name == key)).map(_.dataType)
+      .getOrElse(sys.error(s"txlog: merge key '$key' is not in the schema of " +
+        s"generation ${s.gen} — fold the pending deletes with TxLog.compact"))
+  }
+
+  /** Key files' keys read and written on the driver with parquet-mr
+    * ([[driverKeyType]]s only), kept in a small LRU holding at most
+    * [[MaxPendingKeys]] keys — one zone's pending deletes: a key file is
+    * immutable and uniquely named, so each is read once while its
+    * deletes are pending, not once per read. */
+  private object KeyFileCache {
+    private val cache = new java.util.LinkedHashMap[String, Array[Any]](16, 0.75f, true)
+    private var cached = 0L
+
+    private def idOf(conf: org.apache.hadoop.conf.Configuration, path: Path,
+                     keyType: org.apache.spark.sql.types.DataType) =
+      s"${path.getFileSystem(conf).makeQualified(path)}|$keyType"
+
+    private def remember(id: String, keys: Array[Any]): Unit = synchronized {
+      if (cache.put(id, keys) == null) cached += keys.length
+      val it = cache.entrySet().iterator()
+      while (cached > MaxPendingKeys && it.hasNext) {
+        val e = it.next()
+        if (e.getKey != id) { cached -= e.getValue.length; it.remove() }
+      }
+    }
+
+    /** Write `sorted` (non-null Catalyst keys of `keyType`) as a
+      * one-column Parquet key file, and remember them. */
+    def write(conf: org.apache.hadoop.conf.Configuration, path: Path,
+              keyType: org.apache.spark.sql.types.DataType, sorted: Array[Any]): Unit = {
+      import org.apache.parquet.example.data.simple.SimpleGroupFactory
+      import org.apache.parquet.hadoop.example.ExampleParquetWriter
+      import org.apache.parquet.io.api.Binary
+      import org.apache.parquet.schema.MessageTypeParser
+      import org.apache.spark.sql.types.{ByteType, LongType, ShortType, StringType}
+      val field = keyType match {
+        case LongType => s"required int64 $KeyFileCol"
+        case StringType => s"required binary $KeyFileCol (STRING)"
+        case ByteType => s"required int32 $KeyFileCol (INTEGER(8,true))"
+        case ShortType => s"required int32 $KeyFileCol (INTEGER(16,true))"
+        case _ => s"required int32 $KeyFileCol"
+      }
+      val schema = MessageTypeParser.parseMessageType(s"message spark_schema { $field; }")
+      val groups = new SimpleGroupFactory(schema)
+      val w = ExampleParquetWriter.builder(path).withConf(conf).withType(schema).build()
+      try sorted.foreach { k =>
+        val g = groups.newGroup()
+        k match {
+          case s: org.apache.spark.unsafe.types.UTF8String =>
+            g.append(KeyFileCol, Binary.fromConstantByteArray(s.getBytes))
+          case l: java.lang.Long => g.append(KeyFileCol, l.longValue)
+          case n: Number => g.append(KeyFileCol, n.intValue)
+        }
+        w.write(g)
+      } finally w.close()
+      remember(idOf(conf, path, keyType), sorted)
+    }
+
+    /** The keys in Catalyst form of `keyType`, a [[driverKeyType]]. */
+    def keys(conf: org.apache.hadoop.conf.Configuration, path: Path, rows: Long,
+             keyType: org.apache.spark.sql.types.DataType): Array[Any] = {
+      import org.apache.spark.sql.types.{ByteType, LongType, ShortType, StringType}
+      val id = idOf(conf, path, keyType)
+      synchronized { Option(cache.get(id)) }.filter(_.length == rows).getOrElse {
+        val decode: Any => Any = keyType match {
+          case LongType => v => v.asInstanceOf[Number].longValue
+          case ShortType => v => v.asInstanceOf[Number].shortValue
+          case ByteType => v => v.asInstanceOf[Number].byteValue
+          case StringType => v => v
+          case _ => v => v.asInstanceOf[Number].intValue
+        }
+        import org.apache.parquet.hadoop.ParquetReader
+        import org.apache.parquet.hadoop.example.GroupReadSupport
+        import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT64}
+        val reader = ParquetReader.builder(new GroupReadSupport(), path).withConf(conf).build()
+        val buf = scala.collection.mutable.ArrayBuffer.empty[Any]
+        try {
+          var g = reader.read()
+          while (g != null) {
+            buf += decode(g.getType.getType(0).asPrimitiveType.getPrimitiveTypeName match {
+              case INT64 => g.getLong(0, 0)
+              case BINARY => org.apache.spark.unsafe.types.UTF8String.fromBytes(g.getBinary(0, 0).getBytes)
+              case _ => g.getInteger(0, 0)
+            })
+            g = reader.read()
+          }
+        } finally reader.close()
+        val keys = buf.toArray
+        remember(id, keys)
+        keys
+      }
+    }
+  }
+
+  /** The pending key files that can mask a row of some file in
+    * `relFiles`: those committed after the oldest file's data. */
+  private[graft] def maskingKeys(s: Snapshot, relFiles: Seq[String]): Map[String, KeyFile] =
+    if (s.keys.isEmpty || relFiles.isEmpty) Map.empty
+    else {
+      val oldest = relFiles.iterator.map(s.dataGen).min
+      s.keys.filter(_._2.gen > oldest)
+    }
+
+  /** The logical merge key the pending key files hold. */
+  private[graft] def mergeKeyOf(s: Snapshot): String =
+    s.meta.get(MergeKeyMeta).filter(_.nonEmpty).getOrElse(sys.error(
+      s"txlog: generation ${s.gen} has pending key files but no '$MergeKeyMeta' — " +
+        "the manifest is corrupt"))
+
+  /** A per-row generation looked up from the row's file: the map is keyed
+    * by the file's last two path components (`d-<id>/<part file>`,
+    * unique per write), since `input_file_name` is the absolute URI.
+    * Files without an entry read as [[NoDataGen]]. */
+  private def fileGen(gens: Seq[(String, Long)]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{coalesce, element_at, input_file_name, lit, substring_index, typedLit}
+    def lastTwo(p: String) = p.split('/').takeRight(2).mkString("/")
+    coalesce(element_at(typedLit(gens.map { case (p, g) => lastTwo(p) -> g }.toMap),
+      substring_index(input_file_name(), "/", -2)), lit(NoDataGen))
+  }
+
+  /** The pending deletes that can mask `relFiles`, for a per-row reader:
+    * the logical merge key and each masked key's highest key-file
+    * generation ([[pendingKeyGens]], the same keys [[loadFiles]]
+    * applies). None when no key file masks these files. */
+  private[graft] def collectedMask(spark: SparkSession, zone: String, s: Snapshot,
+                                   relFiles: Seq[String]): Option[(String, Map[Any, Long])] = {
+    val masks = maskingKeys(s, relFiles)
+    if (masks.isEmpty) None
+    else Some((mergeKeyOf(s), pendingKeyGens(spark, zone, s, masks)))
   }
 
   /** Merge an incoming write's schema into the zone's: matched columns
@@ -1632,14 +2069,15 @@ object TxLog {
         (head.files ++ added).distinct.sorted,
         head.meta ++ statsMeta ++ schemaMeta ++ meta ++ Map("op" -> "append"),
         head.colStats ++ addedColStats,
-        base = head.gen, sizes = head.sizes ++ addedInfo.toMap)
+        base = head.gen, sizes = head.sizes ++ addedInfo.toMap,
+        keys = head.keys, dataGens = head.dataGens ++ added.map(_ -> ThisGen))
       publish(spark, zone, next.gen, next.format, next.files, next.meta,
         next.colStats, base = Some(head),
-        sizes = next.sizes) match {
+        sizes = next.sizes, keys0 = next.keys, dataGens0 = next.dataGens) match {
         // base stays head.gen even when publish skip-forwarded past a
         // corpse (g > head.gen + 1) — it names the REBASED head, exactly
         // what the on-disk manifest records
-        case Some(g) => return Some(next.copy(gen = g))
+        case Some(g) => return Some(publishedAs(next, g))
         case None => ()
       }
       attempt += 1
@@ -1723,7 +2161,7 @@ object TxLog {
     if (keep.isEmpty)
       readSnapshot(spark, zone, head).filter(org.apache.spark.sql.functions.lit(false))
     else {
-      val df = loadFiles(spark, head, keep.map(f => zone.stripSuffix("/") + "/" + f))
+      val df = loadFiles(spark, zone, head, keep)
       df.filter(nativeRangePred(df, column, lo, hi))
     }
   }
@@ -1746,7 +2184,7 @@ object TxLog {
     if (keep.isEmpty)
       readSnapshot(spark, zone, head).filter(org.apache.spark.sql.functions.lit(false))
     else {
-      val df = loadFiles(spark, head, keep.map(f => zone.stripSuffix("/") + "/" + f))
+      val df = loadFiles(spark, zone, head, keep)
       df.filter(preds.map { case (c, lo, hi) => nativeRangePred(df, c, lo, hi) }
         .reduce(_ && _))
     }
@@ -1766,7 +2204,7 @@ object TxLog {
     }
     if (keep.isEmpty)
       readSnapshot(spark, zone, head).filter(org.apache.spark.sql.functions.lit(false))
-    else loadFiles(spark, head, keep.map(f => zone.stripSuffix("/") + "/" + f))
+    else loadFiles(spark, zone, head, keep)
       .filter(col(column).isNotNull)
   }
 
@@ -1837,7 +2275,7 @@ object TxLog {
       // zone's schema IS the replacement frame's (the retype path the
       // append-side merge guard points at). The column mapping resets
       // with it — the rewrite wrote logical names everywhere.
-      val m = (head.meta -- ColMapMetaKeys) ++ statsMeta ++
+      val m = (head.meta -- ColMapMetaKeys - MergeKeyMeta) ++ statsMeta ++
         Map("schema" -> df.schema.json) ++ meta ++ Map("op" -> "replace")
       publish(spark, zone, head.gen + 1, head.format, files, m,
         colStats, base = Some(head), sizes = filesInfo.toMap) match {
@@ -1916,15 +2354,16 @@ object TxLog {
     * standard multiple-match ambiguity is rejected, like Delta's) and
     * free of null keys (a null key can match no row).
     *
-    * The 100 TB shape is the point: only files whose committed [min, max]
-    * for `key` OVERLAPS the updates' key range are read and rewritten
-    * (the [[prunedFilesFor]] skip used in reverse — as a WRITE
-    * amplification bound); every other live file is carried into the new
-    * generation untouched, stats and all. A CDC upsert batch touching one
-    * day of a year-partitioned corpus rewrites that day, not the year.
-    * Zones without tracked stats for `key` fall back to rewriting every
-    * file (correct, just unpruned) — write with `statsCols` to get the
-    * bound.
+    * The batch merge is always a copy-on-write FOLD ([[foldCommit]]),
+    * which is what makes its [[MergeStats]] exact: only files whose
+    * committed [min, max] for `key` overlaps the updates' key range (or
+    * a pending key file's range) are read and rewritten — the
+    * [[prunedFilesFor]] skip used in reverse, as a WRITE amplification
+    * bound; every other live file is carried into the new generation
+    * untouched, stats and all. The rewrite is range-clustered by `key`,
+    * so each output file carries a narrow key range. Zones without
+    * tracked stats for `key` rewrite every file (correct, just
+    * unpruned) — write with `statsCols` to get the bound.
     *
     * Concurrency is OPTIMISTIC like [[replaceCas]]: the survivors are
     * computed FROM the head snapshot, so a rival commit landing first
@@ -1943,159 +2382,359 @@ object TxLog {
             maxAttempts: Int = 5,
             prePublishHook: () => Unit = () => ()): MergeStats =
     mergeImpl(spark, zone, updates, key, maxAttempts, prePublishHook,
-      batchId = None)
+      batchId = None, mergeOnRead = false, lwwReduced = false)
       .getOrElse(sys.error("unreachable: merge without a batchId never skips"))
 
-  /** [[mergeImpl]] with `opCol`: change rows marked `"D"` in that column
-    * are TOMBSTONES — their keys' target rows are removed and nothing is
-    * re-inserted; every other row upserts as in [[merge]]. The op column
-    * never lands in the zone. Same pruned-rewrite bound (files whose
-    * `key` stats overlap the batch's key range), same OCC loop.
+  /** The shared merge body. `opCol` marks TOMBSTONES: change rows whose
+    * value there is `"D"` remove their key and re-insert nothing; every
+    * other row upserts. The op column never lands in the zone.
     *
-    * Spark jobs per merge: one aggregate over the persisted batch (key
-    * bounds and every count the merge reports), the matched-key count,
-    * and the rewrite — the new files' stats come from their Parquet
-    * footers ([[collectFileStats]]), not from reading them back. A batch
-    * with a null key is refused loudly; an empty batch is a no-op. */
+    * With `mergeOnRead` (the streaming sinks) the commit is
+    * [[mergeOnReadCommit]] unless [[foldDue]] says the zone's pending key
+    * files have outgrown its layout, in which case this batch folds them
+    * ([[foldCommit]]); a merge key outside the key files' codec
+    * ([[driverKeyType]]) always folds. `lwwReduced` says the caller
+    * reduced `updates` to one row per key in this same call, so no
+    * aggregate has to prove the keys unique. A batch with a null key is refused loudly; an empty
+    * batch is a no-op. None = `batchId` was already committed. */
   private def mergeImpl(spark: SparkSession, zone: String, updates: DataFrame,
                         key: String, maxAttempts: Int,
                         prePublishHook: () => Unit,
                         batchId: Option[Long],
-                        opCol: Option[String] = None): Option[MergeStats] = {
-    import org.apache.spark.sql.functions.{col, count, countDistinct, lit, max, min, when}
+                        opCol: Option[String] = None,
+                        mergeOnRead: Boolean,
+                        lwwReduced: Boolean): Option[MergeStats] = {
     require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
+    val head = latest(spark, zone).getOrElse(init(spark, zone))
+    if (committedAt(head, batchId)) None
+    else if (mergeOnRead && driverKeyType(updates.schema(key).dataType))
+      mergeOnReadCommit(spark, zone, head, updates, key, maxAttempts, prePublishHook,
+        batchId, opCol, lwwReduced)
+    else {
+      // bounded driver state: key bounds + counts
+      val updRows = updates.persist()
+      try foldCommit(spark, zone, updRows, key, maxAttempts, prePublishHook,
+        batchId, opCol, batchKeys = None)
+      finally updRows.unpersist()
+    }
+  }
+
+  /** Has the zone at `head` already committed `batchId` (the streaming
+    * sinks' high-water mark)? */
+  private def committedAt(head: Snapshot, batchId: Option[Long]): Boolean =
+    batchId.exists(b => head.meta.get("batchId").exists(_.toLong >= b))
+
+  /** The fold rule: pending key files stay fewer than the data files
+    * that predate them — the files the last fold (or whatever wrote the
+    * zone before its first key file) left — so the batch whose key file
+    * would bring them level folds instead. Every read pays for each
+    * pending key file (its keys ride in the plan) and a point read opens
+    * one base file plus the batches' files; the fold pays one rewrite of
+    * the base layout; tying the two to the layout keeps them in
+    * proportion with no knob. A zone with no data folds (that is a plain
+    * write), and so does a batch on a different merge key than the
+    * pending key files hold, or whose `batchKeys` would take the pending
+    * keys past [[MaxPendingKeys]]. */
+  private def foldDue(head: Snapshot, key: String, batchKeys: Long): Boolean = {
+    val oldestKey = head.keys.valuesIterator.map(_.gen).minOption.getOrElse(Long.MaxValue)
+    val base = head.files.count(f => head.dataGen(f) < oldestKey)
+    (head.keys.nonEmpty && !head.meta.get(MergeKeyMeta).contains(key)) ||
+      head.keys.size + 1 >= base ||
+      head.keys.valuesIterator.map(_.stat.rows).sum + batchKeys > MaxPendingKeys
+  }
+
+  /** The batch's key bounds, row count and upserting-row count, from ONE
+    * aggregate (each further action would be one more Spark job on the
+    * commit path), after refusing null or duplicate keys. None for an
+    * empty batch. */
+  private def batchShape(updRows: DataFrame, key: String,
+                         opCol: Option[String]): Option[(Any, Any, Long)] = {
+    import org.apache.spark.sql.functions.{col, count, countDistinct, lit, max, min, when}
+    val upserts = opCol.fold(count(lit(1)))(c => count(when(col(c) =!= "D", 1)))
+    val kr = updRows
+      .agg(min(col(key)), max(col(key)), count(lit(1)), countDistinct(col(key)),
+        count(when(col(key).isNull, 1)), upserts)
+      .first()
+    val (nRows, nKeys, nullKeys) = (kr.getLong(2), kr.getLong(3), kr.getLong(4))
+    if (nRows == 0L) return None
+    // a null key matches nothing and prunes nothing: refuse the batch
+    // rather than drop its rows (countDistinct skips nulls, so the
+    // uniqueness check below would misreport them as duplicates)
+    require(nullKeys == 0L,
+      s"merge key '$key' is null in $nullKeys of $nRows update rows — drop " +
+        "or fill null keys before merging")
+    require(nRows == nKeys,
+      s"merge updates must be unique per '$key': $nRows rows over " +
+        s"$nKeys distinct keys (resolve duplicates first — e.g. " +
+        "Cdc.snapshot's last-writer-wins)")
+    Some((kr.get(0), kr.get(1), kr.getLong(5)))
+  }
+
+  /** The schema a merge commits: the head's (or, for a pre-tracking zone,
+    * its inferred one) evolved by the batch's by the append rules. */
+  private def mergedSchema(spark: SparkSession, zone: String, head: Snapshot,
+                           batch: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType =
+    zoneSchema(head).orElse(
+      if (head.files.nonEmpty) Some(readSnapshot(spark, zone, head).schema) else None)
+      .fold(batch)(mergeSchemas(_, batch))
+
+  private def newDir(root: Path, prefix: String): Path =
+    new Path(root, prefix + UUID.randomUUID().toString.take(8))
+
+  /** MERGE-ON-READ commit: the batch's upsert rows become new data files
+    * (sorted by key) and ALL its keys, upserts and tombstones alike, one
+    * key file sorted by key; both land in one publish with the `batchId`
+    * mark. The rule [[loadFiles]] applies — a row of file F is live iff
+    * no key file with a generation above F's data generation holds its
+    * key — then hides every older row of the batch's keys, and the new
+    * files (data generation = this commit's) stay visible. Nothing of
+    * the zone is read, so the commit costs the batch, not the zone, and
+    * a lost publish race just rebases like an append.
+    *
+    * Spark jobs: a reduced batch's shuffle runs once, then one job
+    * collects its keys ([[collectBatchKeys]]) and one writes its upserts,
+    * both reading the shuffle's output (three jobs); caller-supplied
+    * updates add the aggregate proving their keys unique. The data is
+    * written in the batch's own partitioning (the reduction's adaptive
+    * shuffle sizes it: one file for a small batch, parallel writers for a
+    * large one), each file sorted by key. The key file is written on the
+    * driver, and its key bounds, row count and null-key count come from
+    * the collected keys; zero rows make the batch a no-op. A batch the
+    * zone's layout makes due for a fold, or with more keys than
+    * [[MaxPendingKeys]] allows ([[foldDue]], re-checked when a rival
+    * commit moves the head), folds instead, its key bounds taken from the
+    * collected keys. */
+  private def mergeOnReadCommit(spark: SparkSession, zone: String, head0: Snapshot,
+                                updates: DataFrame,
+                                key: String, maxAttempts: Int,
+                                prePublishHook: () => Unit, batchId: Option[Long],
+                                opCol: Option[String],
+                                lwwReduced: Boolean): Option[MergeStats] = {
+    // both writes read the batch once: a reduced batch as the output of
+    // its (already executed) reduction, caller-supplied updates from the
+    // cache their uniqueness aggregate fills
+    val updRows =
+      if (lwwReduced) org.apache.spark.sql.graft.StreamBridge.sinkBatchDataFrame(updates)
+      else updates.persist()
+    try mergeOnReadWrite(spark, zone, head0, updRows, key, maxAttempts, prePublishHook,
+      batchId, opCol, lwwReduced)
+    finally if (!lwwReduced) updRows.unpersist()
+  }
+
+  private def mergeOnReadWrite(spark: SparkSession, zone: String, head0: Snapshot,
+                               updRows: DataFrame,
+                               key: String, maxAttempts: Int,
+                               prePublishHook: () => Unit, batchId: Option[Long],
+                               opCol: Option[String],
+                               lwwReduced: Boolean): Option[MergeStats] = {
+    import org.apache.spark.sql.functions.col
     val f = fs(spark, zone)
     val root = f.makeQualified(new Path(zone))
-    // bounded driver state: two key bounds + four row counts
-    val updRows = updates.persist()
-    try {
-      // ONE aggregate answers every question the merge asks of the batch
-      // — key bounds, rows, distinct keys, null keys, upserting rows — as
-      // each further action would be one more Spark job on the commit path
-      val upserts = opCol.fold(count(lit(1)))(c => count(when(col(c) =!= "D", 1)))
-      val kr = updRows
-        .agg(min(col(key)), max(col(key)), count(lit(1)), countDistinct(col(key)),
-          count(when(col(key).isNull, 1)), upserts)
-        .first()
-      val (nRows, nKeys, nullKeys, upsertCount) =
-        (kr.getLong(2), kr.getLong(3), kr.getLong(4), kr.getLong(5))
-      if (nRows == 0L)
-        return Some(MergeStats(latest(spark, zone).map(_.gen).getOrElse(0L),
-          0L, latest(spark, zone).map(_.files.size.toLong).getOrElse(0L), 0L, 0L))
-      // a null key matches nothing and prunes nothing: refuse the batch
-      // rather than drop its rows (countDistinct skips nulls, so the
-      // uniqueness check below would misreport them as duplicates)
-      require(nullKeys == 0L,
-        s"merge key '$key' is null in $nullKeys of $nRows update rows — drop " +
-          "or fill null keys before merging")
-      require(nRows == nKeys,
-        s"merge updates must be unique per '$key': $nRows rows over " +
-          s"$nKeys distinct keys (resolve duplicates first — e.g. " +
-          "Cdc.snapshot's last-writer-wins)")
-      val (lo, hi) = (kr.get(0), kr.get(1))
-      // the re-insert side: tombstone rows remove their key and nothing
-      // else; the op marker itself never lands in the zone
-      val dataRows = opCol.map(c =>
-        updRows.filter(col(c) =!= "D").drop(c)).getOrElse(updRows)
-      var attempt = 0
-      while (attempt < maxAttempts) {
-        val head = latest(spark, zone).getOrElse(init(spark, zone))
-        // exactly-once re-check against the CURRENT head each attempt —
-        // the same check-then-act closure appendImpl uses: a rival
-        // replaying this batch that won an earlier race committed the
-        // mark, so this attempt must become a no-op, not a double-merge
-        if (batchId.exists(b =>
-          head.meta.get("batchId").exists(_.toLong >= b))) return None
-        val tracked = head.meta.getOrElse("stats.cols", "").split(",").contains(key)
-        val touched =
-          if (tracked) prunedFilesFor(head, key, lo, hi) else head.files
-        val untouchedSet = head.files.toSet -- touched
-        val schema = {
-          val base = zoneSchema(head).orElse(
-            if (head.files.nonEmpty) Some(readSnapshot(spark, zone, head).schema)
-            else None)
-          base.fold(dataRows.schema)(mergeSchemas(_, dataRows.schema))
-        }
-        // no distinct: the requires above prove the keys unique and non-null
-        val updKeys = updRows.select(col(key))
-        val touchedDf =
-          if (touched.isEmpty)
-            conform(dataRows, schema).filter(lit(false))
-          else loadFiles(spark, head, touched.map(p => zone.stripSuffix("/") + "/" + p))
-        val survivors = touchedDf.join(updKeys, Seq(key), "left_anti")
-        // count MATCHED UPDATE KEYS, not matched target rows: a zone
-        // holding duplicate rows for one key would overcount updates and
-        // push insertedRows negative. The semi join keeps each (unique)
-        // update key at most once however many target rows it matches.
-        // (Those duplicate target rows are collapsed to the single update
-        // row for their key — upsert-by-key semantics — so updatedRows <=
-        // total update rows and insertedRows >= 0.)
-        val updatedRows =
-          updKeys.join(touchedDf.select(col(key)), Seq(key), "left_semi").count()
-        val insertedRows = math.max(0L, upsertCount - updatedRows)
-        val dataDir = new Path(root, "d-" + UUID.randomUUID().toString.take(8))
-        // insert-only fast path: no touched files -> no survivors side, so
-        // don't union an empty frame in (its empty write partitions would
-        // become zero-row data files)
-        val newData =
-          if (touched.isEmpty) conform(dataRows, schema)
-          else conform(survivors, schema).unionByName(conform(dataRows, schema))
-        val out = toPhysical(newData, colMap(head.meta))
-        out.write.mode(SaveMode.ErrorIfExists).format(head.format)
-          .save(dataDir.toString)
-        val newInfo = listRelInfo(f, root, dataDir)
-        val newFiles = newInfo.map(_._1)
-        val newColStats = collectFileStats(spark, root, dataDir, newInfo,
-          Some(out.schema), head.format, effectiveStatsCols(Nil, head.meta),
-          colMap(head.meta))
-        val nextFiles = (head.files.filter(untouchedSet) ++ newFiles).sorted
-        // untouched files keep their committed stats; touched files' entries drop
-        val nextColStats =
-          head.colStats.filter { case (p, _) => untouchedSet(p) } ++ newColStats
-        val nextSizes =
-          head.sizes.filter { case (p, _) => untouchedSet(p) } ++ newInfo.toMap
-        prePublishHook()
-        val batchMeta =
-          batchId.map(b => Map("batchId" -> b.toString)).getOrElse(Map.empty)
-        publish(spark, zone, head.gen + 1, head.format, nextFiles,
-          head.meta ++ Map("schema" -> schema.json) ++ batchMeta ++
-            Map("op" -> "merge"),
-          nextColStats, base = Some(head),
-          sizes = nextSizes) match {
-          case Some(g) =>
-            return Some(MergeStats(g, touched.size.toLong, head.files.size.toLong,
-              updatedRows, insertedRows))
-          case None =>
-            // rival landed: the survivors were computed from a stale head —
-            // discard the staged rewrite and recompute from the new one
-            f.delete(dataDir, true)
-        }
-        attempt += 1
-        Thread.sleep(math.min(200L, 10L * attempt))
+    def noOp = Some(MergeStats(head0.gen, 0L, head0.files.size.toLong, 0L, 0L))
+    if (!lwwReduced && batchShape(updRows, key, opCol).isEmpty) return noOp
+    val keyType = updRows.schema(key).dataType
+    def fold(batchKeys: Option[Array[Any]]) = foldCommit(spark, zone, updRows, key,
+      maxAttempts, prePublishHook, batchId, opCol, batchKeys)
+    val keys = collectBatchKeys(updRows.select(col(key))).getOrElse(return fold(None))
+    if (keys.isEmpty) return noOp
+    val nullKeys = keys.count(_ == null)
+    require(nullKeys == 0,
+      s"merge key '$key' is null in $nullKeys of ${keys.length} update rows — drop " +
+        "or fill null keys before merging")
+    val sorted = sortKeys(keys)
+    if (foldDue(head0, key, sorted.length.toLong)) return fold(Some(sorted))
+    val cmap = colMap(head0.meta)
+    val dataRows = opCol.map(c => updRows.filter(col(c) =!= "D").drop(c)).getOrElse(updRows)
+    val schema = mergedSchema(spark, zone, head0, dataRows.schema)
+    val out = toPhysical(conform(dataRows, schema), cmap)
+      .sortWithinPartitions(col(cmap.getOrElse(key, key)))
+    val dataDir = newDir(root, "d-")
+    val keyDir = newDir(root, "k-")
+    def unstage(): Unit = { f.delete(dataDir, true); f.delete(keyDir, true): Unit }
+    val keyFile = try {
+      out.write.mode(SaveMode.ErrorIfExists).format(head0.format).save(dataDir.toString)
+      writeKeyFile(spark, zone, keyDir, keyType, sorted)
+    } catch { case e: Throwable => unstage(); throw e }
+    val newInfo = listRelInfo(f, root, dataDir)
+    val newFiles = newInfo.map(_._1)
+    val newColStats = collectFileStats(spark, root, dataDir, newInfo,
+      Some(out.schema), head0.format, effectiveStatsCols(Nil, head0.meta), cmap)
+    val newKeys = Map(keyFile._1 -> KeyFile(ThisGen, keyFile._2))
+    try prePublishHook() catch { case e: Throwable => unstage(); throw e }
+    var attempt = 0
+    while (attempt < maxAttempts) {
+      // head0 was checked for the mark; a rival that moved the head since
+      // makes the first publish lose its claim and the retry re-reads
+      val head = if (attempt == 0) head0 else latest(spark, zone).getOrElse(head0)
+      if (committedAt(head, batchId)) { unstage(); return None }
+      if (attempt > 0 && foldDue(head, key, sorted.length.toLong)) {
+        unstage(); return fold(Some(sorted))
       }
-      sys.error(s"txlog merge into $zone conflicted $maxAttempts times")
-    } finally updRows.unpersist()
+      val meta = head.meta ++ Map("schema" -> mergedSchema(spark, zone, head, schema).json,
+        MergeKeyMeta -> key, "op" -> "merge") ++
+        batchId.map(b => Map("batchId" -> b.toString)).getOrElse(Map.empty)
+      publish(spark, zone, head.gen + 1, head.format, (head.files ++ newFiles).distinct.sorted,
+        meta, head.colStats ++ newColStats, base = Some(head),
+        sizes = head.sizes ++ newInfo.toMap, keys0 = head.keys ++ newKeys,
+        dataGens0 = head.dataGens ++ newFiles.map(_ -> ThisGen)) match {
+        // merge-on-read counts no matches: only the batch merge (always
+        // a fold) reports them
+        case Some(g) => return Some(MergeStats(g, 0L, head.files.size.toLong, 0L, 0L))
+        case None => ()
+      }
+      attempt += 1
+      Thread.sleep(math.min(200L, 10L * attempt))
+    }
+    unstage()
+    sys.error(s"txlog merge into $zone lost the publish race $maxAttempts times")
+  }
+
+  /** COPY-ON-WRITE FOLD: rewrite every live file the batch's key range
+    * or a pending key file's range touches — survivors of the pending
+    * deletes and of the batch's keys, plus the batch's upserts — range-
+    * clustered by `key` into as many files as the touched files that
+    * predate the pending key files, and publish it with the key files
+    * dropped. Untouched files hold no key of any dropped key file, so
+    * dropping them all is exact. `batchKeys` are the batch's sorted keys
+    * when a streaming commit already collected them: they give the key
+    * bounds and mask the touched rows as a hash set, like the pending
+    * keys ([[loadFiles]]); otherwise the batch aggregate ([[batchShape]])
+    * gives the bounds and an anti-join the mask. Spark jobs: that
+    * aggregate and join, the matched-key count (the batch merge only),
+    * the range sample and the rewrite; the new files' stats come from
+    * their footers ([[collectFileStats]]). */
+  private def foldCommit(spark: SparkSession, zone: String, updRows: DataFrame,
+                         key: String, maxAttempts: Int,
+                         prePublishHook: () => Unit, batchId: Option[Long],
+                         opCol: Option[String],
+                         batchKeys: Option[Array[Any]]): Option[MergeStats] = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    val f = fs(spark, zone)
+    val root = f.makeQualified(new Path(zone))
+    // a streaming commit reports no row counts, so it needs no upsert count
+    val (lo, hi, upsertCount) = batchKeys.map(k => (k.head, k.last, 0L))
+      .orElse(batchShape(updRows, key, opCol)).getOrElse(
+      return Some(MergeStats(latest(spark, zone).map(_.gen).getOrElse(0L),
+        0L, latest(spark, zone).map(_.files.size.toLong).getOrElse(0L), 0L, 0L)))
+    // the re-insert side: tombstone rows remove their key and nothing
+    // else; the op marker itself never lands in the zone
+    val dataRows = opCol.map(c =>
+      updRows.filter(col(c) =!= "D").drop(c)).getOrElse(updRows)
+    var attempt = 0
+    while (attempt < maxAttempts) {
+      val head = latest(spark, zone).getOrElse(init(spark, zone))
+      // exactly-once re-check against the CURRENT head each attempt —
+      // the same check-then-act closure appendImpl uses: a rival
+      // replaying this batch that won an earlier race committed the
+      // mark, so this attempt must become a no-op, not a double-merge
+      if (committedAt(head, batchId)) return None
+      val tracked = head.meta.getOrElse("stats.cols", "").split(",").contains(key)
+      val sameKey = head.keys.isEmpty || head.meta.get(MergeKeyMeta).contains(key)
+      val ranges = (lo, hi) +: head.keys.values.toSeq.flatMap(k =>
+        k.stat.min.zip(k.stat.max))
+      val touchedSet =
+        if (tracked && sameKey) ranges.flatMap { case (l, h) => prunedFilesFor(head, key, l, h) }.toSet
+        else head.files.toSet
+      val touched = head.files.filter(touchedSet)
+      val untouchedSet = head.files.toSet -- touched
+      val schema = mergedSchema(spark, zone, head, dataRows.schema)
+      // no distinct: batchShape proved the keys unique and non-null
+      val updKeys = updRows.select(col(key))
+      val touchedDf =
+        if (touched.isEmpty) conform(dataRows, schema).filter(lit(false))
+        else loadFiles(spark, zone, head, touched)
+      val survivors = batchKeys match {
+        // a null key is in no set, as it matches no key in the join
+        case Some(k) => touchedDf.filter(coalesce(!keyIn(touchedDf, key, k), lit(true)))
+        case None => touchedDf.join(updKeys, Seq(key), "left_anti")
+      }
+      // count MATCHED UPDATE KEYS, not matched target rows: a zone
+      // holding duplicate rows for one key would overcount updates and
+      // push insertedRows negative. The semi join keeps each (unique)
+      // update key at most once however many target rows it matches.
+      // (Those duplicate target rows are collapsed to the single update
+      // row for their key — upsert-by-key semantics — so updatedRows <=
+      // total update rows and insertedRows >= 0.) A streaming fold
+      // reports no counts, so it skips the join.
+      val updatedRows =
+        if (batchId.nonEmpty) 0L
+        else updKeys.join(touchedDf.select(col(key)), Seq(key), "left_semi").count()
+      val insertedRows = math.max(0L, upsertCount - updatedRows)
+      val dataDir = newDir(root, "d-")
+      // insert-only fast path: no touched files -> no survivors side, so
+      // don't union an empty frame in
+      val newData =
+        if (touched.isEmpty) conform(dataRows, schema)
+        else conform(survivors, schema).unionByName(conform(dataRows, schema))
+      val cmap = colMap(head.meta)
+      val physKey = col(cmap.getOrElse(key, key))
+      val oldestKey = head.keys.valuesIterator.map(_.gen).minOption.getOrElse(Long.MaxValue)
+      val nOut = math.max(1, touched.count(p => head.dataGen(p) < oldestKey))
+      val out = toPhysical(newData, cmap)
+      out.repartitionByRange(nOut, physKey).sortWithinPartitions(physKey)
+        .write.mode(SaveMode.ErrorIfExists).format(head.format)
+        .save(dataDir.toString)
+      val newInfo = listRelInfo(f, root, dataDir)
+      val newFiles = newInfo.map(_._1)
+      val newColStats = collectFileStats(spark, root, dataDir, newInfo,
+        Some(out.schema), head.format, effectiveStatsCols(Nil, head.meta), cmap)
+      val nextFiles = (head.files.filter(untouchedSet) ++ newFiles).sorted
+      // untouched files keep their committed stats; touched files' entries drop
+      val nextColStats =
+        head.colStats.filter { case (p, _) => untouchedSet(p) } ++ newColStats
+      val nextSizes =
+        head.sizes.filter { case (p, _) => untouchedSet(p) } ++ newInfo.toMap
+      prePublishHook()
+      val batchMeta =
+        batchId.map(b => Map("batchId" -> b.toString)).getOrElse(Map.empty)
+      // the fold applied every pending key file: the commit drops them
+      publish(spark, zone, head.gen + 1, head.format, nextFiles,
+        head.meta ++ Map("schema" -> schema.json, MergeKeyMeta -> key) ++ batchMeta ++
+          Map("op" -> "merge"),
+        nextColStats, base = Some(head),
+        sizes = nextSizes) match {
+        case Some(g) =>
+          return Some(MergeStats(g, touched.size.toLong, head.files.size.toLong,
+            updatedRows, insertedRows))
+        case None =>
+          // rival landed: the survivors were computed from a stale head —
+          // discard the staged rewrite and recompute from the new one
+          f.delete(dataDir, true)
+      }
+      attempt += 1
+      Thread.sleep(math.min(200L, 10L * attempt))
+    }
+    sys.error(s"txlog merge into $zone conflicted $maxAttempts times")
   }
 
   /** Exactly-once streaming MERGE: the upsert twin of
     * [[exactlyOnceAppend]] — skip batches at or below the committed
     * high-water mark, and stamp the mark IN the merge's own publish so
-    * data + mark flip atomically. `foreachBatch(TxLog.mergeSink(zone,
-    * key))` turns a CDC stream into an incrementally-maintained current-
-    * state table: the reference's append-then-recompact lake
+    * data + mark flip atomically. Each batch commits MERGE-ON-READ
+    * ([[mergeOnReadCommit]]: its rows and one key file, nothing of the
+    * zone rewritten) until the pending key files call for a fold
+    * ([[foldDue]]). `foreachBatch(TxLog.mergeSink(zone, key))` turns a
+    * CDC stream into an incrementally-maintained current-state table:
+    * the reference's append-then-recompact lake
     * (`firehose_transformation.py` + batch snapshot jobs) collapsed into
     * one idempotent sink. Returns true when the batch merged. */
   def mergeExactlyOnce(spark: SparkSession, zone: String, updates: DataFrame,
-                       key: String, batchId: Long): Boolean = {
-    // fast path: skip before any compute; the authoritative check re-runs
-    // against the head inside mergeImpl's publish loop, so two writers
-    // replaying the same batchId cannot both commit (the mark rides in
-    // the merge's OWN publish — data + mark flip in one atomic commit)
-    val committed = latest(spark, zone).flatMap(_.meta.get("batchId")).map(_.toLong)
-    if (committed.exists(_ >= batchId)) false
-    else mergeImpl(spark, zone, updates, key, maxAttempts = 5,
-      prePublishHook = () => (), batchId = Some(batchId)).isDefined
-  }
+                       key: String, batchId: Long): Boolean =
+    streamMerge(spark, zone, updates, key, batchId, None, lwwReduced = false, () => ())
+
+  /** The exactly-once streaming commit shared by the sinks: a batch at
+    * or below the committed mark is skipped before any compute, and the
+    * check re-runs against the head inside the publish loop, so two
+    * writers replaying the same batchId cannot both commit (the mark
+    * rides in the merge's OWN publish — data, key file and mark flip in
+    * one atomic commit). */
+  private def streamMerge(spark: SparkSession, zone: String, updates: DataFrame,
+                          key: String, batchId: Long, opCol: Option[String],
+                          lwwReduced: Boolean, prePublishHook: () => Unit): Boolean =
+    mergeImpl(spark, zone, updates, key, maxAttempts = 5, prePublishHook,
+      batchId = Some(batchId), opCol = opCol, mergeOnRead = true,
+      lwwReduced = lwwReduced).isDefined
 
   /** `writeStream.foreachBatch(TxLog.mergeSink(zone, key))` — the
     * exactly-once keyed-upsert lake sink. The batch must be unique per
@@ -2105,16 +2744,27 @@ object TxLog {
       mergeExactlyOnce(df.sparkSession, zone, df, key, batchId): Unit
     }
 
+  /** Each key's LAST-WRITER-WINS row of `df` (greatest `ordCol`,
+    * remaining columns as a deterministic tiebreak — one hash agg over a
+    * max-struct, the same no-window winner shape as `Cdc.snapshot`). */
+  private def lastWriterWins(df: DataFrame, key: String, ordCol: String): DataFrame = {
+    import org.apache.spark.sql.functions.{col, max, struct}
+    val others = df.columns.filterNot(c => c == key || c == ordCol).toSeq
+    df.groupBy(col(key))
+      .agg(max(struct((ordCol +: others).map(col): _*)).as("__w"))
+      .select(col(key) +: (ordCol +: others).map(c => col("__w." + c).as(c)): _*)
+      .select(df.columns.toSeq.map(col): _*)
+  }
+
   /** The CDC current-state sink: each micro-batch is first reduced to its
-    * per-key LAST-WRITER-WINS row (greatest `ordCol`, remaining columns
-    * as a deterministic tiebreak — one hash agg over a max-struct, the
-    * same no-window winner shape as `Cdc.snapshot`), then upserted
-    * exactly-once. This maintains the compacted current-state table
-    * INCREMENTALLY — the reference computes it by full-scan snapshot
-    * jobs over the appended delta lake (`Cdc.snapshot` replaying
-    * `firehose_transformation.py` output); at 100 TB the full rebuild
-    * reads everything ever written, this reads the files one batch's
-    * keys touch.
+    * per-key LAST-WRITER-WINS row ([[lastWriterWins]]), then upserted
+    * exactly-once, merge-on-read — the reduction already made the keys
+    * unique, so the commit runs no aggregate of its own. This maintains
+    * the compacted current-state table INCREMENTALLY — the reference
+    * computes it by full-scan snapshot jobs over the appended delta lake
+    * (`Cdc.snapshot` replaying `firehose_transformation.py` output); at
+    * 100 TB the full rebuild reads everything ever written, this writes
+    * the batch and folds only when the pending key files call for it.
     *
     * Ordering contract: batches are assumed key-ordered ACROSS batches —
     * exactly the reference transport's guarantee (Kinesis per-shard
@@ -2125,14 +2775,8 @@ object TxLog {
   def cdcMergeSink(zone: String, key: String,
                    ordCol: String): (DataFrame, Long) => Unit =
     (df, batchId) => {
-      import org.apache.spark.sql.functions.{col, max, struct}
-      val others = df.columns.filterNot(c => c == key || c == ordCol).toSeq
-      val packed = df.groupBy(col(key))
-        .agg(max(struct((ordCol +: others).map(col): _*)).as("__w"))
-      val lww = packed
-        .select(col(key) +: (ordCol +: others).map(c => col("__w." + c).as(c)): _*)
-        .select(df.columns.toSeq.map(col): _*)
-      mergeExactlyOnce(df.sparkSession, zone, lww, key, batchId): Unit
+      streamMerge(df.sparkSession, zone, lastWriterWins(df, key, ordCol), key,
+        batchId, None, lwwReduced = true, () => ()): Unit
     }
 
   /** Exactly-once keyed CHANGES: [[mergeExactlyOnce]] extended with
@@ -2143,35 +2787,36 @@ object TxLog {
     * op column never lands in the zone; changes must be unique per key
     * (reduce to the per-key last-writer first — [[cdcChangesSink]]). */
   def changesExactlyOnce(spark: SparkSession, zone: String, changes: DataFrame,
-                         key: String, opCol: String, batchId: Long): Boolean = {
-    val committed = latest(spark, zone).flatMap(_.meta.get("batchId")).map(_.toLong)
-    if (committed.exists(_ >= batchId)) false
-    else mergeImpl(spark, zone, changes, key, maxAttempts = 5,
-      prePublishHook = () => (), batchId = Some(batchId),
-      opCol = Some(opCol)).isDefined
-  }
+                         key: String, opCol: String, batchId: Long): Boolean =
+    streamMerge(spark, zone, changes, key, batchId, Some(opCol), lwwReduced = false,
+      () => ())
+
+  /** [[changesExactlyOnce]]'s batch applied COPY-ON-WRITE (a fold, no
+    * batchId): the reference the merge-on-read property spec compares
+    * against. */
+  private[graft] def foldChanges(spark: SparkSession, zone: String, changes: DataFrame,
+                                 key: String, opCol: String): MergeStats =
+    mergeImpl(spark, zone, changes, key, maxAttempts = 5, () => (), batchId = None,
+      opCol = Some(opCol), mergeOnRead = false, lwwReduced = false)
+      .getOrElse(sys.error("unreachable: a fold without a batchId never skips"))
 
   /** The keyed-CDC current-state sink WITH tombstones: each micro-batch
     * reduces to its per-key last-writer-wins CHANGE (greatest `ordCol`;
     * the op rides the winner struct, so a key whose final event in the
     * batch is a delete tombstones even if earlier events upserted), then
-    * applies exactly-once via [[changesExactlyOnce]]. This is
-    * [[cdcMergeSink]] for feeds where REMOVE means "leave the table",
-    * not "merge a null image" — the streaming lake's corpus-membership
-    * sink (round-15 directive #4). Same cross-batch ordering contract
-    * as [[cdcMergeSink]] (per-key order across batches — the reference
-    * transport's per-shard guarantee). */
+    * commits exactly-once and merge-on-read like [[cdcMergeSink]]: the
+    * tombstoned keys ride in the batch's key file with the upserted
+    * ones. This is [[cdcMergeSink]] for feeds where REMOVE means "leave
+    * the table", not "merge a null image" — the streaming lake's
+    * corpus-membership sink (round-15 directive #4). Same cross-batch
+    * ordering contract as [[cdcMergeSink]]. `prePublishHook` runs after
+    * the batch's files are staged, before the publish (a test seam). */
   def cdcChangesSink(zone: String, key: String, ordCol: String,
-                     opCol: String): (DataFrame, Long) => Unit =
+                     opCol: String,
+                     prePublishHook: () => Unit = () => ()): (DataFrame, Long) => Unit =
     (df, batchId) => {
-      import org.apache.spark.sql.functions.{col, max, struct}
-      val others = df.columns.filterNot(c => c == key || c == ordCol).toSeq
-      val packed = df.groupBy(col(key))
-        .agg(max(struct((ordCol +: others).map(col): _*)).as("__w"))
-      val lww = packed
-        .select(col(key) +: (ordCol +: others).map(c => col("__w." + c).as(c)): _*)
-        .select(df.columns.toSeq.map(col): _*)
-      changesExactlyOnce(df.sparkSession, zone, lww, key, opCol, batchId): Unit
+      streamMerge(df.sparkSession, zone, lastWriterWins(df, key, ordCol), key,
+        batchId, Some(opCol), lwwReduced = true, prePublishHook): Unit
     }
 
   /** `deletedRows` is exact; `filesTouched` of `filesTotal` is how many
@@ -2238,7 +2883,7 @@ object TxLog {
       if (touched.isEmpty)
         return DeleteStats(head.gen, 0L, head.files.size.toLong, 0L)
       val touchedDf =
-        loadFiles(spark, head, touched.map(p => zone.stripSuffix("/") + "/" + p))
+        loadFiles(spark, zone, head, touched)
       // SQL DELETE removes only rows where the condition is TRUE: a
       // NULL-valued predicate row must SURVIVE. A bare !pred would be
       // NULL for those rows and filter them out of the survivors —
@@ -2263,9 +2908,13 @@ object TxLog {
       val nextSizes =
         head.sizes.filter { case (p, _) => untouchedSet(p) } ++ newInfo.toMap
       prePublishHook()
+      // survivors were read through the pending deletes: stamped with the
+      // generation they were read at (see commitRewrite)
       publish(spark, zone, head.gen + 1, head.format, nextFiles,
         head.meta ++ Map("op" -> "delete"),
-        nextColStats, base = Some(head), sizes = nextSizes) match {
+        nextColStats, base = Some(head), sizes = nextSizes, keys0 = head.keys,
+        dataGens0 = head.dataGens.filter { case (p, _) => untouchedSet(p) } ++
+          newFiles.map(_ -> head.gen)) match {
         case Some(g) =>
           return DeleteStats(g, touched.size.toLong, head.files.size.toLong, deleted)
         case None =>
@@ -2283,9 +2932,12 @@ object TxLog {
     * a full scan. Every [[ColStat]] carries the file's row count (all
     * columns of a file agree), so any tracked column serves. None when
     * some live file predates stats tracking — the caller falls back to a
-    * scan rather than trusting a partial count. */
+    * scan rather than trusting a partial count — and while key deletes
+    * are pending, since the manifest row counts then include the rows
+    * they mask. */
   def metadataCount(spark: SparkSession, zone: String): Option[Long] = {
     val head = latest(spark, zone).getOrElse(return None)
+    if (head.pendingDeletes) return None
     if (head.files.isEmpty) return Some(0L)
     val perFile = head.files.map(f =>
       head.colStats.get(f).flatMap(_.values.headOption).map(_.rows))
@@ -2388,12 +3040,16 @@ object TxLog {
         target.meta.get("schema").map("schema" -> _).toMap ++
         target.meta.view.filterKeys(ColMapMetaKeys.contains).toMap ++
         Map("op" -> "restore")
+      // the target's pending key files come back with its files: its
+      // key and data generations keep their order, and every later key
+      // file outranks them all
       publish(spark, zone, head.gen + 1, target.format, target.files,
         meta, target.colStats, base = Some(head),
-        sizes = target.sizes) match {
+        sizes = target.sizes, keys0 = target.keys, dataGens0 = target.dataGens) match {
         case Some(g) =>
           return Snapshot(g, target.format, target.files, meta,
-            target.colStats, base = head.gen, sizes = target.sizes)
+            target.colStats, base = head.gen, sizes = target.sizes,
+            keys = target.keys, dataGens = target.dataGens)
         case None => ()
       }
       attempt += 1
@@ -2416,7 +3072,7 @@ object TxLog {
     val (to, added) = appendedFilesBetween(spark, zone, fromGen, toGen)
     if (added.isEmpty)
       readSnapshot(spark, zone, to).filter(org.apache.spark.sql.functions.lit(false))
-    else loadFiles(spark, to, added.map(p => zone.stripSuffix("/") + "/" + p))
+    else loadFiles(spark, zone, to, added)
   }
 
   /** File-level form of [[appendedBetween]]: the `to` snapshot plus the
@@ -2441,6 +3097,13 @@ object TxLog {
       s"$zone is not append-only between gen $fromGen and gen ${to.gen}: " +
         s"${dropped.size} file(s) were rewritten (compact/replace/merge/delete) — " +
         "an incremental file-diff read would be wrong; re-read the full snapshot")
+    // a merge-on-read commit adds files AND deletes keys of older ones:
+    // the diff would serve its rows but miss its deletes
+    val newKeys = to.keys.keySet -- from.keys.keySet
+    require(newKeys.isEmpty,
+      s"$zone is not append-only between gen $fromGen and gen ${to.gen}: " +
+        s"${newKeys.size} merge-on-read commit(s) deleted keys — an " +
+        "incremental file-diff read would miss the deletes; re-read the full snapshot")
     val fromSet = from.files.toSet
     (to, to.files.filterNot(fromSet))
   }
@@ -2478,6 +3141,11 @@ object TxLog {
     * files stay on disk until [[vacuum]] retention passes them. A lost
     * publish race (concurrent append/compact) ABORTS and removes the
     * rewrite: recompacting a stale base could drop the winner's rows.
+    * Pending key deletes are FOLDED: the rewrite reads the live rows and
+    * the commit drops the key files, even when the file count alone
+    * would skip the rewrite. A zone that takes keyed merges (its
+    * `merge.key`) is written range-clustered by that key, the fold's
+    * layout; any other zone keeps the plain repartition.
     * `prePublishHook` is a test seam between data write and publish. */
   def compact(spark: SparkSession, zone: String, targetBytes: Long = 128L << 20,
               prePublishHook: () => Unit = () => ()): CompactStats = {
@@ -2487,17 +3155,26 @@ object TxLog {
     val head = latest(spark, zone).getOrElse(init(spark, zone))
     val bytes = committedBytes(f, zone, head)
     val wantFiles = math.max(1L, math.ceil(bytes.toDouble / targetBytes).toLong)
-    if (head.files.size <= wantFiles)
+    if (head.files.size <= wantFiles && !head.pendingDeletes)
       return CompactStats(head.gen, head.files.size.toLong, head.files.size.toLong,
         bytes, rewritten = false)
     val dataDir = new Path(root, "d-" + UUID.randomUUID().toString.take(8))
-    val out = readSnapshot(spark, zone, head).repartition(wantFiles.toInt)
-    out.write.mode(SaveMode.ErrorIfExists).format(head.format).save(dataDir.toString)
-    val newInfo = listRelInfo(f, root, dataDir)
+    val live = readSnapshot(spark, zone, head)
+    val out = head.meta.get(MergeKeyMeta).filter(live.columns.contains) match {
+      case Some(k) => live.repartitionByRange(wantFiles.toInt, live.col(k))
+        .sortWithinPartitions(live.col(k))
+      case None => live.repartition(wantFiles.toInt)
+    }
+    // every live row deleted by pending keys: nothing to write
+    if (head.files.nonEmpty)
+      out.write.mode(SaveMode.ErrorIfExists).format(head.format).save(dataDir.toString)
+    val newInfo = if (head.files.isEmpty) Nil else listRelInfo(f, root, dataDir)
     val newFiles = newInfo.map(_._1)
     // a stats-tracked zone recomputes per-file stats for the rewrite
-    val newColStats = collectFileStats(spark, root, dataDir,
-      newInfo, Some(out.schema), head.format, effectiveStatsCols(Nil, head.meta))
+    val newColStats =
+      if (newInfo.isEmpty) Map.empty[String, Map[String, ColStat]]
+      else collectFileStats(spark, root, dataDir,
+        newInfo, Some(out.schema), head.format, effectiveStatsCols(Nil, head.meta))
     prePublishHook()
     // meta carries forward: compaction must not erase e.g. the streaming
     // sink's batchId high-water mark. The column mapping RESETS: the
@@ -2656,11 +3333,15 @@ object TxLog {
         chks.map(_.getPath).filter(p => pathGen(p).exists(_ < oldestKept)) ++
           listing.map(_.getPath).filter(p => chpGen(p).exists(_ < oldestKept))
       else Nil
-    val live: Set[String] = keptSnaps.flatMap(_.get.files).toSet
-    // only files under d-* write dirs are vacuum-managed; gen-0 root files
-    // from init() predate the log and are left alone
+    // a kept generation needs its data files AND its pending key files
+    val live: Set[String] =
+      keptSnaps.flatMap(s => s.get.files ++ s.get.keys.keys).toSet
+    // only files under d-* (data) and k-* (key) write dirs are
+    // vacuum-managed; gen-0 root files from init() predate the log and
+    // are left alone
     var removed = 0L
-    f.listStatus(root).filter(s => s.isDirectory && s.getPath.getName.startsWith("d-"))
+    f.listStatus(root).filter(s => s.isDirectory &&
+        (s.getPath.getName.startsWith("d-") || s.getPath.getName.startsWith("k-")))
       .foreach { d =>
         val it = f.listFiles(d.getPath, true)
         val rootPath = root.toUri.getPath.stripSuffix("/")

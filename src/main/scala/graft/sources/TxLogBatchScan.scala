@@ -3,13 +3,14 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.graft.FileSourceBridge
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.operators.TxLog
 import graft.plans.PushdownProbe
@@ -101,21 +102,18 @@ final case class TxLogBatchScan(spark: SparkSession, zone: String,
     recorder.foreach(_.record(keep))
     PushdownProbe.record(s"txlog:$zone", keep.size.toLong, snap.files.size.toLong)
     PushdownProbe.recordCols(s"txlog:$zone", required.fieldNames.toSeq)
-    TxLogBatchScan.filePartitions(spark, zone, keep, snap.sizes)
+    TxLogBatchScan.filePartitions(spark, zone, keep, snap.sizes, snap.dataGens)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // evolution-safe: dataSchema is the LOG's schema; files predating an
-    // added column surface it as null, exactly like the v1 read. Under a
-    // column mapping the files are requested by PHYSICAL name (rows are
-    // positional, so the logical output schema is untouched).
-    val (physFull, physReq, physFilters) = TxLogBatchScan.toPhysicalRead(
-      snap, full, required, pushed.toSeq ++ runtime)
-    val readFunc = FileSourceBridge.readFunc(spark, snap.format,
-      dataSchema = physFull, requiredSchema = physReq,
-      filters = physFilters)
-    new TxLogReaderFactory(readFunc)
-  }
+  // evolution-safe: dataSchema is the LOG's schema; files predating an
+  // added column surface it as null, exactly like the v1 read. Under a
+  // column mapping the files are requested by PHYSICAL name (rows are
+  // positional, so the logical output schema is untouched). Pending key
+  // deletes are applied per row (the files' superset is masked by the
+  // same key set whichever subset runtime filters keep).
+  override def createReaderFactory(): PartitionReaderFactory =
+    TxLogBatchScan.readerFactory(spark, zone, snap, snap.files, full, required,
+      pushed.toSeq ++ runtime)
 
   /** `spark.readStream.table("graft.ns.t")` — catalog tables stream
     * natively (the v2 twin of the v1 `TxLogSource`, same semantics:
@@ -127,12 +125,34 @@ final case class TxLogBatchScan(spark: SparkSession, zone: String,
     * stream's whole life. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new TxLogMicroBatchStream(spark, zone, full, required, pushed, snap.format,
+    new TxLogMicroBatchStream(spark, zone, full, required, pushed,
       streamOpts)
 }
 
+/** One data file to read, with its data generation (which pending key
+  * deletes can mask its rows — [[TxLog.loadFiles]]'s rule). */
 final case class TxLogFilePartition(path: String, length: Long,
-                                    modTime: Long) extends InputPartition
+                                    modTime: Long,
+                                    dataGen: Long = TxLog.NoDataGen) extends InputPartition
+
+/** Pending merge-on-read deletes applied inside the per-file reader, which
+  * cannot join: a row is dropped iff its key (at `ordinal`) maps to a key
+  * generation above its file's data generation. `strip` holds the output
+  * field types when the key column was read only for this test, to be
+  * projected away again. */
+final case class TxLogDeleteMask(ordinal: Int, keyType: DataType,
+                                 gens: Map[Any, Long],
+                                 strip: Option[Seq[DataType]]) {
+  def live(rows: Iterator[InternalRow], dataGen: Long): Iterator[InternalRow] = {
+    val kept = rows.filter(r =>
+      r.isNullAt(ordinal) || gens.get(r.get(ordinal, keyType)).forall(_ <= dataGen))
+    strip.fold(kept) { types =>
+      val proj = UnsafeProjection.create(types.zipWithIndex.map { case (t, i) =>
+        BoundReference(i, t, nullable = true): Expression })
+      kept.map(proj)
+    }
+  }
+}
 
 object TxLogBatchScan {
   /** Translate a read's schemas to PHYSICAL names under the snapshot's
@@ -155,6 +175,32 @@ object TxLogBatchScan {
       filters.filter(_.references.forall(r => !cmap.contains(r))))
   }
 
+  /** The per-file reader for `relFiles` of `snap`, masking the key
+    * deletes pending against them ([[TxLogDeleteMask]]; the mask is
+    * collected once on the driver by [[TxLog.collectedMask]], the same
+    * keys `TxLog.loadFiles` applies, and refused past the same bound,
+    * naming `TxLog.compact`). */
+  private[graft] def readerFactory(spark: SparkSession, zone: String,
+                                   snap: TxLog.Snapshot, relFiles: Seq[String],
+                                   full: StructType, required: StructType,
+                                   filters: Seq[Filter]): TxLogReaderFactory = {
+    val (physFull, physReq, physFilters) = toPhysicalRead(snap, full, required, filters)
+    def factory(req: StructType, mask: Option[TxLogDeleteMask]) =
+      new TxLogReaderFactory(FileSourceBridge.readFunc(spark, snap.format,
+        dataSchema = physFull, requiredSchema = req, filters = physFilters), mask)
+    TxLog.collectedMask(spark, zone, snap, relFiles) match {
+      case None => factory(physReq, None)
+      case Some((key, gens)) =>
+        val physKey = TxLog.colMap(snap.meta).getOrElse(key, key)
+        val keyField = physFull(physKey)
+        val (req, strip) =
+          if (physReq.fieldNames.contains(physKey)) (physReq, None)
+          else (physReq.add(keyField), Some(physReq.fields.map(_.dataType).toSeq))
+        factory(req, Some(TxLogDeleteMask(req.fieldIndex(physKey), keyField.dataType,
+          gens, strip)))
+    }
+  }
+
   /** One InputPartition per kept file. Length/mtime come from the
     * MANIFEST's committed per-file sizes — plan time touches the
     * filesystem ZERO times for covered files (at 100 TB/~800k kept files
@@ -165,15 +211,17 @@ object TxLogBatchScan {
     * `listStatus` per parent `d-*` directory (never one RPC per file). */
   private[graft] def filePartitions(spark: SparkSession, zone: String,
                                     keep: Seq[String],
-                                      sizes: Map[String, (Long, Long)] = Map.empty)
+                                    sizes: Map[String, (Long, Long)] = Map.empty,
+                                    dataGens: Map[String, Long] = Map.empty)
       : Array[InputPartition] = {
     if (keep.isEmpty) return Array.empty
     val fs = new Path(zone).getFileSystem(spark.sessionState.newHadoopConf())
     val root = fs.makeQualified(new Path(zone))
     val (known, unknown) = keep.partition(sizes.contains)
+    def dataGen(rel: String) = dataGens.getOrElse(rel, TxLog.NoDataGen)
     val fromManifest = known.iterator.map { rel =>
       val (len, mt) = sizes(rel)
-      TxLogFilePartition(new Path(root, rel).toString, len, mt): InputPartition
+      TxLogFilePartition(new Path(root, rel).toString, len, mt, dataGen(rel)): InputPartition
     }
     val fromListing = unknown.groupBy { p =>
       val i = p.lastIndexOf('/'); if (i < 0) "" else p.substring(0, i)
@@ -183,7 +231,8 @@ object TxLogBatchScan {
       fs.listStatus(base).iterator
         .filter(st => wanted(st.getPath.getName))
         .map(st => TxLogFilePartition(st.getPath.toString, st.getLen,
-          st.getModificationTime): InputPartition)
+          st.getModificationTime,
+          dataGen(if (dir.isEmpty) st.getPath.getName else dir + "/" + st.getPath.getName)): InputPartition)
     }
     (fromManifest ++ fromListing).toArray
   }
@@ -210,11 +259,6 @@ final case class TxLogGenOffset(gen: Long)
 final class TxLogMicroBatchStream(spark: SparkSession, zone: String,
                                   full: StructType, required: StructType,
                                   pushed: Array[Filter],
-                                  /** immutable across the zone's life —
-                                    * resolved once at stream start, so
-                                    * per-trigger reader creation costs no
-                                    * log resolution */
-                                  format: String,
                                   opts: TxLogStreamOptions = TxLogStreamOptions())
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
@@ -279,7 +323,8 @@ final class TxLogMicroBatchStream(spark: SparkSession, zone: String,
     PushdownProbe.record(s"txlog:$zone", keep.size.toLong, relFiles.size.toLong)
     PushdownProbe.recordCols(s"txlog:$zone", required.fieldNames.toSeq)
     batchSnap = Some(snap)
-    TxLogBatchScan.filePartitions(spark, zone, keep, snap.sizes)
+    batchFiles = keep
+    TxLogBatchScan.filePartitions(spark, zone, keep, snap.sizes, snap.dataGens)
   }
 
   /** The end-offset snapshot the CURRENT batch's files were resolved
@@ -291,16 +336,17 @@ final class TxLogMicroBatchStream(spark: SparkSession, zone: String,
     * unprocessed would otherwise empty the head's colmap and make those
     * files' renamed column silently read as null. */
   @volatile private var batchSnap: Option[TxLog.Snapshot] = None
+  /** The batch's kept files: what its pending key deletes must mask. */
+  @volatile private var batchFiles: Seq[String] = Nil
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // per-trigger: the batch-window snapshot's column mapping governs how
-    // files are requested (physical names are stable across renames, so
-    // the end-offset mapping covers every file the window serves)
-    val (physFull, physReq, physFilters) =
-      TxLogBatchScan.toPhysicalRead(batchSnap.getOrElse(head), full, required, static)
-    new TxLogReaderFactory(FileSourceBridge.readFunc(spark, format,
-      dataSchema = physFull, requiredSchema = physReq, filters = physFilters))
-  }
+  // per-trigger: the batch-window snapshot's column mapping governs how
+  // files are requested (physical names are stable across renames, so
+  // the end-offset mapping covers every file the window serves), and its
+  // pending key deletes mask the first batch's full snapshot (a later
+  // batch's appended files postdate every key file of its window)
+  override def createReaderFactory(): PartitionReaderFactory =
+    TxLogBatchScan.readerFactory(spark, zone, batchSnap.getOrElse(head), batchFiles,
+      full, required, static)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -310,12 +356,14 @@ final class TxLogMicroBatchStream(spark: SparkSession, zone: String,
 /** Executor-side: wrap the shipped per-file reader as a
   * [[PartitionReader]], unwrapping vectorized batches to rows. */
 final class TxLogReaderFactory(
-    readFunc: PartitionedFile => Iterator[InternalRow])
+    readFunc: PartitionedFile => Iterator[InternalRow],
+    mask: Option[TxLogDeleteMask] = None)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val fp = p.asInstanceOf[TxLogFilePartition]
-    val it = FileSourceBridge.rows(readFunc(
+    val rows = FileSourceBridge.rows(readFunc(
       FileSourceBridge.partitionedFile(fp.path, fp.length, fp.modTime)))
+    val it = mask.fold(rows)(_.live(rows, fp.dataGen))
     new PartitionReader[InternalRow] {
       override def next(): Boolean = it.hasNext
       override def get(): InternalRow = it.next()

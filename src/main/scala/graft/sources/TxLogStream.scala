@@ -278,8 +278,10 @@ final case class TxLogPrunableScan(spark: SparkSession, zone: String,
     Some(copy(cap = Some(cap.fold(n)(math.min(_, n)))))
 
   /** Shortest prefix of `files` whose known committed rows reach `n`;
-    * the whole list when the stats never get there. */
+    * the whole list when the stats never get there — or while key
+    * deletes are pending, since committed rows then overcount. */
   private def limitPrefix(files: Seq[String], n: Int): Seq[String] = {
+    if (snap.pendingDeletes) return files
     var cum = 0L
     val keep = Seq.newBuilder[String]
     val it = files.iterator
@@ -480,7 +482,7 @@ final case class TxLogPrunableScan(spark: SparkSession, zone: String,
   private[graft] def innerFrame(pushed: Seq[sources.Filter],
                                 keep: Seq[String]): DataFrame = {
     val loaded = TxLog
-      .loadFiles(spark, snap, keep.map(p => zone.stripSuffix("/") + "/" + p))
+      .loadFiles(spark, zone, snap, keep)
     // re-express pushed filters over the inner read, so the NESTED plan
     // pushes them into the parquet scan — row-group min/max skipping
     // INSIDE each kept file, composing with the manifest-level file

@@ -382,7 +382,9 @@ final class TxLogScanBuilder(spark: SparkSession, zone: String,
     * any needed stat is missing (a stat-less file makes the manifest
     * count unknowable — full-scan instead of guessing). */
   private def countsFor(agg: Aggregation): Option[Seq[Long]] = {
-    if (agg.groupByExpressions.nonEmpty || pushed.nonEmpty) return None
+    // pending key deletes mask rows the committed counts still include
+    if (agg.groupByExpressions.nonEmpty || pushed.nonEmpty || snap.pendingDeletes)
+      return None
     // rows per file from ANY tracked column's stat ([[TxLog.metadataCount]]'s rule)
     def fileRows(f: String): Option[Long] =
       snap.colStats.get(f).flatMap(_.values.headOption).map(_.rows)

@@ -15,6 +15,9 @@ import graft.operators.TxLog
 class TxLogProtocolSpec extends SparkSpec {
   import spark.implicits._
 
+  /** A protocol newer than this reader's. */
+  private val future = TxLog.ProtocolVersion + 1
+
   private def freshZone(): String =
     Files.createTempDirectory("graft_proto").toString + "/zone"
 
@@ -53,7 +56,7 @@ class TxLogProtocolSpec extends SparkSpec {
     // a future-protocol CHECKPOINT refuses exactly like a gen manifest
     val c = chks.maxBy(_.getFileName.toString.stripPrefix("chk-").toLong)
     Files.writeString(c,
-      Files.readString(c).replace("\nprotocol=1\n", "\nprotocol=2\n"))
+      Files.readString(c).replace("\nprotocol=1\n", s"\nprotocol=$future\n"))
     intercept[TxLog.UnsupportedProtocolException] {
       TxLog.read(spark, zone).count()
     }
@@ -65,12 +68,12 @@ class TxLogProtocolSpec extends SparkSpec {
     TxLog.append(spark, zone, spark.range(10L, 15L).toDF("id"))
     val head = headManifest(zone)
     Files.writeString(head,
-      Files.readString(head).replace("\nprotocol=1\n", "\nprotocol=2\n"))
+      Files.readString(head).replace("\nprotocol=1\n", s"\nprotocol=$future\n"))
     val e = intercept[TxLog.UnsupportedProtocolException] {
       TxLog.read(spark, zone).count()
     }
-    assert(e.getMessage.contains("protocol 2") &&
-      e.getMessage.contains("understands up to 1"))
+    assert(e.getMessage.contains(s"protocol $future") &&
+      e.getMessage.contains(s"understands up to ${TxLog.ProtocolVersion}"))
   }
 
   test("a newer header line is refused loudly, not treated as torn") {
@@ -96,11 +99,11 @@ class TxLogProtocolSpec extends SparkSpec {
     val head = headManifest(zone)
     Files.writeString(head,
       Files.readString(head)
-        .replace("\nprotocol=1\n", "\nprotocol=2\nd deletion/vector.bin\n"))
+        .replace("\nprotocol=1\n", s"\nprotocol=$future\nd deletion/vector.bin\n"))
     val e = intercept[TxLog.UnsupportedProtocolException] {
       TxLog.read(spark, zone).count()
     }
-    assert(e.getMessage.contains("protocol 2"))
+    assert(e.getMessage.contains(s"protocol $future"))
   }
 
   test("an unparseable protocol VALUE on a complete manifest refuses loudly") {

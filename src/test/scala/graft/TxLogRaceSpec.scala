@@ -85,4 +85,123 @@ class TxLogRaceSpec extends SparkSpec {
     assert(TxLog.metadataCount(spark, zone) === Some(expected.size.toLong),
       "metadata row count must equal the true row count")
   }
+
+  // ---- merge-on-read commit boundaries -----------------------------------
+
+  private def rows(zone: String): Set[(Long, String)] =
+    TxLog.read(spark, zone).select("id", "v").as[(Long, String)].collect().toSet
+
+  test("a rewrite racing a key-file commit: the rewrite aborts and recomputes") {
+    // the chosen rule: rewrites are optimistic (they publish only at the
+    // generation after the one they read, so a key file landing in
+    // between fails their claim), and their output carries the read
+    // generation as its data generation
+    val zone = java.nio.file.Files.createTempDirectory("graft_race_mor").toString + "/zone"
+    TxLog.replace(spark, zone, (0L until 300L).map(i => (i, s"a$i")).toDF("id", "v")
+      .repartitionByRange(3, $"id"), statsCols = Seq("id"))
+    // one pending key file before the race
+    TxLog.changesExactlyOnce(spark, zone,
+      Seq((5L, "b5", "U"), (150L, null, "D")).toDF("id", "v", "op"), "id", "op", 0L)
+    val readGen = TxLog.latest(spark, zone).get.gen
+    var fired = 0
+    TxLog.deleteWhereCol(spark, zone, "id", 100L, 199L, prePublishHook = () => {
+      fired += 1
+      if (fired == 1)
+        TxLog.changesExactlyOnce(spark, zone, Seq((120L, "c120", "U"), (7L, null, "D"),
+          (400L, "c400", "U")).toDF("id", "v", "op"), "id", "op", 1L): Unit
+    })
+    assert(fired === 2, "the first publish must lose to the key-file commit and retry")
+    val head = TxLog.latest(spark, zone).get
+    // the delete's replacement files carry the generation they were read at
+    val keyGens = head.keys.values.map(_.gen).toSet
+    assert(keyGens === Set(readGen, readGen + 1))
+    val rewritten = head.files.filterNot(TxLog.snapshotAt(spark, zone, readGen + 1).get.files.contains)
+    assert(rewritten.nonEmpty && rewritten.forall(head.dataGen(_) == readGen + 1),
+      s"rewrite output must carry its read generation: ${head.dataGens}")
+    val model = ((0L until 300L).map(i => i -> s"a$i").toMap + (5L -> "b5") - 150L +
+      (120L -> "c120") - 7L + (400L -> "c400")).filterNot { case (k, _) => k >= 100L && k <= 199L }
+    assert(rows(zone) === model.toSet)
+  }
+
+  /** A CDC stream into `zone` through cdcChangesSink whose pre-publish
+    * hook throws once, on batch `failAt`; the query is restarted from its
+    * checkpoint and must replay that batch exactly once. Returns the
+    * staged directories the failed attempt left behind. */
+  private def failAndReplay(zone: String, failAt: Long,
+                            batches: Seq[Seq[(Long, String, Long, String)]]): Set[String] = {
+    val src = java.nio.file.Files.createTempDirectory("graft_race_src").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_race_ckpt").toString
+    var armed = true
+    var orphans = Set.empty[String]
+    val hook = () => {
+      val head = TxLog.latest(spark, zone).get
+      if (armed && head.meta.get("batchId").map(_.toLong).getOrElse(-1L) == failAt - 1L) {
+        armed = false
+        val referenced = (head.files ++ head.keys.keys).map(_.takeWhile(_ != '/')).toSet
+        orphans = new java.io.File(zone).listFiles().map(_.getName)
+          .filter(n => (n.startsWith("d-") || n.startsWith("k-")) && !referenced(n)).toSet
+        throw new IllegalStateException("injected failure before publish")
+      }
+    }
+    def run(): Unit = {
+      val q = spark.readStream.schema("id LONG, v STRING, seq LONG, op STRING").json(src)
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch(TxLog.cdcChangesSink(zone, "id", "seq", "op", hook))
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    batches.zipWithIndex.foreach { case (b, i) =>
+      b.toDF("id", "v", "seq", "op").coalesce(1).write.mode("append").json(src)
+      if (i == failAt) intercept[Exception](run()) else run()
+    }
+    run() // the restart replays the failed batch
+    assert(!armed, s"batch $failAt never reached its publish")
+    orphans
+  }
+
+  private def checkReplay(zone: String, batches: Seq[Seq[(Long, String, Long, String)]],
+                          base: Map[Long, String], orphans: Set[String]): Unit = {
+    val model = batches.flatten.foldLeft(base) { case (m, (k, v, _, op)) =>
+      if (op == "D") m - k else m + (k -> v) }
+    assert(rows(zone) === model.toSet)
+    val hist = TxLog.history(spark, zone).select("gen", "batch_id").as[(Long, Option[Long])]
+      .collect()
+    batches.indices.foreach { b =>
+      assert(hist.count(_._2.contains(b.toLong)) === 1, s"batchId $b must mark exactly one commit")
+    }
+    assert(orphans.nonEmpty, "the failed attempt staged files")
+    hist.foreach { case (g, _) =>
+      val s = TxLog.snapshotAt(spark, zone, g).get
+      assert(!(s.files ++ s.keys.keys).exists(f => orphans(f.takeWhile(_ != '/'))),
+        s"gen $g references a staged orphan")
+    }
+  }
+
+  private def seedZone(tag: String): (String, Map[Long, String]) = {
+    val zone = java.nio.file.Files.createTempDirectory(s"graft_race_$tag").toString + "/zone"
+    val base = (0L until 300L).map(i => i -> s"a$i").toMap
+    TxLog.replace(spark, zone, base.toSeq.toDF("id", "v").withColumn("seq", org.apache.spark.sql.functions.lit(0L))
+      .repartitionByRange(3, $"id"), statsCols = Seq("id"))
+    (zone, base)
+  }
+
+  private val streamBatches = Seq(
+    Seq((1L, "u1", 1L, "U"), (2L, null, 1L, "D"), (500L, "i500", 1L, "U")),
+    Seq((2L, "back2", 2L, "U"), (3L, null, 2L, "D"), (1L, "u1b", 2L, "U")),
+    Seq((500L, null, 3L, "D"), (4L, "u4", 3L, "U"), (250L, "u250", 3L, "U")))
+
+  test("failpoint: a throw after the data and key files are staged, then replay") {
+    val (zone, base) = seedZone("fp_mor")
+    // batch 0 on a 3-file zone commits merge-on-read
+    val orphans = failAndReplay(zone, 0L, streamBatches)
+    checkReplay(zone, streamBatches, base, orphans)
+  }
+
+  test("failpoint: a throw mid-fold, then replay") {
+    val (zone, base) = seedZone("fp_fold")
+    // two pending key files on a 3-file zone: batch 2 folds
+    val orphans = failAndReplay(zone, 2L, streamBatches)
+    checkReplay(zone, streamBatches, base, orphans)
+    assert(TxLog.latest(spark, zone).get.keys.isEmpty, "batch 2 must have folded")
+  }
 }
