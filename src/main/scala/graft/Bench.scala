@@ -537,20 +537,19 @@ object Bench {
     // slots — q274-q281 lost their round-over-round record while a
     // file-only diagnostic rode the line). calib_drift_max_step — the
     // grading signal derived from the profile — stays on the line.
-    // value, value_norm and calib are repeated as the LAST fields (same
-    // values, so a parser keeping either copy reads the same number): the
+    // value, value_norm and calib are the LAST fields, each once: the
     // consumer keeps the line's tail, and stray output after it clips the
     // head first.
     def line(names: Vector[String]): String = {
       val qs = names.flatMap(n => byName.get(n).map(v => "\"" + n + "\":" + f3(v)))
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","protocol":"$protocol","value_norm":${f3(valueNorm)},"calib":${f3(calib)},"calib_post":${f3(calibPost)},"calib_drift_max_step":${f3(driftMaxStep)},"qmin_total":${f3(qminTotal)},"passes":${
+      s"""{"metric":"total","unit":"sec","protocol":"$protocol","calib_post":${f3(calibPost)},"calib_drift_max_step":${f3(driftMaxStep)},"qmin_total":${f3(qminTotal)},"passes":${
         passTotals.map(f3).mkString("[", ",", "]")},"streamlake":$streamlakeLine,"queries":$qs,"quiet":$quietLine,"errors":${errors.size},"sf":"$sfDir","value":${f3(total)},"value_norm":${f3(valueNorm)},"calib":${f3(calib)}}"""
     }
     // 1850: the consumer keeps the last ~2000 chars of stdout and sbt's
     // "[success] Total time ..." footer is ~75 — 1850 + 75 < 2000 with
-    // slack, and it fits the full 27-query headline window (q274-q300 +
-    // quiet + streamlake measured 1833 chars on the r16 artifact shape).
+    // slack, and it fits a 28-query headline window (q273-q300 + quiet +
+    // streamlake render 1850 chars from the r17 artifact's values).
     var keep = headline
     while (line(keep).length > 1850 && keep.nonEmpty) keep = keep.init
     val out = line(keep)

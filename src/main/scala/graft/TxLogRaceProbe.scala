@@ -25,13 +25,8 @@ object TxLogRaceProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-    for (i <- 0 until n.toInt) {
-      // generous retries: under a two-process race every lost claim is
-      // an immediate recompute-and-retry, and losing many in a row is
-      // the point of the test
-      graft.operators.TxLog.append(spark, zone,
-        Seq((tag, i)).toDF("writer", "i"), maxRetries = 50)
-    }
+    for (i <- 0 until n.toInt)
+      graft.operators.TxLog.append(spark, zone, Seq((tag, i)).toDF("writer", "i"))
     spark.stop()
     println(s"race-probe done $tag $n")
   }

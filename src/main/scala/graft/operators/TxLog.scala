@@ -34,8 +34,18 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *    streaming commits stays a bounded log dir.
   *  - Publish claims the generation number with create-exclusive
   *    (`FileSystem.create(path, overwrite = false)`): two racing writers
-  *    cannot both own gen N — the loser aborts (compact) or recomputes
-  *    against the new head and retries (append).
+  *    cannot both own gen N. Every writer commits through one optimistic
+  *    loop ([[commitLoop]]): each attempt says what it changes against a
+  *    head and publishes at head+1, and a lost race backs off and meets
+  *    the new head by the writer's kind. REBASING writers (append,
+  *    replace, meta commits, the merge-on-read commit, restore) publish
+  *    the same staged files on it; RECOMPUTING writers (the fold,
+  *    deletes, [[replaceCas]]) read their head, so they stage again from
+  *    the new one; PINNED writers ([[commitRewrite]], replace with an
+  *    expected base, compaction) stop at the first loss. A rebasing
+  *    writer's loss does not count while a rival advanced the head; every
+  *    other loss counts, and the [[MaxLostRaces]]-th removes the staged
+  *    files and fails loudly.
   *  - A manifest is COMPLETE only if its trailing `end` marker parses; a
   *    reader that lists a manifest mid-write fails the parse and falls
   *    back to the previous generation. Readers therefore always see some
@@ -154,14 +164,6 @@ object TxLog {
   private val ThisGen = Long.MinValue
 
   private def atGen(g: Long)(v: Long): Long = if (v == ThisGen) g else v
-
-  /** `s` as published at generation `g`: [[ThisGen]] placeholders
-    * resolved, data generations dropped when no key file is pending. */
-  private def publishedAs(s: Snapshot, g: Long): Snapshot = {
-    val keys = s.keys.map { case (p, k) => p -> k.copy(gen = atGen(g)(k.gen)) }
-    s.copy(gen = g, keys = keys,
-      dataGens = if (keys.isEmpty) Map.empty else s.dataGens.map { case (p, d) => p -> atGen(g)(d) })
-  }
 
   /** The zone meta key naming the merge key the pending key files hold. */
   private[graft] val MergeKeyMeta = "merge.key"
@@ -763,13 +765,15 @@ object TxLog {
     out.result()
   }
 
-  /** Atomically publish a new generation at number `gen` (rebased on head
-    * `gen - 1`) — or, when that number is occupied by a crash-torn
-    * manifest past the grace window, at the next free number (the corpse
-    * is skipped, never deleted; see [[TornManifestGraceMs]]). Returns the
-    * claimed generation number, or None when another writer owns `gen`
-    * with a complete or in-flight manifest — the caller rebases on the
-    * new head and retries.
+  /** Atomically publish `next` as a new generation at number `next.gen`
+    * (rebased on head `next.gen - 1`) — or, when that number is occupied
+    * by a crash-torn manifest past the grace window, at the next free
+    * number (the corpse is skipped, never deleted; see
+    * [[TornManifestGraceMs]]). Returns the published snapshot (claimed
+    * number, [[ThisGen]] placeholders resolved, data generations dropped
+    * when no key file is pending), or None when another writer owns the
+    * number with a complete or in-flight manifest — the caller rebases on
+    * the new head and retries.
     *
     * FORK CHECK: number-skipping (and a vacuumed corpse freeing a number
     * below an in-flight higher claim) makes it possible for two writers
@@ -808,21 +812,16 @@ object TxLog {
     * exposure is the rival arm's acknowledged rows missing from the
     * successor chain, the same single-writer-per-zone caveat
     * [[exactlyOnceAppend]] already documents. */
-  private def publish(spark: SparkSession, zone: String, gen: Long,
-                      format: String, files: Seq[String],
-                      meta: Map[String, String] = Map.empty,
-                      colStats: Map[String, Map[String, ColStat]] = Map.empty,
-                      base: Option[Snapshot] = None,
-                      sizes: Map[String, (Long, Long)] = Map.empty,
-                      keys0: Map[String, KeyFile] = Map.empty,
-                      dataGens0: Map[String, Long] = Map.empty): Option[Long] = {
-    require(meta.forall { case (k, v) =>
+  private def publish(spark: SparkSession, zone: String, next: Snapshot,
+                      base: Option[Snapshot]): Option[Snapshot] = {
+    require(next.meta.forall { case (k, v) =>
       !k.contains('=') && !(k + v).exists(c => c == '\n' || c == '\r') },
-      s"manifest meta keys must be =-free and values newline-free: $meta")
-    require(colStats.values.flatMap(_.keys).forall(c =>
+      s"manifest meta keys must be =-free and values newline-free: ${next.meta}")
+    require(next.colStats.values.flatMap(_.keys).forall(c =>
       !c.contains('|') && !c.contains('=') && !c.contains(',')),
       "stats column names must be free of | = , characters")
     val f = fs(spark, zone)
+    val gen = next.gen
     f.mkdirs(genPath(zone, gen).getParent)
     var g = gen
     var claimed: Option[java.io.OutputStream] = None
@@ -867,10 +866,10 @@ object TxLog {
     }
     // the claimed number is now known: stamp it into this commit's key
     // files and data generations
-    val keys = keys0.map { case (p, k) => p -> k.copy(gen = atGen(g)(k.gen)) }
-    val dataGens =
-      if (keys.isEmpty) Map.empty[String, Long]
-      else dataGens0.map { case (p, d) => p -> atGen(g)(d) }
+    val keys = next.keys.map { case (p, k) => p -> k.copy(gen = atGen(g)(k.gen)) }
+    val s = next.copy(gen = g, base = baseGen, keys = keys,
+      dataGens = if (keys.isEmpty) Map.empty
+                 else next.dataGens.map { case (p, d) => p -> atGen(g)(d) })
     try {
       // DELTA ENCODING: commit metadata must be O(touched files), never
       // O(table) — at a streaming merge sink's cadence a full-snapshot
@@ -881,24 +880,24 @@ object TxLog {
       val body = base match {
         case Some(b) =>
           val baseSet = b.files.toSet
-          val nextSet = files.toSet
-          val adds = files.filterNot(baseSet)
+          val nextSet = s.files.toSet
+          val adds = s.files.filterNot(baseSet)
           val removes = b.files.filterNot(nextSet)
-          if (adds.size + removes.size >= files.size)
-            manifestBody(delta = false, g, baseGen, format, files, Nil,
-              meta, colStats, sizes, keys, dataGens = dataGens)
+          if (adds.size + removes.size >= s.files.size)
+            manifestBody(delta = false, g, baseGen, s.format, s.files, Nil,
+              s.meta, s.colStats, s.sizes, keys, dataGens = s.dataGens)
           else
-            manifestBody(delta = true, g, baseGen, format, adds, removes,
-              meta,
-              colStats.filter { case (k, _) => !baseSet(k) || !b.colStats.get(k).contains(colStats(k)) },
-              sizes.filter { case (k, _) => !baseSet(k) || !b.sizes.get(k).contains(sizes(k)) },
+            manifestBody(delta = true, g, baseGen, s.format, adds, removes,
+              s.meta,
+              s.colStats.filter { case (k, v) => !baseSet(k) || !b.colStats.get(k).contains(v) },
+              s.sizes.filter { case (k, v) => !baseSet(k) || !b.sizes.get(k).contains(v) },
               keys.filter { case (k, v) => !b.keys.get(k).contains(v) },
               b.keys.keys.filterNot(keys.contains).toSeq,
-              dataGens.filter { case (k, v) => !b.dataGens.get(k).contains(v) },
+              s.dataGens.filter { case (k, v) => !b.dataGens.get(k).contains(v) },
               pendingDeletes = keys.nonEmpty)
         case None =>
-          manifestBody(delta = false, g, baseGen, format, files, Nil,
-            meta, colStats, sizes, keys, dataGens = dataGens)
+          manifestBody(delta = false, g, baseGen, s.format, s.files, Nil,
+            s.meta, s.colStats, s.sizes, keys, dataGens = s.dataGens)
       }
       out.write(body.getBytes("UTF-8"))
     } finally out.close()
@@ -925,10 +924,8 @@ object TxLog {
       // bounding every later reader's chain walk. The publisher holds the
       // complete next state in memory, so this is one extra small write —
       // and best-effort: a crash here only lengthens chains.
-      if (g > 0L && g % CheckpointInterval == 0L)
-        writeCheckpoint(f, zone, Snapshot(g, format, files, meta,
-          colStats, base = baseGen, sizes = sizes, keys = keys, dataGens = dataGens))
-      Some(g)
+      if (g > 0L && g % CheckpointInterval == 0L) writeCheckpoint(f, zone, s)
+      Some(s)
     }
   }
 
@@ -976,6 +973,159 @@ object TxLog {
         f.getFileStatus(new Path(zone.stripSuffix("/") + "/" + rel)).getLen)
     }.sum
 
+  private def newDir(root: Path, prefix: String): Path =
+    new Path(root, prefix + UUID.randomUUID().toString.take(8))
+
+  /** The data files one commit attempt wrote under fresh `dirs`:
+    * zone-relative names with their (bytes, mtimeMillis) and typed stats. */
+  private final case class Staged(dirs: Seq[Path], info: Seq[(String, (Long, Long))],
+                                  colStats: Map[String, Map[String, ColStat]]) {
+    def files: Seq[String] = info.map(_._1)
+    /** The staged files as the whole zone: what a replace or a
+      * compaction of `head` publishes, no key file pending. */
+    def asZone(head: Snapshot, meta: Map[String, String]): Snapshot =
+      Snapshot(head.gen, head.format, files, meta, colStats, sizes = info.toMap)
+  }
+
+  /** Write `out` (physical column names) as `format` into a fresh `d-`
+    * dir of `zone` and list it ([[listStaged]]); a failed write or listing
+    * removes the dir. */
+  private def stage(spark: SparkSession, zone: String, format: String, out: DataFrame,
+                    statsCols: Seq[String], colmap: Map[String, String] = Map.empty): Staged = {
+    val f = fs(spark, zone)
+    val dir = newDir(f.makeQualified(new Path(zone)), "d-")
+    try {
+      out.write.mode(SaveMode.ErrorIfExists).format(format).save(dir.toString)
+      listStaged(spark, zone, dir, Some(out.schema), format, statsCols, colmap)
+    } catch { case e: Throwable => f.delete(dir, true); throw e }
+  }
+
+  /** The files already written under `dir` that `keep` accepts, with the
+    * stats of `statsCols` ([[collectFileStats]]); a missing or empty dir
+    * stages nothing. */
+  private def listStaged(spark: SparkSession, zone: String, dir: Path,
+                         written: Option[org.apache.spark.sql.types.StructType],
+                         format: String, statsCols: Seq[String],
+                         colmap: Map[String, String] = Map.empty,
+                         keep: String => Boolean = _ => true): Staged = {
+    val f = fs(spark, zone)
+    val root = f.makeQualified(new Path(zone))
+    val info = (try listRelInfo(f, root, dir)
+                catch { case _: java.io.FileNotFoundException => Nil }).filter(e => keep(e._1))
+    val files = info.map(_._1).toSet
+    Staged(Seq(dir), info,
+      if (info.isEmpty) Map.empty
+      else collectFileStats(spark, root, dir, info, written, format, statsCols, colmap)
+        .filter { case (p, _) => files(p) })
+  }
+
+  /** `head` with the files in `removed` dropped and the `staged` files
+    * added at data generation `dataGen`; every other field carries over.
+    * distinct: after a fork-check abort a successor may already carry the
+    * staged files forward, and listing them twice would read their rows
+    * twice (data files are uuid-named, so distinct never merges two). */
+  private def nextState(head: Snapshot, removed: Set[String], staged: Staged,
+                        dataGen: Long): Snapshot = {
+    def kept[V](m: Map[String, V]) = m.filter { case (p, _) => !removed(p) }
+    head.copy(
+      files = (head.files.filterNot(removed) ++ staged.files).distinct.sorted,
+      colStats = kept(head.colStats) ++ staged.colStats,
+      sizes = kept(head.sizes) ++ staged.info,
+      dataGens = kept(head.dataGens) ++ staged.files.map(_ -> dataGen))
+  }
+
+  /** How a writer meets a lost publish race ([[commitLoop]]). */
+  private sealed trait OnLoss[+R]
+  /** The staged files hold on any head: publish them on the new one. */
+  private case object Rebase extends OnLoss[Nothing]
+  /** The attempt read its head: stage again from the new one. */
+  private case object Recompute extends OnLoss[Nothing]
+  /** The staged files hold only on the head they read: remove them and
+    * end the commit with `lost()`. */
+  private final case class Pinned[+R](lost: () => R) extends OnLoss[R]
+
+  /** What one commit attempt decided against the head it was handed. */
+  private sealed trait Step[+R]
+  /** End the commit without publishing (a no-op, an abort, a handover);
+    * None reports the batch as already committed. */
+  private final case class Finish[+R](result: Option[R]) extends Step[R]
+  /** Publish `next` at the head's generation + 1; its new files sit under
+    * `staged`, and `result` answers from the published snapshot. */
+  private final case class Publish[+R](next: Snapshot, staged: Seq[Path],
+                                       result: Snapshot => R) extends Step[R]
+
+  /** Counted lost races after which a commit gives up. */
+  private val MaxLostRaces = 5
+
+  /** THE optimistic commit every writer runs: hand `attempt` a head
+    * (first `head0`, the one the writer staged against; after a lost
+    * race the `latest` head, resolved once), publish what it proposes,
+    * and meet a lost race by `onLoss` after a `min(200, 10·losses)` ms
+    * back-off — the winner may still be writing its manifest, invisible
+    * to `latest`. Every loss of a recomputing writer counts (each retry
+    * reruns its Spark jobs); a rebasing writer's loss counts only when no
+    * rival advanced the head (Delta's optimistic-transaction rule), so a
+    * busy zone delays it but never fails it. The [[MaxLostRaces]]-th
+    * counted loss fails loudly. `prePublishHook` runs once per staging,
+    * after the files are written and before their first publish.
+    *
+    * Exactly-once: with `batchId` the mark is re-checked on every head,
+    * so a rival that committed the batch makes this one skip (None), and
+    * it is stamped into the publish, so data and mark flip together.
+    *
+    * Staged dirs no published generation references are removed on every
+    * way out but a win: a skip, a [[Finish]], a pinned loss, a
+    * recomputing loss, exhaustion, or a throw before `publish` (from the
+    * attempt or the hook). A throw out of `publish` leaves them: its
+    * manifest may already be complete and visible, and then it references
+    * them (and carries the batch mark a replay would skip on). */
+  private def commitLoop[R](spark: SparkSession, zone: String, op: String, head0: Snapshot,
+                            onLoss: OnLoss[R], batchId: Option[Long] = None,
+                            prePublishHook: () => Unit = () => ())(
+                            attempt: Snapshot => Step[R]): Option[R] = {
+    val f = fs(spark, zone)
+    var staged = Seq.empty[Path]
+    def unstage(): Unit = { staged.foreach(f.delete(_, true)); staged = Nil }
+    @annotation.tailrec
+    def run(head: Snapshot, losses: Int, counted: Int): Option[R] =
+      (if (committedAt(head, batchId)) Finish(None) else attempt(head)) match {
+        case Finish(r) => unstage(); r
+        case Publish(next, dirs, result) =>
+          staged = dirs
+          if (losses == 0 || onLoss == Recompute) prePublishHook()
+          val mark = batchId.map(b => "batchId" -> b.toString)
+          staged = Nil
+          publish(spark, zone, next.copy(gen = head.gen + 1, meta = next.meta ++ mark),
+            Some(head)) match {
+            case Some(s) => Some(result(s))
+            case None =>
+              staged = dirs
+              onLoss match {
+                case Pinned(lost) => unstage(); Some(lost())
+                case _ =>
+                  if (onLoss == Recompute) unstage()
+                  val tries = losses + 1
+                  Thread.sleep(math.min(200L, 10L * tries))
+                  val nextHead = latest(spark, zone).getOrElse(head)
+                  val total = counted + (if (onLoss == Recompute || nextHead.gen <= head.gen) 1 else 0)
+                  // the catch below removes what is still staged
+                  if (total == MaxLostRaces) throw new IllegalStateException(
+                    s"txlog $op on $zone lost the publish race on $tries attempts " +
+                      s"($total of them counted); giving up")
+                  run(nextHead, tries, total)
+              }
+          }
+      }
+    try run(head0, 0, 0)
+    catch { case e: Throwable => unstage(); throw e }
+  }
+
+  /** [[commitLoop]] for a writer without a batch mark: nothing skips it. */
+  private def commit[R](spark: SparkSession, zone: String, op: String, head0: Snapshot,
+                        onLoss: OnLoss[R], prePublishHook: () => Unit = () => ())(
+                        attempt: Snapshot => Step[R]): R =
+    commitLoop(spark, zone, op, head0, onLoss, None, prePublishHook)(attempt).get
+
   /** Bring an EXISTING plain directory zone under the log: gen 0 is the
     * zone's current recursive data-file listing. No-op if a log exists. */
   def init(spark: SparkSession, zone: String, format: String = "parquet"): Snapshot =
@@ -985,15 +1135,11 @@ object TxLog {
       val info =
         if (!f.exists(root)) Seq.empty
         else listRelInfo(f, root, root).filterNot(_._1.startsWith(LogDir))
-      val files = info.map(_._1)
-      val sizes = info.toMap
-      publish(spark, zone, 0L, format, files,
-        meta = Map("op" -> "init"), sizes = sizes) match {
-        case Some(g) => Snapshot(g, format, files, sizes = sizes)
+      publish(spark, zone, Snapshot(0L, format, info.map(_._1), Map("op" -> "init"),
+        sizes = info.toMap), base = None).getOrElse(
         // lost the init race: someone else published first — read them
-        case None => latest(spark, zone).getOrElse(
-          sys.error(s"txlog init of $zone lost the publish race"))
-      }
+        latest(spark, zone).getOrElse(
+          sys.error(s"txlog init of $zone lost the publish race")))
     }
 
   /** CREATE an empty zone: one commit carrying the declared `schema`
@@ -1014,11 +1160,8 @@ object TxLog {
     val meta = Map("op" -> "create", "schema" -> schema.json) ++
       (if (statsCols.nonEmpty) Map("stats.cols" -> statsCols.mkString(","))
        else Map.empty)
-    publish(spark, zone, 0L, format, Nil, meta) match {
-      case Some(g) => Snapshot(g, format, Nil, meta)
-      case None => sys.error(
-        s"txlog create of $zone lost the publish race — a rival created it first")
-    }
+    publish(spark, zone, Snapshot(0L, format, Nil, meta), base = None).getOrElse(sys.error(
+      s"txlog create of $zone lost the publish race — a rival created it first"))
   }
 
   /** Publish a COPY-ON-WRITE group rewrite: drop `removed` (zone-relative
@@ -1040,53 +1183,29 @@ object TxLog {
                     removed: Seq[String], dataDir: String,
                     op: String,
                     onlyFiles: Option[Set[String]] = None): Snapshot = {
-    val f = fs(spark, zone)
-    val root = f.makeQualified(new Path(zone))
     val dir = new Path(dataDir)
-    def abortMoved(found: Long): Nothing = {
-      f.delete(dir, true)
+    def moved(found: Long): Nothing =
       throw new SnapshotMovedException(zone, expectedGen, found)
-    }
     val head = latest(spark, zone).getOrElse(sys.error(
       s"txlog commitRewrite: $zone has no transaction log"))
-    if (head.gen != expectedGen) abortMoved(head.gen)
+    if (head.gen != expectedGen) { fs(spark, zone).delete(dir, true); moved(head.gen) }
     // `onlyFiles` (zone-relative) is the writers' own commit report: a
     // zombie/speculative task finishing its file AFTER the caller's
-    // orphan sweep must not get that file adopted by a directory listing
-    val newInfo = (if (f.exists(dir)) listRelInfo(f, root, dir) else Nil)
-      .filter { case (p, _) => onlyFiles.forall(_.contains(p)) }
-    val newFiles = newInfo.map(_._1)
-    // a rewrite can legitimately produce ZERO replacement rows (a DELETE
+    // orphan sweep must not get that file adopted by a directory listing.
+    // A rewrite can legitimately produce ZERO replacement rows (a DELETE
     // matching every row of the touched files writes nothing — lazy
-    // writers create no files, possibly not even the dir); reading the
-    // empty/missing dir for stats would throw, so skip collection
-    val newColStats =
-      if (newFiles.isEmpty) Map.empty[String, Map[String, ColStat]]
-      else collectFileStats(spark, root, dir, newInfo, physicalSchema(head),
-        head.format, effectiveStatsCols(Nil, head.meta), colMap(head.meta))
-    val removedSet = removed.toSet
-    val newSet = newFiles.toSet
-    val nextFiles = (head.files.filterNot(removedSet) ++ newFiles).sorted
-    val nextColStats =
-      head.colStats.filter { case (p, _) => !removedSet(p) } ++
-        newColStats.filter { case (p, _) => newSet(p) }
-    val nextSizes =
-      head.sizes.filter { case (p, _) => !removedSet(p) } ++ newInfo.toMap
-    // the replacement rows were read through the pending deletes of
-    // `head`: stamped with its generation, only key files committed
-    // after it can mask them
-    val nextGens = (head.dataGens -- removed) ++ newFiles.map(_ -> head.gen)
-    publish(spark, zone, head.gen + 1, head.format, nextFiles,
-      head.meta ++ Map("op" -> op), nextColStats,
-      base = Some(head), sizes = nextSizes,
-      keys0 = head.keys, dataGens0 = nextGens) match {
-      case Some(g) =>
-        publishedAs(Snapshot(g, head.format, nextFiles, head.meta ++ Map("op" -> op),
-          nextColStats, base = head.gen, sizes = nextSizes, keys = head.keys,
-          dataGens = nextGens), g)
-      case None =>
-        // a rival landed between the check and the claim
-        abortMoved(latest(spark, zone).map(_.gen).getOrElse(-1L))
+    // writers create no files, possibly not even the dir).
+    val files = listStaged(spark, zone, dir, physicalSchema(head), head.format,
+      effectiveStatsCols(Nil, head.meta), colMap(head.meta),
+      keep = p => onlyFiles.forall(_.contains(p)))
+    // a rival landing between the check and the claim aborts the statement
+    commit[Snapshot](spark, zone, op, head,
+      Pinned(() => moved(latest(spark, zone).map(_.gen).getOrElse(-1L)))) { h =>
+      // the replacement rows were read through the pending deletes of
+      // `h`: stamped with its generation, only key files committed after
+      // it can mask them
+      Publish(nextState(h, removed.toSet, files, h.gen).copy(meta = h.meta ++ Map("op" -> op)),
+        files.dirs, identity)
     }
   }
 
@@ -1095,37 +1214,21 @@ object TxLog {
     * DDL that changes what the log KNOWS without touching data (ALTER
     * TABLE ADD COLUMNS' schema evolution, stats-column re-targeting).
     * O(1) in table size: the delta commit records zero file actions,
-    * only the new meta map. OCC like every commit — `updatesFor` runs
-    * against each attempt's fresh head, so validation always sees the
-    * state it will be applied to. */
+    * only the new meta map. `updatesFor` runs against each attempt's
+    * head, so validation always sees the state it will be applied to. */
   def commitMeta(spark: SparkSession, zone: String, op: String,
                  updatesFor: Snapshot => Map[String, String],
-                 maxAttempts: Int = 5,
                  /** optional per-attempt stats transform (RENAME/DROP
                    * COLUMN re-key the logical-named stat entries in the
                    * same commit — still zero file actions) */
                  statsFor: Snapshot => Option[Map[String, Map[String, ColStat]]] =
                    _ => None): Snapshot = {
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val head = latest(spark, zone).getOrElse(sys.error(
-        s"txlog commitMeta($op): $zone has no transaction log"))
-      val m = head.meta ++ updatesFor(head) ++ Map("op" -> op)
-      val cst = statsFor(head).getOrElse(head.colStats)
-      publish(spark, zone, head.gen + 1, head.format, head.files, m,
-        cst, base = Some(head), sizes = head.sizes,
-        keys0 = head.keys, dataGens0 = head.dataGens) match {
-        case Some(g) =>
-          return Snapshot(g, head.format, head.files, m,
-            cst, base = head.gen, sizes = head.sizes,
-            keys = head.keys, dataGens = head.dataGens)
-        case None => ()
-      }
-      attempt += 1
-      Thread.sleep(math.min(200L, 10L * attempt))
+    val head0 = latest(spark, zone).getOrElse(sys.error(
+      s"txlog commitMeta($op): $zone has no transaction log"))
+    commit[Snapshot](spark, zone, op, head0, Rebase) { head =>
+      Publish(head.copy(meta = head.meta ++ updatesFor(head) ++ Map("op" -> op),
+        colStats = statsFor(head).getOrElse(head.colStats)), Nil, identity)
     }
-    sys.error(s"txlog commitMeta($op) on $zone conflicted $maxAttempts times")
   }
 
   /** ALTER TABLE ADD COLUMNS: append `fields` to the tracked schema in
@@ -1329,21 +1432,6 @@ object TxLog {
           if (f.name == name) f.copy(dataType = to) else f)).json)
     })
 
-  /** Re-target which columns FUTURE commits collect per-file stats for
-    * (the `stats.cols` choice writes otherwise inherit). Meta-only:
-    * already-committed files keep the stats they have; the next
-    * append/replace/compact stamps the new set. Empty = stop tracking. */
-  def setStatsCols(spark: SparkSession, zone: String,
-                   cols: Seq[String]): Snapshot =
-    commitMeta(spark, zone, "set-stats-cols", head => {
-      val schemaNames = zoneSchema(head).map(_.fieldNames.toSet)
-      cols.foreach { c =>
-        require(schemaNames.forall(_.contains(c)),
-          s"txlog setStatsCols: $c is not a column of the tracked schema")
-      }
-      Map("stats.cols" -> cols.mkString(","))
-    })
-
   /** Read the zone at its newest complete snapshot. A zone without a log
     * is read as a plain directory (migration path). */
   def read(spark: SparkSession, zone: String): DataFrame =
@@ -1391,14 +1479,9 @@ object TxLog {
       (decName(p.substring(0, i)), decName(p.substring(i + 1)))
     }.toMap).getOrElse(Map.empty)
 
-  private def encodeColMap(m: Map[String, String]): String =
+  private[graft] def encodeColMap(m: Map[String, String]): String =
     m.toSeq.sortBy(_._1).map { case (l, p) => encName(l) + ":" + encName(p) }
       .mkString(",")
-
-  /** The encoder, for the catalog's combined ALTER commit (which folds a
-    * fresh-physical ADD into the same meta commit as its statsCols). */
-  private[graft] def encodeColMapPublic(m: Map[String, String]): String =
-    encodeColMap(m)
 
   /** Physical names no future column may claim: every physical name a
     * drop or rename retired from its logical slot. */
@@ -1744,17 +1827,16 @@ object TxLog {
     org.apache.spark.sql.types.StructType(kept ++ added)
   }
 
-  /** The schema this append commits: the head's tracked schema (or, for
-    * a pre-tracking zone with data, its inferred read schema — one-time
-    * bootstrap) merged with the incoming frame's. */
+  /** The schema an append or merge of `written` commits: the head's
+    * tracked schema (or, for a pre-tracking zone with data, its inferred
+    * read schema — one-time bootstrap) merged with it by
+    * [[mergeSchemas]]. */
   private def evolvedSchema(spark: SparkSession, zone: String, head: Snapshot,
-                            df: DataFrame)
-      : org.apache.spark.sql.types.StructType = {
-    val base = zoneSchema(head).orElse(
-      if (head.files.nonEmpty) Some(readSnapshot(spark, zone, head).schema)
-      else None)
-    base.fold(df.schema)(mergeSchemas(_, df.schema))
-  }
+                            written: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType =
+    zoneSchema(head).orElse(
+      if (head.files.nonEmpty) Some(readSnapshot(spark, zone, head).schema) else None)
+      .fold(written)(mergeSchemas(_, written))
 
   /** The typed per-file stats ([[ColStat]]: rows, null count, min/max)
     * of the `statsCols` columns, over the files a commit just wrote to
@@ -1987,33 +2069,28 @@ object TxLog {
       .getOrElse(Nil)
 
   /** Append `df` as a new generation: new files land in a fresh
-    * `d-<uuid>/` dir, the manifest is head.files ++ new files. On a lost
-    * publish race the file list is recomputed against the new head and
-    * retried — appends never conflict on data, only on the gen number.
+    * `d-<uuid>/` dir, the manifest is head.files ++ new files. A lost
+    * publish race rebases the same files on the new head — appends never
+    * conflict on data, only on the gen number.
     * The new files' typed stats ([[ColStat]]) for `statsCols` — or, when
     * empty, for the zone's committed `stats.cols` — are committed in the
     * same manifest, enabling [[readWhereCol]] file skipping. */
   def append(spark: SparkSession, zone: String, df: DataFrame,
-             maxRetries: Int = 5,
              meta: Map[String, String] = Map.empty,
              statsCols: Seq[String] = Nil): Snapshot =
-    appendImpl(spark, zone, df, maxRetries, meta, statsCols, batchId = None)
+    appendImpl(spark, zone, df, meta, statsCols, batchId = None)
       .getOrElse(sys.error("unreachable: append without a batchId never skips"))
 
-  /** Shared append body. With `batchId`, the committed high-water mark is
-    * re-checked against the CURRENT head inside the publish retry loop —
-    * closing the check-then-act window where two writers replaying the
-    * same batch could both commit (the loser's rebase would otherwise
-    * keep its rows). Returns None when the batch was already committed
-    * (the staged data dir is removed). */
+  /** Shared append body. With `batchId`, a batch at or below the
+    * committed mark is skipped before anything is staged, and
+    * [[commitLoop]] re-checks it on every head it publishes on. Returns
+    * None when the batch was already committed. */
   private def appendImpl(spark: SparkSession, zone: String, df: DataFrame,
-                         maxRetries: Int, meta: Map[String, String],
+                         meta: Map[String, String],
                          statsCols: Seq[String],
                          batchId: Option[Long]): Option[Snapshot] = {
-    val f = fs(spark, zone)
-    val root = f.makeQualified(new Path(zone))
-    val dataDir = new Path(root, "d-" + UUID.randomUUID().toString.take(8))
     val head0 = latest(spark, zone).getOrElse(init(spark, zone))
+    if (committedAt(head0, batchId)) return None
     // write under PHYSICAL names (stable across renames; a frame column
     // the mapping doesn't know is new — its physical name IS its name)
     val cmap = colMap(head0.meta)
@@ -2036,57 +2113,20 @@ object TxLog {
           "name retired by a drop/rename — add them via ALTER TABLE ADD " +
           "COLUMNS (addColumns), which maps them to a fresh physical name")
     }
-    val out = toPhysical(df, cmap)
-    out.write.mode(SaveMode.ErrorIfExists).format(head0.format).save(dataDir.toString)
-    val addedInfo = listRelInfo(f, root, dataDir)
-    val added = addedInfo.map(_._1)
     val tCols = effectiveStatsCols(statsCols, head0.meta)
-    val addedColStats =
-      collectFileStats(spark, root, dataDir, addedInfo, Some(out.schema),
-        head0.format, tCols, cmap)
+    val added = stage(spark, zone, head0.format, toPhysical(df, cmap), tCols, cmap)
     val statsMeta =
       if (tCols.nonEmpty) Map("stats.cols" -> tCols.mkString(",")) else Map.empty
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val head = latest(spark, zone).getOrElse(head0)
-      if (batchId.exists(b =>
-        head.meta.get("batchId").exists(_.toLong >= b))) {
-        f.delete(dataDir, true)
-        return None
-      }
+    commitLoop[Snapshot](spark, zone, "append", head0, Rebase, batchId) { head =>
       // carry earlier generations' metadata forward (e.g. the streaming
       // sink's batchId high-water mark); this publish's keys override.
-      // distinct: after a fork-check abort a successor may have carried
-      // our `added` files forward already — re-listing them here would
-      // read every appended row twice (data files are uuid-named, so
-      // distinct never merges genuinely different files)
-      // schema evolves against the CURRENT head each attempt — a rival
-      // append that won the race may have added its own columns, and the
-      // rebase must merge with those, not with the stale head0 view
-      val schemaMeta =
-        Map("schema" -> evolvedSchema(spark, zone, head, df).json)
-      val next = Snapshot(head.gen + 1, head.format,
-        (head.files ++ added).distinct.sorted,
-        head.meta ++ statsMeta ++ schemaMeta ++ meta ++ Map("op" -> "append"),
-        head.colStats ++ addedColStats,
-        base = head.gen, sizes = head.sizes ++ addedInfo.toMap,
-        keys = head.keys, dataGens = head.dataGens ++ added.map(_ -> ThisGen))
-      publish(spark, zone, next.gen, next.format, next.files, next.meta,
-        next.colStats, base = Some(head),
-        sizes = next.sizes, keys0 = next.keys, dataGens0 = next.dataGens) match {
-        // base stays head.gen even when publish skip-forwarded past a
-        // corpse (g > head.gen + 1) — it names the REBASED head, exactly
-        // what the on-disk manifest records
-        case Some(g) => return Some(publishedAs(next, g))
-        case None => ()
-      }
-      attempt += 1
-      // the racing winner may still be mid-manifest-write (invisible to
-      // latest()); back off so the rebase sees its completed head
-      Thread.sleep(math.min(200L, 10L * attempt))
+      // The schema evolves against THIS head — a rival append that won
+      // the race may have added its own columns.
+      val schemaMeta = Map("schema" -> evolvedSchema(spark, zone, head, df.schema).json)
+      Publish(nextState(head, Set.empty, added, ThisGen).copy(
+        meta = head.meta ++ statsMeta ++ schemaMeta ++ meta ++ Map("op" -> "append")),
+        added.dirs, identity)
     }
-    f.delete(dataDir, true)
-    sys.error(s"txlog append to $zone lost the publish race $maxRetries times")
   }
 
   /** Common-prefix string comparison for "str" stats: compares only the
@@ -2239,57 +2279,38 @@ object TxLog {
     *    anomaly; aborting is what makes read-modify-write transforms
     *    safe. [[replaceCas]] is the retry loop packaged. */
   def replace(spark: SparkSession, zone: String, df: DataFrame,
-              maxRetries: Int = 5,
               meta: Map[String, String] = Map.empty,
               statsCols: Seq[String] = Nil,
               expectedBase: Option[Long] = None): Snapshot = {
-    val f = fs(spark, zone)
-    val root = f.makeQualified(new Path(zone))
-    val dataDir = new Path(root, "d-" + UUID.randomUUID().toString.take(8))
     val head0 = latest(spark, zone).getOrElse(init(spark, zone))
     expectedBase.filter(_ != head0.gen).foreach { eg =>
       // moved before any data was even staged — cheapest abort
       throw new SnapshotMovedException(zone, eg, head0.gen)
     }
-    df.write.mode(SaveMode.ErrorIfExists).format(head0.format).save(dataDir.toString)
-    val filesInfo = listRelInfo(f, root, dataDir)
-    val files = filesInfo.map(_._1)
     val tCols = effectiveStatsCols(statsCols, head0.meta)
-    val colStats =
-      collectFileStats(spark, root, dataDir, filesInfo, Some(df.schema),
-        head0.format, tCols)
-    val statsMeta =
-      if (tCols.nonEmpty) Map("stats.cols" -> tCols.mkString(",")) else Map.empty
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val head = latest(spark, zone).getOrElse(head0)
-      expectedBase.filter(_ != head.gen).foreach { eg =>
-        // read-snapshot validation: the head moved past the generation
-        // this replacement was computed from — clean up and abort (the
-        // staged dir was never referenced by any manifest, so the delete
-        // can strand no reader)
-        f.delete(dataDir, true)
-        throw new SnapshotMovedException(zone, eg, head.gen)
-      }
-      // replace RESETS the tracked schema: every live file is new, so the
-      // zone's schema IS the replacement frame's (the retype path the
-      // append-side merge guard points at). The column mapping resets
-      // with it — the rewrite wrote logical names everywhere.
-      val m = (head.meta -- ColMapMetaKeys - MergeKeyMeta) ++ statsMeta ++
-        Map("schema" -> df.schema.json) ++ meta ++ Map("op" -> "replace")
-      publish(spark, zone, head.gen + 1, head.format, files, m,
-        colStats, base = Some(head), sizes = filesInfo.toMap) match {
-        case Some(g) =>
-          return Snapshot(g, head.format, files, m, colStats,
-            base = head.gen, sizes = filesInfo.toMap)
-        case None => ()
-      }
-      attempt += 1
-      Thread.sleep(math.min(200L, 10L * attempt))
+    val files = stage(spark, zone, head0.format, df, tCols)
+    // read-snapshot validation: a head that moved past the generation
+    // this replacement was computed from removes the staged files (never
+    // referenced by any manifest, so no reader is stranded) and aborts
+    val onLoss = expectedBase.fold[OnLoss[Snapshot]](Rebase)(eg =>
+      Pinned(() => throw new SnapshotMovedException(zone, eg,
+        latest(spark, zone).map(_.gen).getOrElse(-1L))))
+    commit[Snapshot](spark, zone, "replace", head0, onLoss) { head =>
+      Publish(replacement(head, files, df.schema, tCols, meta), files.dirs, identity)
     }
-    f.delete(dataDir, true)
-    sys.error(s"txlog replace of $zone lost the publish race $maxRetries times")
   }
+
+  /** What a replace of `head` with the `staged` files of a frame of
+    * `schema` publishes. Replace RESETS the tracked schema: every live
+    * file is new, so the zone's schema IS the replacement frame's (the
+    * retype path the append-side merge guard points at). The column
+    * mapping resets with it — the rewrite wrote logical names everywhere. */
+  private def replacement(head: Snapshot, staged: Staged,
+                          schema: org.apache.spark.sql.types.StructType,
+                          statsCols: Seq[String], meta: Map[String, String]): Snapshot =
+    staged.asZone(head, (head.meta -- ColMapMetaKeys - MergeKeyMeta) ++
+      (if (statsCols.nonEmpty) Map("stats.cols" -> statsCols.mkString(",")) else Map.empty) ++
+      Map("schema" -> schema.json) ++ meta ++ Map("op" -> "replace"))
 
   /** Compare-and-swap replace: read the head, compute the replacement
     * FROM that snapshot, publish only if the head has not moved; on a
@@ -2301,27 +2322,17 @@ object TxLog {
     * the invariant the validation protects. */
   def replaceCas(spark: SparkSession, zone: String,
                  compute: Option[Snapshot] => DataFrame,
-                 maxAttempts: Int = 5,
                  meta: Map[String, String] = Map.empty,
                  statsCols: Seq[String] = Nil): Snapshot = {
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
-    var attempt = 0
-    var lastMove: SnapshotMovedException = null
-    while (attempt < maxAttempts) {
-      val head = latest(spark, zone)
-      val base = head.map(_.gen).getOrElse {
-        init(spark, zone).gen // virgin zone: pin the freshly-created gen 0
-      }
-      try {
-        return replace(spark, zone, compute(head), meta = meta,
-          statsCols = statsCols, expectedBase = Some(base))
-      } catch {
-        case e: SnapshotMovedException => lastMove = e
-      }
-      attempt += 1
+    val found = latest(spark, zone)
+    // virgin zone: pin the freshly-created gen 0
+    val head0 = found.getOrElse(init(spark, zone))
+    commit[Snapshot](spark, zone, "replace", head0, Recompute) { head =>
+      val df = compute(Some(head).filter(h => found.nonEmpty || h.gen != head0.gen))
+      val tCols = effectiveStatsCols(statsCols, head.meta)
+      val files = stage(spark, zone, head.format, df, tCols)
+      Publish(replacement(head, files, df.schema, tCols, meta), files.dirs, identity)
     }
-    throw new IllegalStateException(
-      s"txlog replaceCas of $zone conflicted $maxAttempts times", lastMove)
   }
 
   /** `inserted`/`updated` are row counts; `filesTouched` of `filesTotal`
@@ -2365,13 +2376,11 @@ object TxLog {
     * tracked stats for `key` rewrite every file (correct, just
     * unpruned) — write with `statsCols` to get the bound.
     *
-    * Concurrency is OPTIMISTIC like [[replaceCas]]: the survivors are
-    * computed FROM the head snapshot, so a rival commit landing first
-    * aborts the publish, deletes the staged files, and the whole
-    * read-merge-write recomputes against the new head — last-writer-wins
-    * here would resurrect deleted rows or drop the rival's. Schema
-    * evolves by the append rules ([[mergeSchemas]]): updates may add
-    * columns, never retype.
+    * The survivors are computed FROM the head snapshot, so a lost race
+    * recomputes them from the new one ([[commitLoop]]) —
+    * last-writer-wins here would resurrect deleted rows or drop the
+    * rival's. Schema evolves by the append rules ([[mergeSchemas]]):
+    * updates may add columns, never retype.
     *
     * Reference anchor: the reference lake only ever APPENDS CDC deltas
     * (`lib/dynamodb-streaming-datalake-stack.ts:199-203`) and rebuilds
@@ -2379,9 +2388,8 @@ object TxLog {
     * incremental form of that snapshot (`Cdc.snapshot`'s LWW winner,
     * maintained in place). */
   def merge(spark: SparkSession, zone: String, updates: DataFrame, key: String,
-            maxAttempts: Int = 5,
             prePublishHook: () => Unit = () => ()): MergeStats =
-    mergeImpl(spark, zone, updates, key, maxAttempts, prePublishHook,
+    mergeImpl(spark, zone, updates, key, prePublishHook,
       batchId = None, mergeOnRead = false, lwwReduced = false)
       .getOrElse(sys.error("unreachable: merge without a batchId never skips"))
 
@@ -2398,22 +2406,21 @@ object TxLog {
     * aggregate has to prove the keys unique. A batch with a null key is refused loudly; an empty
     * batch is a no-op. None = `batchId` was already committed. */
   private def mergeImpl(spark: SparkSession, zone: String, updates: DataFrame,
-                        key: String, maxAttempts: Int,
+                        key: String,
                         prePublishHook: () => Unit,
                         batchId: Option[Long],
                         opCol: Option[String] = None,
                         mergeOnRead: Boolean,
                         lwwReduced: Boolean): Option[MergeStats] = {
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
     val head = latest(spark, zone).getOrElse(init(spark, zone))
     if (committedAt(head, batchId)) None
     else if (mergeOnRead && driverKeyType(updates.schema(key).dataType))
-      mergeOnReadCommit(spark, zone, head, updates, key, maxAttempts, prePublishHook,
+      mergeOnReadCommit(spark, zone, head, updates, key, prePublishHook,
         batchId, opCol, lwwReduced)
     else {
       // bounded driver state: key bounds + counts
       val updRows = updates.persist()
-      try foldCommit(spark, zone, updRows, key, maxAttempts, prePublishHook,
+      try foldCommit(spark, zone, head, updRows, key, prePublishHook,
         batchId, opCol, batchKeys = None)
       finally updRows.unpersist()
     }
@@ -2470,18 +2477,6 @@ object TxLog {
     Some((kr.get(0), kr.get(1), kr.getLong(5)))
   }
 
-  /** The schema a merge commits: the head's (or, for a pre-tracking zone,
-    * its inferred one) evolved by the batch's by the append rules. */
-  private def mergedSchema(spark: SparkSession, zone: String, head: Snapshot,
-                           batch: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
-    zoneSchema(head).orElse(
-      if (head.files.nonEmpty) Some(readSnapshot(spark, zone, head).schema) else None)
-      .fold(batch)(mergeSchemas(_, batch))
-
-  private def newDir(root: Path, prefix: String): Path =
-    new Path(root, prefix + UUID.randomUUID().toString.take(8))
-
   /** MERGE-ON-READ commit: the batch's upsert rows become new data files
     * (sorted by key) and ALL its keys, upserts and tombstones alike, one
     * key file sorted by key; both land in one publish with the `batchId`
@@ -2507,7 +2502,7 @@ object TxLog {
     * collected keys. */
   private def mergeOnReadCommit(spark: SparkSession, zone: String, head0: Snapshot,
                                 updates: DataFrame,
-                                key: String, maxAttempts: Int,
+                                key: String,
                                 prePublishHook: () => Unit, batchId: Option[Long],
                                 opCol: Option[String],
                                 lwwReduced: Boolean): Option[MergeStats] = {
@@ -2517,77 +2512,55 @@ object TxLog {
     val updRows =
       if (lwwReduced) org.apache.spark.sql.graft.StreamBridge.sinkBatchDataFrame(updates)
       else updates.persist()
-    try mergeOnReadWrite(spark, zone, head0, updRows, key, maxAttempts, prePublishHook,
+    try mergeOnReadWrite(spark, zone, head0, updRows, key, prePublishHook,
       batchId, opCol, lwwReduced)
     finally if (!lwwReduced) updRows.unpersist()
   }
 
   private def mergeOnReadWrite(spark: SparkSession, zone: String, head0: Snapshot,
                                updRows: DataFrame,
-                               key: String, maxAttempts: Int,
+                               key: String,
                                prePublishHook: () => Unit, batchId: Option[Long],
                                opCol: Option[String],
                                lwwReduced: Boolean): Option[MergeStats] = {
     import org.apache.spark.sql.functions.col
-    val f = fs(spark, zone)
-    val root = f.makeQualified(new Path(zone))
     def noOp = Some(MergeStats(head0.gen, 0L, head0.files.size.toLong, 0L, 0L))
     if (!lwwReduced && batchShape(updRows, key, opCol).isEmpty) return noOp
     val keyType = updRows.schema(key).dataType
-    def fold(batchKeys: Option[Array[Any]]) = foldCommit(spark, zone, updRows, key,
-      maxAttempts, prePublishHook, batchId, opCol, batchKeys)
-    val keys = collectBatchKeys(updRows.select(col(key))).getOrElse(return fold(None))
+    def fold(head: Snapshot, batchKeys: Option[Array[Any]]) = foldCommit(spark, zone, head,
+      updRows, key, prePublishHook, batchId, opCol, batchKeys)
+    val keys = collectBatchKeys(updRows.select(col(key))).getOrElse(return fold(head0, None))
     if (keys.isEmpty) return noOp
     val nullKeys = keys.count(_ == null)
     require(nullKeys == 0,
       s"merge key '$key' is null in $nullKeys of ${keys.length} update rows — drop " +
         "or fill null keys before merging")
     val sorted = sortKeys(keys)
-    if (foldDue(head0, key, sorted.length.toLong)) return fold(Some(sorted))
+    if (foldDue(head0, key, sorted.length.toLong)) return fold(head0, Some(sorted))
     val cmap = colMap(head0.meta)
     val dataRows = opCol.map(c => updRows.filter(col(c) =!= "D").drop(c)).getOrElse(updRows)
-    val schema = mergedSchema(spark, zone, head0, dataRows.schema)
-    val out = toPhysical(conform(dataRows, schema), cmap)
-      .sortWithinPartitions(col(cmap.getOrElse(key, key)))
-    val dataDir = newDir(root, "d-")
-    val keyDir = newDir(root, "k-")
-    def unstage(): Unit = { f.delete(dataDir, true); f.delete(keyDir, true): Unit }
-    val keyFile = try {
-      out.write.mode(SaveMode.ErrorIfExists).format(head0.format).save(dataDir.toString)
-      writeKeyFile(spark, zone, keyDir, keyType, sorted)
-    } catch { case e: Throwable => unstage(); throw e }
-    val newInfo = listRelInfo(f, root, dataDir)
-    val newFiles = newInfo.map(_._1)
-    val newColStats = collectFileStats(spark, root, dataDir, newInfo,
-      Some(out.schema), head0.format, effectiveStatsCols(Nil, head0.meta), cmap)
+    val schema = evolvedSchema(spark, zone, head0, dataRows.schema)
+    val data = stage(spark, zone, head0.format, toPhysical(conform(dataRows, schema), cmap)
+      .sortWithinPartitions(col(cmap.getOrElse(key, key))),
+      effectiveStatsCols(Nil, head0.meta), cmap)
+    val keyDir = newDir(fs(spark, zone).makeQualified(new Path(zone)), "k-")
+    val staged = data.dirs :+ keyDir
+    val keyFile = try writeKeyFile(spark, zone, keyDir, keyType, sorted)
+      catch { case e: Throwable => staged.foreach(fs(spark, zone).delete(_, true)); throw e }
     val newKeys = Map(keyFile._1 -> KeyFile(ThisGen, keyFile._2))
-    try prePublishHook() catch { case e: Throwable => unstage(); throw e }
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      // head0 was checked for the mark; a rival that moved the head since
-      // makes the first publish lose its claim and the retry re-reads
-      val head = if (attempt == 0) head0 else latest(spark, zone).getOrElse(head0)
-      if (committedAt(head, batchId)) { unstage(); return None }
-      if (attempt > 0 && foldDue(head, key, sorted.length.toLong)) {
-        unstage(); return fold(Some(sorted))
-      }
-      val meta = head.meta ++ Map("schema" -> mergedSchema(spark, zone, head, schema).json,
-        MergeKeyMeta -> key, "op" -> "merge") ++
-        batchId.map(b => Map("batchId" -> b.toString)).getOrElse(Map.empty)
-      publish(spark, zone, head.gen + 1, head.format, (head.files ++ newFiles).distinct.sorted,
-        meta, head.colStats ++ newColStats, base = Some(head),
-        sizes = head.sizes ++ newInfo.toMap, keys0 = head.keys ++ newKeys,
-        dataGens0 = head.dataGens ++ newFiles.map(_ -> ThisGen)) match {
-        // merge-on-read counts no matches: only the batch merge (always
-        // a fold) reports them
-        case Some(g) => return Some(MergeStats(g, 0L, head.files.size.toLong, 0L, 0L))
-        case None => ()
-      }
-      attempt += 1
-      Thread.sleep(math.min(200L, 10L * attempt))
+    commitLoop[MergeStats](spark, zone, "merge", head0, Rebase, batchId, prePublishHook) { head =>
+      // a rival's commit may make the zone due for a fold: the loop
+      // removes this staging once the fold is done
+      if (foldDue(head, key, sorted.length.toLong)) Finish(fold(head, Some(sorted)))
+      else Publish(nextState(head, Set.empty, data, ThisGen).copy(
+          meta = head.meta ++ Map("schema" -> evolvedSchema(spark, zone, head, schema).json,
+            MergeKeyMeta -> key, "op" -> "merge"),
+          keys = head.keys ++ newKeys),
+        staged,
+        // merge-on-read counts no matches: only the batch merge (always a
+        // fold) reports them
+        s => MergeStats(s.gen, 0L, head.files.size.toLong, 0L, 0L))
     }
-    unstage()
-    sys.error(s"txlog merge into $zone lost the publish race $maxAttempts times")
   }
 
   /** COPY-ON-WRITE FOLD: rewrite every live file the batch's key range
@@ -2604,31 +2577,21 @@ object TxLog {
     * aggregate and join, the matched-key count (the batch merge only),
     * the range sample and the rewrite; the new files' stats come from
     * their footers ([[collectFileStats]]). */
-  private def foldCommit(spark: SparkSession, zone: String, updRows: DataFrame,
-                         key: String, maxAttempts: Int,
+  private def foldCommit(spark: SparkSession, zone: String, head0: Snapshot,
+                         updRows: DataFrame, key: String,
                          prePublishHook: () => Unit, batchId: Option[Long],
                          opCol: Option[String],
                          batchKeys: Option[Array[Any]]): Option[MergeStats] = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val f = fs(spark, zone)
-    val root = f.makeQualified(new Path(zone))
     // a streaming commit reports no row counts, so it needs no upsert count
     val (lo, hi, upsertCount) = batchKeys.map(k => (k.head, k.last, 0L))
       .orElse(batchShape(updRows, key, opCol)).getOrElse(
-      return Some(MergeStats(latest(spark, zone).map(_.gen).getOrElse(0L),
-        0L, latest(spark, zone).map(_.files.size.toLong).getOrElse(0L), 0L, 0L)))
+      return Some(MergeStats(head0.gen, 0L, head0.files.size.toLong, 0L, 0L)))
     // the re-insert side: tombstone rows remove their key and nothing
     // else; the op marker itself never lands in the zone
     val dataRows = opCol.map(c =>
       updRows.filter(col(c) =!= "D").drop(c)).getOrElse(updRows)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val head = latest(spark, zone).getOrElse(init(spark, zone))
-      // exactly-once re-check against the CURRENT head each attempt —
-      // the same check-then-act closure appendImpl uses: a rival
-      // replaying this batch that won an earlier race committed the
-      // mark, so this attempt must become a no-op, not a double-merge
-      if (committedAt(head, batchId)) return None
+    commitLoop[MergeStats](spark, zone, "merge", head0, Recompute, batchId, prePublishHook) { head =>
       val tracked = head.meta.getOrElse("stats.cols", "").split(",").contains(key)
       val sameKey = head.keys.isEmpty || head.meta.get(MergeKeyMeta).contains(key)
       val ranges = (lo, hi) +: head.keys.values.toSeq.flatMap(k =>
@@ -2637,8 +2600,7 @@ object TxLog {
         if (tracked && sameKey) ranges.flatMap { case (l, h) => prunedFilesFor(head, key, l, h) }.toSet
         else head.files.toSet
       val touched = head.files.filter(touchedSet)
-      val untouchedSet = head.files.toSet -- touched
-      val schema = mergedSchema(spark, zone, head, dataRows.schema)
+      val schema = evolvedSchema(spark, zone, head, dataRows.schema)
       // no distinct: batchShape proved the keys unique and non-null
       val updKeys = updRows.select(col(key))
       val touchedDf =
@@ -2661,7 +2623,6 @@ object TxLog {
         if (batchId.nonEmpty) 0L
         else updKeys.join(touchedDf.select(col(key)), Seq(key), "left_semi").count()
       val insertedRows = math.max(0L, upsertCount - updatedRows)
-      val dataDir = newDir(root, "d-")
       // insert-only fast path: no touched files -> no survivors side, so
       // don't union an empty frame in
       val newData =
@@ -2671,41 +2632,18 @@ object TxLog {
       val physKey = col(cmap.getOrElse(key, key))
       val oldestKey = head.keys.valuesIterator.map(_.gen).minOption.getOrElse(Long.MaxValue)
       val nOut = math.max(1, touched.count(p => head.dataGen(p) < oldestKey))
-      val out = toPhysical(newData, cmap)
-      out.repartitionByRange(nOut, physKey).sortWithinPartitions(physKey)
-        .write.mode(SaveMode.ErrorIfExists).format(head.format)
-        .save(dataDir.toString)
-      val newInfo = listRelInfo(f, root, dataDir)
-      val newFiles = newInfo.map(_._1)
-      val newColStats = collectFileStats(spark, root, dataDir, newInfo,
-        Some(out.schema), head.format, effectiveStatsCols(Nil, head.meta), cmap)
-      val nextFiles = (head.files.filter(untouchedSet) ++ newFiles).sorted
-      // untouched files keep their committed stats; touched files' entries drop
-      val nextColStats =
-        head.colStats.filter { case (p, _) => untouchedSet(p) } ++ newColStats
-      val nextSizes =
-        head.sizes.filter { case (p, _) => untouchedSet(p) } ++ newInfo.toMap
-      prePublishHook()
-      val batchMeta =
-        batchId.map(b => Map("batchId" -> b.toString)).getOrElse(Map.empty)
-      // the fold applied every pending key file: the commit drops them
-      publish(spark, zone, head.gen + 1, head.format, nextFiles,
-        head.meta ++ Map("schema" -> schema.json, MergeKeyMeta -> key) ++ batchMeta ++
-          Map("op" -> "merge"),
-        nextColStats, base = Some(head),
-        sizes = nextSizes) match {
-        case Some(g) =>
-          return Some(MergeStats(g, touched.size.toLong, head.files.size.toLong,
-            updatedRows, insertedRows))
-        case None =>
-          // rival landed: the survivors were computed from a stale head —
-          // discard the staged rewrite and recompute from the new one
-          f.delete(dataDir, true)
-      }
-      attempt += 1
-      Thread.sleep(math.min(200L, 10L * attempt))
+      val out = stage(spark, zone, head.format, toPhysical(newData, cmap)
+        .repartitionByRange(nOut, physKey).sortWithinPartitions(physKey),
+        effectiveStatsCols(Nil, head.meta), cmap)
+      // untouched files keep their committed stats; touched files' entries
+      // drop. The fold applied every pending key file: the commit drops them
+      Publish(nextState(head, touchedSet, out, NoDataGen).copy(
+          meta = head.meta ++ Map("schema" -> schema.json, MergeKeyMeta -> key, "op" -> "merge"),
+          keys = Map.empty),
+        out.dirs,
+        s => MergeStats(s.gen, touched.size.toLong, head.files.size.toLong,
+          updatedRows, insertedRows))
     }
-    sys.error(s"txlog merge into $zone conflicted $maxAttempts times")
   }
 
   /** Exactly-once streaming MERGE: the upsert twin of
@@ -2714,35 +2652,26 @@ object TxLog {
     * data + mark flip atomically. Each batch commits MERGE-ON-READ
     * ([[mergeOnReadCommit]]: its rows and one key file, nothing of the
     * zone rewritten) until the pending key files call for a fold
-    * ([[foldDue]]). `foreachBatch(TxLog.mergeSink(zone, key))` turns a
-    * CDC stream into an incrementally-maintained current-state table:
-    * the reference's append-then-recompact lake
-    * (`firehose_transformation.py` + batch snapshot jobs) collapsed into
-    * one idempotent sink. Returns true when the batch merged. */
+    * ([[foldDue]]). Called per micro-batch, it turns a CDC stream into
+    * an incrementally-maintained current-state table: the reference's
+    * append-then-recompact lake (`firehose_transformation.py` + batch
+    * snapshot jobs) collapsed into one idempotent sink ([[cdcMergeSink]]
+    * for raw CDC batches). Returns true when the batch merged. */
   def mergeExactlyOnce(spark: SparkSession, zone: String, updates: DataFrame,
                        key: String, batchId: Long): Boolean =
     streamMerge(spark, zone, updates, key, batchId, None, lwwReduced = false, () => ())
 
   /** The exactly-once streaming commit shared by the sinks: a batch at
-    * or below the committed mark is skipped before any compute, and the
-    * check re-runs against the head inside the publish loop, so two
-    * writers replaying the same batchId cannot both commit (the mark
-    * rides in the merge's OWN publish — data, key file and mark flip in
-    * one atomic commit). */
+    * or below the committed mark is skipped before any compute, and
+    * [[commitLoop]] re-checks it on every head, so two writers replaying
+    * the same batchId cannot both commit (the mark rides in the merge's
+    * OWN publish — data, key file and mark flip in one atomic commit). */
   private def streamMerge(spark: SparkSession, zone: String, updates: DataFrame,
                           key: String, batchId: Long, opCol: Option[String],
                           lwwReduced: Boolean, prePublishHook: () => Unit): Boolean =
-    mergeImpl(spark, zone, updates, key, maxAttempts = 5, prePublishHook,
+    mergeImpl(spark, zone, updates, key, prePublishHook,
       batchId = Some(batchId), opCol = opCol, mergeOnRead = true,
       lwwReduced = lwwReduced).isDefined
-
-  /** `writeStream.foreachBatch(TxLog.mergeSink(zone, key))` — the
-    * exactly-once keyed-upsert lake sink. The batch must be unique per
-    * key (use [[cdcMergeSink]] for raw CDC batches). */
-  def mergeSink(zone: String, key: String): (DataFrame, Long) => Unit =
-    (df, batchId) => {
-      mergeExactlyOnce(df.sparkSession, zone, df, key, batchId): Unit
-    }
 
   /** Each key's LAST-WRITER-WINS row of `df` (greatest `ordCol`,
     * remaining columns as a deterministic tiebreak — one hash agg over a
@@ -2796,7 +2725,7 @@ object TxLog {
     * against. */
   private[graft] def foldChanges(spark: SparkSession, zone: String, changes: DataFrame,
                                  key: String, opCol: String): MergeStats =
-    mergeImpl(spark, zone, changes, key, maxAttempts = 5, () => (), batchId = None,
+    mergeImpl(spark, zone, changes, key, () => (), batchId = None,
       opCol = Some(opCol), mergeOnRead = false, lwwReduced = false)
       .getOrElse(sys.error("unreachable: a fold without a batchId never skips"))
 
@@ -2832,12 +2761,10 @@ object TxLog {
     * whose stats sit ENTIRELY inside [lo, hi] could in principle be
     * dropped without reading; it is rewritten anyway so `deletedRows` is
     * exact and stat-less edge files stay correct — the dominant cost is
-    * unchanged (files the range misses are never read). Optimistic
-    * concurrency like merge: a rival commit mid-delete aborts the
-    * publish and the delete recomputes from the new head. Zones without
+    * unchanged (files the range misses are never read). Zones without
     * stats for `column` rewrite every file (correct, unpruned). */
   def deleteWhereCol(spark: SparkSession, zone: String, column: String,
-                     lo: Any, hi: Any, maxAttempts: Int = 5,
+                     lo: Any, hi: Any,
                      prePublishHook: () => Unit = () => ()): DeleteStats =
     deleteWhereFiles(spark, zone,
       head => {
@@ -2845,10 +2772,9 @@ object TxLog {
           head.meta.getOrElse("stats.cols", "").split(",").contains(column)
         if (tracked) prunedFilesFor(head, column, lo, hi) else head.files
       },
-      df => nativeRangePred(df, column, lo, hi),
-      maxAttempts, prePublishHook)
+      df => nativeRangePred(df, column, lo, hi), prePublishHook)
 
-  /** General OCC rewrite DELETE — [[deleteWhereCol]] with the two
+  /** General rewrite DELETE — [[deleteWhereCol]] with the two
     * predicate-shaped decisions injected, so ANY predicate source (the
     * range form above; SQL `DELETE FROM` on the DSv2 table, whose WHERE
     * clause arrives as translated v1 filters) reuses one rewrite loop:
@@ -2863,68 +2789,40 @@ object TxLog {
     *    Column semantics: a NULL predicate row survives (SQL DELETE
     *    deletes only rows where the condition is TRUE).
     *
-    * Each attempt re-reads the head (rivals may have landed), rewrites
-    * survivors into a fresh data dir, and publishes op=delete with the
-    * untouched files carried over — write amplification stays
-    * O(touched), the merge/scrub bound. */
+    * Each attempt rewrites the survivors of its head into a fresh data
+    * dir and publishes op=delete with the untouched files carried over —
+    * write amplification stays O(touched), the merge/scrub bound. A lost
+    * race recomputes from the new head ([[commitLoop]]). */
   def deleteWhereFiles(spark: SparkSession, zone: String,
                        touchedFor: Snapshot => Seq[String],
                        pred: DataFrame => org.apache.spark.sql.Column,
-                       maxAttempts: Int = 5,
-                       prePublishHook: () => Unit = () => ()): DeleteStats = {
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
-    val f = fs(spark, zone)
-    val root = f.makeQualified(new Path(zone))
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val head = latest(spark, zone).getOrElse(init(spark, zone))
+                       prePublishHook: () => Unit = () => ()): DeleteStats =
+    commit[DeleteStats](spark, zone, "delete", latest(spark, zone).getOrElse(init(spark, zone)),
+      Recompute, prePublishHook) { head =>
       val touched = touchedFor(head)
-      val untouchedSet = head.files.toSet -- touched
-      if (touched.isEmpty)
-        return DeleteStats(head.gen, 0L, head.files.size.toLong, 0L)
-      val touchedDf =
-        loadFiles(spark, zone, head, touched)
-      // SQL DELETE removes only rows where the condition is TRUE: a
-      // NULL-valued predicate row must SURVIVE. A bare !pred would be
-      // NULL for those rows and filter them out of the survivors —
-      // silently deleting them — so the predicate is coalesced to
-      // false before negation.
-      val survivors = touchedDf.filter(
-        !org.apache.spark.sql.functions.coalesce(pred(touchedDf),
-          org.apache.spark.sql.functions.lit(false)))
-      val deleted = touchedDf.count() - survivors.count()
-      val dataDir = new Path(root, "d-" + UUID.randomUUID().toString.take(8))
-      val out = toPhysical(survivors, colMap(head.meta))
-      out.write.mode(SaveMode.ErrorIfExists).format(head.format)
-        .save(dataDir.toString)
-      val newInfo = listRelInfo(f, root, dataDir)
-      val newFiles = newInfo.map(_._1)
-      val newColStats = collectFileStats(spark, root, dataDir, newInfo,
-        Some(out.schema), head.format, effectiveStatsCols(Nil, head.meta),
-        colMap(head.meta))
-      val nextFiles = (head.files.filter(untouchedSet) ++ newFiles).sorted
-      val nextColStats =
-        head.colStats.filter { case (p, _) => untouchedSet(p) } ++ newColStats
-      val nextSizes =
-        head.sizes.filter { case (p, _) => untouchedSet(p) } ++ newInfo.toMap
-      prePublishHook()
-      // survivors were read through the pending deletes: stamped with the
-      // generation they were read at (see commitRewrite)
-      publish(spark, zone, head.gen + 1, head.format, nextFiles,
-        head.meta ++ Map("op" -> "delete"),
-        nextColStats, base = Some(head), sizes = nextSizes, keys0 = head.keys,
-        dataGens0 = head.dataGens.filter { case (p, _) => untouchedSet(p) } ++
-          newFiles.map(_ -> head.gen)) match {
-        case Some(g) =>
-          return DeleteStats(g, touched.size.toLong, head.files.size.toLong, deleted)
-        case None =>
-          f.delete(dataDir, true)
+      if (touched.isEmpty) Finish(Some(DeleteStats(head.gen, 0L, head.files.size.toLong, 0L)))
+      else {
+        val touchedDf = loadFiles(spark, zone, head, touched)
+        // SQL DELETE removes only rows where the condition is TRUE: a
+        // NULL-valued predicate row must SURVIVE. A bare !pred would be
+        // NULL for those rows and filter them out of the survivors —
+        // silently deleting them — so the predicate is coalesced to
+        // false before negation.
+        val survivors = touchedDf.filter(
+          !org.apache.spark.sql.functions.coalesce(pred(touchedDf),
+            org.apache.spark.sql.functions.lit(false)))
+        val deleted = touchedDf.count() - survivors.count()
+        val cmap = colMap(head.meta)
+        val out = stage(spark, zone, head.format, toPhysical(survivors, cmap),
+          effectiveStatsCols(Nil, head.meta), cmap)
+        // survivors were read through the pending deletes: stamped with the
+        // generation they were read at (see commitRewrite)
+        Publish(nextState(head, touched.toSet, out, head.gen)
+            .copy(meta = head.meta ++ Map("op" -> "delete")),
+          out.dirs,
+          s => DeleteStats(s.gen, touched.size.toLong, head.files.size.toLong, deleted))
       }
-      attempt += 1
-      Thread.sleep(math.min(200L, 10L * attempt))
     }
-    sys.error(s"txlog delete from $zone conflicted $maxAttempts times")
-  }
 
   /** Exact row count from manifest stats alone — ZERO data files read:
     * the aggregate-pushdown answer Delta/Iceberg serve from file-level
@@ -3019,43 +2917,29 @@ object TxLog {
     * History stays intact (the rolled-back generations remain readable
     * until vacuum), and because the restored files are referenced by the
     * new head again, retention keeps them alive going forward. Fails if
-    * `gen`'s manifest is already vacuumed. A lost publish race rebases
-    * and retries — restore names a FIXED generation's content, so unlike
-    * merge/delete there is nothing stale to recompute (rivals committed
-    * after the race simply lose that race's rows to the rollback, which
-    * is restore's stated meaning). */
-  def restore(spark: SparkSession, zone: String, gen: Long,
-              maxRetries: Int = 5): Snapshot = {
+    * `gen`'s manifest is already vacuumed. Restore names a FIXED
+    * generation's content, so a lost race just rebases — there is nothing
+    * stale to recompute (rivals committed after the race simply lose that
+    * race's rows to the rollback, which is restore's stated meaning). */
+  def restore(spark: SparkSession, zone: String, gen: Long): Snapshot = {
     val target = snapshotAt(spark, zone, gen).getOrElse(
       sys.error(s"$zone generation $gen is gone (vacuumed?) — cannot restore"))
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val head = latest(spark, zone).getOrElse(init(spark, zone))
-      if (head.gen == gen) return head // restoring to the head is a no-op
+    commit[Snapshot](spark, zone, "restore", latest(spark, zone).getOrElse(init(spark, zone)),
+      Rebase) { head =>
+      if (head.gen == gen) Finish(Some(head)) // restoring to the head is a no-op
       // carry the head's operational meta (e.g. the streaming batchId
       // high-water mark) but the TARGET's schema, stats, and COLUMN
       // MAPPING (the restored files' physical layout is the target's —
-      // the head's mapping may describe files this commit abandons)
-      val meta = (head.meta -- ColMapMetaKeys) ++
-        target.meta.get("schema").map("schema" -> _).toMap ++
-        target.meta.view.filterKeys(ColMapMetaKeys.contains).toMap ++
-        Map("op" -> "restore")
-      // the target's pending key files come back with its files: its
-      // key and data generations keep their order, and every later key
-      // file outranks them all
-      publish(spark, zone, head.gen + 1, target.format, target.files,
-        meta, target.colStats, base = Some(head),
-        sizes = target.sizes, keys0 = target.keys, dataGens0 = target.dataGens) match {
-        case Some(g) =>
-          return Snapshot(g, target.format, target.files, meta,
-            target.colStats, base = head.gen, sizes = target.sizes,
-            keys = target.keys, dataGens = target.dataGens)
-        case None => ()
-      }
-      attempt += 1
-      Thread.sleep(math.min(200L, 10L * attempt))
+      // the head's mapping may describe files this commit abandons).
+      // The target's pending key files come back with its files: its key
+      // and data generations keep their order, and every later key file
+      // outranks them all
+      else Publish(target.copy(meta = (head.meta -- ColMapMetaKeys) ++
+          target.meta.get("schema").map("schema" -> _).toMap ++
+          target.meta.view.filterKeys(ColMapMetaKeys.contains).toMap ++
+          Map("op" -> "restore")),
+        Nil, identity)
     }
-    sys.error(s"txlog restore of $zone lost the publish race $maxRetries times")
   }
 
   /** Change feed for APPEND-ONLY zones: the rows committed after
@@ -3119,16 +3003,8 @@ object TxLog {
     * when the batch was appended, false when skipped as already
     * committed. */
   def exactlyOnceAppend(spark: SparkSession, zone: String, df: DataFrame,
-                        batchId: Long, statsCols: Seq[String] = Nil): Boolean = {
-    // fast path: skip before staging any data files; the authoritative
-    // check is re-run against the head inside appendImpl's publish loop,
-    // so two writers replaying the same batchId cannot both commit
-    val committed = latest(spark, zone).flatMap(_.meta.get("batchId")).map(_.toLong)
-    if (committed.exists(_ >= batchId)) false
-    else appendImpl(spark, zone, df, maxRetries = 5,
-      meta = Map("batchId" -> batchId.toString),
-      statsCols = statsCols, batchId = Some(batchId)).isDefined
-  }
+                        batchId: Long, statsCols: Seq[String] = Nil): Boolean =
+    appendImpl(spark, zone, df, Map.empty, statsCols, Some(batchId)).isDefined
 
   /** `writeStream.foreachBatch(TxLog.streamSink(zone))` — the
     * exactly-once lake sink. */
@@ -3150,46 +3026,32 @@ object TxLog {
   def compact(spark: SparkSession, zone: String, targetBytes: Long = 128L << 20,
               prePublishHook: () => Unit = () => ()): CompactStats = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val f = fs(spark, zone)
-    val root = f.makeQualified(new Path(zone))
     val head = latest(spark, zone).getOrElse(init(spark, zone))
-    val bytes = committedBytes(f, zone, head)
+    val bytes = committedBytes(fs(spark, zone), zone, head)
     val wantFiles = math.max(1L, math.ceil(bytes.toDouble / targetBytes).toLong)
-    if (head.files.size <= wantFiles && !head.pendingDeletes)
-      return CompactStats(head.gen, head.files.size.toLong, head.files.size.toLong,
-        bytes, rewritten = false)
-    val dataDir = new Path(root, "d-" + UUID.randomUUID().toString.take(8))
+    def unchanged = CompactStats(head.gen, head.files.size.toLong, head.files.size.toLong,
+      bytes, rewritten = false)
+    if (head.files.size <= wantFiles && !head.pendingDeletes) return unchanged
     val live = readSnapshot(spark, zone, head)
     val out = head.meta.get(MergeKeyMeta).filter(live.columns.contains) match {
       case Some(k) => live.repartitionByRange(wantFiles.toInt, live.col(k))
         .sortWithinPartitions(live.col(k))
       case None => live.repartition(wantFiles.toInt)
     }
-    // every live row deleted by pending keys: nothing to write
-    if (head.files.nonEmpty)
-      out.write.mode(SaveMode.ErrorIfExists).format(head.format).save(dataDir.toString)
-    val newInfo = if (head.files.isEmpty) Nil else listRelInfo(f, root, dataDir)
-    val newFiles = newInfo.map(_._1)
-    // a stats-tracked zone recomputes per-file stats for the rewrite
-    val newColStats =
-      if (newInfo.isEmpty) Map.empty[String, Map[String, ColStat]]
-      else collectFileStats(spark, root, dataDir,
-        newInfo, Some(out.schema), head.format, effectiveStatsCols(Nil, head.meta))
-    prePublishHook()
+    // every live row deleted by pending keys: nothing to write; a
+    // stats-tracked zone recomputes per-file stats for the rewrite
+    val files =
+      if (head.files.isEmpty) Staged(Nil, Nil, Map.empty)
+      else stage(spark, zone, head.format, out, effectiveStatsCols(Nil, head.meta))
     // meta carries forward: compaction must not erase e.g. the streaming
     // sink's batchId high-water mark. The column mapping RESETS: the
     // rewrite read logically and wrote every live file under logical
     // names — maintenance normalizes the physical layout for free.
-    publish(spark, zone, head.gen + 1, head.format, newFiles,
-      (head.meta -- ColMapMetaKeys) ++ Map("op" -> "compact"),
-      newColStats, base = Some(head), sizes = newInfo.toMap) match {
-      case Some(g) =>
-        CompactStats(g, head.files.size.toLong, newFiles.size.toLong,
-          bytes, rewritten = true)
-      case None =>
-        f.delete(dataDir, true)
-        CompactStats(head.gen, head.files.size.toLong, head.files.size.toLong,
-          bytes, rewritten = false)
+    commit[CompactStats](spark, zone, "compact", head, Pinned(() => unchanged),
+      prePublishHook) { h =>
+      Publish(files.asZone(h, (h.meta -- ColMapMetaKeys) ++ Map("op" -> "compact")), files.dirs,
+        s => CompactStats(s.gen, head.files.size.toLong, files.files.size.toLong,
+          bytes, rewritten = true))
     }
   }
 
@@ -3211,34 +3073,23 @@ object TxLog {
                        bits: Int = 10, targetBytes: Long = 128L << 20): CompactStats = {
     require(cols.nonEmpty, "compactClustered needs at least one cluster column")
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val f = fs(spark, zone)
-    val root = f.makeQualified(new Path(zone))
     val head = latest(spark, zone).getOrElse(init(spark, zone))
     if (head.files.isEmpty)
       return CompactStats(head.gen, 0L, 0L, 0L, rewritten = false)
-    val bytes = committedBytes(f, zone, head)
+    val bytes = committedBytes(fs(spark, zone), zone, head)
     val wantFiles = math.max(1L, math.ceil(bytes.toDouble / targetBytes).toLong).toInt
-    val dataDir = new Path(root, "d-" + UUID.randomUUID().toString.take(8))
-    val out = Layout.clusterByZ(readSnapshot(spark, zone, head), cols, bits, wantFiles)
-    out.write.mode(SaveMode.ErrorIfExists).format(head.format).save(dataDir.toString)
-    val newInfo = listRelInfo(f, root, dataDir)
-    val newFiles = newInfo.map(_._1)
     val statsCols = (effectiveStatsCols(Nil, head.meta) ++ cols).distinct
-    val newColStats = collectFileStats(spark, root, dataDir,
-      newInfo, Some(out.schema), head.format, statsCols)
+    val files = stage(spark, zone, head.format,
+      Layout.clusterByZ(readSnapshot(spark, zone, head), cols, bits, wantFiles), statsCols)
     // mapping resets with the rewrite, like compact
     val meta = (head.meta -- ColMapMetaKeys) ++
       (if (statsCols.nonEmpty) Map("stats.cols" -> statsCols.mkString(",")) else Map.empty)
-    publish(spark, zone, head.gen + 1, head.format, newFiles,
-      meta ++ Map("op" -> "compactClustered"),
-      newColStats, base = Some(head), sizes = newInfo.toMap) match {
-      case Some(g) =>
-        CompactStats(g, head.files.size.toLong, newFiles.size.toLong, bytes,
-          rewritten = true)
-      case None =>
-        f.delete(dataDir, true)
-        CompactStats(head.gen, head.files.size.toLong, head.files.size.toLong,
-          bytes, rewritten = false)
+    commit[CompactStats](spark, zone, "compactClustered", head,
+      Pinned(() => CompactStats(head.gen, head.files.size.toLong, head.files.size.toLong,
+        bytes, rewritten = false))) { h =>
+      Publish(files.asZone(h, meta ++ Map("op" -> "compactClustered")), files.dirs,
+        s => CompactStats(s.gen, head.files.size.toLong, files.files.size.toLong, bytes,
+          rewritten = true))
     }
   }
 

@@ -331,7 +331,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
         Map("schema" -> next.json) ++
           statsCols.map(cs => "stats.cols" -> cs.mkString(",")).toMap ++
           (if (fresh.isEmpty) Map.empty[String, String]
-           else Map("colmap" -> TxLog.encodeColMapPublic(cmap ++ fresh)))
+           else Map("colmap" -> TxLog.encodeColMap(cmap ++ fresh)))
       })
     }
     loadTable(ident)

@@ -64,7 +64,7 @@ class TxLogStreamProvider extends StreamSourceProvider with StreamSinkProvider
     * half under the same short name, completing the loop the scaladoc
     * above describes (zones stream OUT through the source, and now
     * stream IN through the writer API instead of requiring
-    * `foreachBatch(TxLog.streamSink/mergeSink/cdcMergeSink)`). The v2
+    * `foreachBatch(TxLog.streamSink/cdcMergeSink)`). The v2
     * table deliberately declares no STREAMING_WRITE, so Spark's
     * DataStreamWriter falls back here — one short name, batch read,
     * batch write, stream read, stream write, each on its proper plan

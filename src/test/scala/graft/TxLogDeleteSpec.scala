@@ -67,6 +67,26 @@ class TxLogDeleteSpec extends SparkSpec {
     assert(ids(zone) === ((100L until 400L).toSet + 9999L))
   }
 
+  test("a delete that loses every race gives up after 5 attempts, leaving rivals and no staged dir") {
+    val zone = bandedZone()
+    var fired = 0
+    val e = intercept[IllegalStateException] {
+      TxLog.deleteWhereCol(spark, zone, "id", 0, 99, prePublishHook = () => {
+        fired += 1
+        TxLog.append(spark, zone, Seq((10000L + fired, "rival")).toDF("id", "payload"))
+      })
+    }
+    // a recomputing writer stages once per attempt, and the hook runs once per staging
+    assert(fired === 5, s"expected 5 attempts, got $fired")
+    assert(e.getMessage.contains("delete") && e.getMessage.contains(zone), e.getMessage)
+    assert(ids(zone) === (0L until 400L).toSet ++ (10001L to 10005L),
+      "the rivals must be intact and the delete must not apply")
+    val referenced = TxLog.latest(spark, zone).get.files.map(_.split("/")(0)).toSet
+    val staged = new java.io.File(zone).listFiles().map(_.getName)
+      .filter(n => n.startsWith("d-") && !referenced(n))
+    assert(staged.isEmpty, s"the failed delete left staged dirs: ${staged.mkString(",")}")
+  }
+
   test("snapshotAt: explicit generation time travel within retention") {
     val zone = bandedZone()
     val g0 = TxLog.latest(spark, zone).get.gen

@@ -55,8 +55,7 @@ class TxLogRaceSpec extends SparkSpec {
 
     // parent writer: race on this JVM's session while the child runs
     for (i <- 0 until perWriter)
-      TxLog.append(spark, zone, Seq(("parent", i)).toDF("writer", "i"),
-        maxRetries = 50)
+      TxLog.append(spark, zone, Seq(("parent", i)).toDF("writer", "i"))
 
     assert(child.exitValue() === 0,
       s"child writer JVM failed; output:\n$childOut")
@@ -204,4 +203,59 @@ class TxLogRaceSpec extends SparkSpec {
     checkReplay(zone, streamBatches, base, orphans)
     assert(TxLog.latest(spark, zone).get.keys.isEmpty, "batch 2 must have folded")
   }
+
+  test("failpoint: a throw in publish after the manifest is complete keeps its staged files") {
+    spark.sparkContext.hadoopConfiguration.set("fs.graftfail.impl", classOf[ForkCheckFailFs].getName)
+    val zone = "graftfail://" +
+      java.nio.file.Files.createTempDirectory("graft_race_fork").toString + "/zone"
+    TxLog.replace(spark, zone, spark.range(10L).toDF("id"))
+    ForkCheckFailFs.armedAbove = TxLog.latest(spark, zone).get.gen
+    val batch = spark.range(100L, 110L).toDF("id")
+    // the fork check's listing is the first to see the complete manifest
+    intercept[java.io.IOException](TxLog.exactlyOnceAppend(spark, zone, batch, 0L))
+    assert(ForkCheckFailFs.armedAbove === -1L, "the failpoint never fired")
+    val head = TxLog.latest(spark, zone).get
+    assert(head.meta.get("batchId").contains("0"), "the append's generation is committed")
+    val ids = TxLog.read(spark, zone).select("id").as[Long].collect().toSet
+    assert(ids === (0L until 10L).toSet ++ (100L until 110L),
+      "the committed generation must read the files it references")
+    // the mark is committed, so the replay skips the batch
+    assert(!TxLog.exactlyOnceAppend(spark, zone, batch, 0L))
+    assert(TxLog.read(spark, zone).count() === 20L)
+  }
+}
+
+/** A local filesystem under the `graftfail` scheme whose listing of a
+  * `_txlog` dir throws once, when armed and a complete manifest numbered
+  * above `armedAbove` has appeared: in one commit that listing is the
+  * fork check of the publish that completed the manifest. */
+class ForkCheckFailFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  override def getUri: java.net.URI = java.net.URI.create("graftfail:///")
+  override def getScheme: String = "graftfail"
+  // plain statuses: the local ones load their permissions through a
+  // `file:` URI of their path
+  private def plain(st: FileStatus) = new FileStatus(st.getLen, st.isDirectory,
+    st.getReplication, st.getBlockSize, st.getModificationTime, st.getPath)
+  override def getFileStatus(p: Path): FileStatus = plain(super.getFileStatus(p))
+  override def listStatus(p: Path): Array[FileStatus] = {
+    val out = super.listStatus(p).map(plain)
+    val above = ForkCheckFailFs.armedAbove
+    def complete(st: FileStatus): Boolean = {
+      val n = st.getPath.getName
+      n.startsWith("gen-") && n.stripPrefix("gen-").toLong > above && {
+        val lines = java.nio.file.Files.readAllLines(pathToFile(st.getPath).toPath)
+        !lines.isEmpty && lines.get(lines.size - 1) == "end"
+      }
+    }
+    if (above >= 0L && p.getName == "_txlog" && out.exists(complete)) {
+      ForkCheckFailFs.armedAbove = -1L
+      throw new java.io.IOException("injected failure listing " + p)
+    }
+    out
+  }
+}
+
+object ForkCheckFailFs {
+  @volatile var armedAbove: Long = -1L
 }

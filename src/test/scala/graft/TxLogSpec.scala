@@ -326,7 +326,7 @@ class TxLogSpec extends SparkSpec {
       val fs = (0 until 8).map { w =>
         Future {
           TxLog.append(spark, zone,
-            spark.range(w * 100L, (w + 1) * 100L).toDF("id"), maxRetries = 50)
+            spark.range(w * 100L, (w + 1) * 100L).toDF("id"))
         }
       }
       Await.result(Future.sequence(fs), 120.seconds)
@@ -335,6 +335,24 @@ class TxLogSpec extends SparkSpec {
     assert(head.gen === 8L, s"expected 8 serialized publishes, got gen ${head.gen}")
     assert(head.files.size === head.files.toSet.size, "duplicate manifest entries")
     assert(ids(zone) === (0L until 800L).toSet, "a concurrent append lost or duplicated rows")
+  }
+
+  test("a meta commit that loses to an advancing head on every attempt still commits once") {
+    val zone = freshZone()
+    spark.range(10L).toDF("id").write.parquet(zone)
+    TxLog.init(spark, zone)
+    var calls = 0
+    // each of the first 6 attempts lets a rival append win its generation:
+    // more lost races than the bound, but every one advanced the head
+    val s = TxLog.commitMeta(spark, zone, "memo", head => {
+      calls += 1
+      if (calls <= 6) TxLog.append(spark, zone, Seq(100L + calls).toDF("id"))
+      Map("memo" -> head.gen.toString)
+    })
+    assert(calls === 7 && s.gen === 7L && s.meta("memo") === "6")
+    val ops = TxLog.history(spark, zone).select("op").as[String].collect()
+    assert(ops.count(_ == "memo") === 1, s"the meta commit must land exactly once: ${ops.mkString(",")}")
+    assert(ids(zone) === (0L until 10L).toSet ++ (101L to 106L), "a rival append was lost")
   }
 
   /** A crashed publish: gen file created, body never completed. */
@@ -354,9 +372,13 @@ class TxLogSpec extends SparkSpec {
     // fresh torn file = possibly a publish in progress: its number must
     // NOT be bypassed, so the append exhausts its retries and fails loudly
     intercept[RuntimeException] {
-      TxLog.append(spark, zone, spark.range(10L, 20L).toDF("id"), maxRetries = 1)
+      TxLog.append(spark, zone, spark.range(10L, 20L).toDF("id"))
     }
     assert(ids(zone) === (0L until 10L).toSet, "failed append leaked rows")
+    val referenced = TxLog.latest(spark, zone).get.files.map(_.split("/")(0)).toSet
+    val staged = new java.io.File(zone).listFiles().map(_.getName)
+      .filter(n => n.startsWith("d-") && !referenced(n))
+    assert(staged.isEmpty, s"failed append left its staged dir: ${staged.mkString(",")}")
     // past the grace window the corpse's NUMBER is skipped (never deleted
     // — a delete-based reclaim would race a concurrent reclaimer into
     // deleting its fresh manifest) and the zone is writable again
