@@ -3,7 +3,7 @@ package graft.operators
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Minimal single-file transaction log for lake zones — the missing
   * atomic-commit layer that [[Compaction]]'s scaladoc punts to external
@@ -123,8 +123,9 @@ object TxLog {
                               * existed read back as gen-1. */
                             base: Long = -1L,
                             /** per-file (bytes, mtimeMillis), stamped at
-                              * commit time from the listing the committer
-                              * already does — so scan planning needs ZERO
+                              * commit time from what the write tasks
+                              * report (or the listing [[init]] and
+                              * [[commitRewrite]] do) — so scan planning needs ZERO
                               * per-file FS RPCs (at 800k kept files that
                               * is the difference between a manifest read
                               * and 800k sequential driver HEADs).
@@ -943,8 +944,8 @@ object TxLog {
     gen > ourBase && base <= ourBase
 
   /** Recursive data-file listing under `dir`, zone-relative, WITH each
-    * file's (bytes, mtimeMillis) — the committer already pays this
-    * listing, so stamping sizes into the manifest is free here and saves
+    * file's (bytes, mtimeMillis) — for the committers that list ([[init]],
+    * [[listStaged]]), which stamp the sizes into the manifest and so save
     * every later scan plan a per-file `getFileStatus` pass. */
   private def listRelInfo(f: FileSystem, zoneRoot: Path, dir: Path)
       : Seq[(String, (Long, Long))] = {
@@ -987,22 +988,97 @@ object TxLog {
       Snapshot(head.gen, head.format, files, meta, colStats, sizes = info.toMap)
   }
 
+  /** What one write task of [[stage]] reported: its file (zone-relative
+    * name, bytes, mtime; None when it wrote none), that file's stats from
+    * its own footer (None when the footer cannot give them,
+    * [[footerFileStats]]), and for a keyed write every non-null key it
+    * saw (at most [[MaxPendingKeys]] + 1) with its count of null keys. */
+  private final case class TaskReport(file: Option[(String, (Long, Long))],
+                                      stats: Option[Map[String, ColStat]],
+                                      keys: Array[Any], nullKeys: Long)
+
   /** Write `out` (physical column names) as `format` into a fresh `d-`
-    * dir of `zone` and list it ([[listStaged]]); a failed write or listing
-    * removes the dir. */
+    * dir of `zone` in ONE Spark job ([[org.apache.spark.sql.graft.WriteBridge]])
+    * and stage exactly the files its tasks report, with the stats of
+    * `statsCols` that each task read from the footer of the file it just
+    * wrote — no `_temporary` dir, rename or listing, and no driver footer
+    * read. When some footer cannot give them (a float, double, decimal or
+    * timestamp stats column; another format) the driver runs
+    * [[aggregateFileStats]] over the reported files instead. A failed
+    * write removes the dir. */
   private def stage(spark: SparkSession, zone: String, format: String, out: DataFrame,
-                    statsCols: Seq[String], colmap: Map[String, String] = Map.empty): Staged = {
+                    statsCols: Seq[String], colmap: Map[String, String] = Map.empty): Staged =
+    stageTasks(spark, zone, format, out, statsCols, colmap, None)._1
+
+  /** [[stage]], and with `keyed` = (physical key column, upsert flag
+    * column) the merge-on-read batch write: each task reports every key
+    * of its partition and, given a flag (a boolean column, last in `out`
+    * and never written), writes only the rows it flags. Returns the
+    * reports too. */
+  private def stageTasks(spark: SparkSession, zone: String, format: String, out: DataFrame,
+                         statsCols: Seq[String], colmap: Map[String, String],
+                         keyed: Option[(String, Option[String])]): (Staged, Seq[TaskReport]) = {
     val f = fs(spark, zone)
-    val dir = newDir(f.makeQualified(new Path(zone)), "d-")
+    val root = f.makeQualified(new Path(zone))
+    val dir = newDir(root, "d-")
+    val flag = keyed.flatMap(_._2)
+    val written = org.apache.spark.sql.types.StructType(
+      if (flag.isEmpty) out.schema.fields else out.schema.fields.init)
     try {
-      out.write.mode(SaveMode.ErrorIfExists).format(format).save(dir.toString)
-      listStaged(spark, zone, dir, Some(out.schema), format, statsCols, colmap)
+      val reports = org.apache.spark.sql.graft.WriteBridge.write(out, format, written,
+        dir.toString)(writeTask(root.toString, dir.getName, format, written, statsCols, colmap,
+        keyed.map { case (k, _) => (out.schema.fieldIndex(k), out.schema(k).dataType,
+          if (flag.isEmpty) -1 else written.length) })).toSeq
+      val info = reports.flatMap(_.file).sortBy(_._1)
+      val stats =
+        if (statsCols.isEmpty || info.isEmpty) Map.empty[String, Map[String, ColStat]]
+        else if (reports.forall(r => r.file.isEmpty || r.stats.nonEmpty))
+          reports.flatMap(r => r.file.map(_._1).zip(r.stats)).toMap
+        else aggregateFileStats(spark, root, info, format, statsCols, colmap)
+      (Staged(Seq(dir), info, stats), reports)
     } catch { case e: Throwable => f.delete(dir, true); throw e }
+  }
+
+  /** The task body of [[stageTasks]]: write the partition's rows — with
+    * `keyed` = (key ordinal, key type, flag ordinal or -1) keeping their
+    * keys and writing only the flagged ones without the flag — then close
+    * the file and read its stats from its footer. */
+  private def writeTask(root: String, dirName: String, format: String,
+                        written: org.apache.spark.sql.types.StructType,
+                        statsCols: Seq[String], colmap: Map[String, String],
+                        keyed: Option[(Int, org.apache.spark.sql.types.DataType, Int)])
+      : (Iterator[org.apache.spark.sql.catalyst.InternalRow],
+         org.apache.spark.sql.graft.WriteBridge.TaskFile) => TaskReport = (rows, file) => {
+    val keys = scala.collection.mutable.ArrayBuffer.empty[Any]
+    var nullKeys = 0L
+    keyed match {
+      case None => rows.foreach(file.write)
+      case Some((keyAt, keyType, flagAt)) =>
+        val data = org.apache.spark.sql.catalyst.ProjectingInternalRow(written,
+          0 until written.length)
+        rows.foreach { r =>
+          if (r.isNullAt(keyAt)) nullKeys += 1
+          else if (keys.length <= MaxPendingKeys) keys += (r.get(keyAt, keyType) match {
+            case s: org.apache.spark.unsafe.types.UTF8String => s.copy()
+            case k => k
+          })
+          if (flagAt < 0) file.write(r)
+          else if (r.getBoolean(flagAt)) { data.project(r); file.write(data) }
+        }
+    }
+    val rel = file.close().map(st =>
+      (dirName + "/" + st.getPath.getName, (st.getLen, st.getModificationTime)))
+    val stats = rel.flatMap(e =>
+      if (statsCols.isEmpty) Some(Map.empty[String, ColStat])
+      else footerFileStats(file.hadoopConf, new Path(root), Seq(e), written, format,
+        statsCols, colmap).map(_(e._1)))
+    TaskReport(rel, stats, keys.toArray, nullKeys)
   }
 
   /** The files already written under `dir` that `keep` accepts, with the
     * stats of `statsCols` ([[collectFileStats]]); a missing or empty dir
-    * stages nothing. */
+    * stages nothing. Only [[commitRewrite]] stages this way: Spark's DSv2
+    * writer wrote its files, so the committer lists them. */
   private def listStaged(spark: SparkSession, zone: String, dir: Path,
                          written: Option[org.apache.spark.sql.types.StructType],
                          format: String, statsCols: Seq[String],
@@ -1012,11 +1088,9 @@ object TxLog {
     val root = f.makeQualified(new Path(zone))
     val info = (try listRelInfo(f, root, dir)
                 catch { case _: java.io.FileNotFoundException => Nil }).filter(e => keep(e._1))
-    val files = info.map(_._1).toSet
     Staged(Seq(dir), info,
       if (info.isEmpty) Map.empty
-      else collectFileStats(spark, root, dir, info, written, format, statsCols, colmap)
-        .filter { case (p, _) => files(p) })
+      else collectFileStats(spark, root, info, written, format, statsCols, colmap))
   }
 
   /** `head` with the files in `removed` dropped and the `staged` files
@@ -1599,7 +1673,9 @@ object TxLog {
   /** The batch's keys (`keys`: one column) in Catalyst form, from ONE
     * Spark job over the batch's own partitions — or None when it holds
     * more than [[MaxPendingKeys]]: each task returns at most one key past
-    * the bound and the driver stops keeping them once past it. */
+    * the bound and the driver stops keeping them once past it. Only a
+    * streaming batch whose zone is already due for a fold runs it; a
+    * merge-on-read write has its tasks report the keys ([[stageTasks]]). */
   private def collectBatchKeys(keys: DataFrame): Option[Array[Any]] = {
     val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
       .createToCatalystConverter(keys.schema.head.dataType)
@@ -1839,19 +1915,20 @@ object TxLog {
       .fold(written)(mergeSchemas(_, written))
 
   /** The typed per-file stats ([[ColStat]]: rows, null count, min/max)
-    * of the `statsCols` columns, over the files a commit just wrote to
-    * `dataDir`, keyed by zone-relative file then LOGICAL column name.
-    * Parquet already keeps these numbers per row group, so the usual
-    * commit reads only the footers of `files` (the committer's own
-    * listing of `dataDir`) and runs no Spark job; [[footerFileStats]]
-    * names the column types whose footer values are byte-identical to
-    * Spark's `min`/`max`. Everything else — another format; a float,
-    * double, decimal, timestamp or other stats column; a row group
-    * without min/max — runs [[aggregateFileStats]] once over the whole
-    * data dir. `written` is the schema of the frame the files were
-    * written from (physical column names), which fixes each column's
-    * type without inference. No stats columns, no work. */
-  private def collectFileStats(spark: SparkSession, root: Path, dataDir: Path,
+    * of the `statsCols` columns over `files` (zone-relative, with bytes
+    * and mtime), keyed by zone-relative file then LOGICAL column name —
+    * for the files [[listStaged]] found, which [[commitRewrite]] alone
+    * stages ([[stage]]'s tasks read their own footers instead). Parquet
+    * already keeps these numbers per row group, so this reads only the
+    * footers of `files` and runs no Spark job; [[footerFileStats]] names
+    * the column types whose footer values are byte-identical to Spark's
+    * `min`/`max`. Everything else — another format; a float, double,
+    * decimal, timestamp or other stats column; a row group without
+    * min/max — runs [[aggregateFileStats]] once over `files`. `written`
+    * is the schema of the frame the files were written from (physical
+    * column names), which fixes each column's type without inference. No
+    * stats columns, no work. */
+  private def collectFileStats(spark: SparkSession, root: Path,
                                files: Seq[(String, (Long, Long))],
                                written: Option[org.apache.spark.sql.types.StructType],
                                format: String, statsCols: Seq[String],
@@ -1860,8 +1937,7 @@ object TxLog {
     if (statsCols.isEmpty) Map.empty
     else written.flatMap(w => footerFileStats(spark.sparkContext.hadoopConfiguration,
         root, files, w, format, statsCols, colmap))
-      .getOrElse(aggregateFileStats(spark, root, dataDir, files, format,
-        statsCols, colmap))
+      .getOrElse(aggregateFileStats(spark, root, files, format, statsCols, colmap))
 
   /** [[collectFileStats]] from Parquet footers, or None when some stats
     * column or row group cannot give exactly what [[aggregateFileStats]]
@@ -2001,12 +2077,12 @@ object TxLog {
     }
   }
 
-  /** [[collectFileStats]] by aggregation: read the data dir back and
-    * compute every stats column's bounds and null count in ONE
+  /** [[collectFileStats]] by aggregation: read `files` back and compute
+    * every stats column's bounds and null count in ONE
     * `groupBy(input_file_name)` job. Numeric columns record doubles
     * ("num"); everything else records its string form ("str" — ISO
     * date/timestamp strings order chronologically). */
-  private[graft] def aggregateFileStats(spark: SparkSession, root: Path, dataDir: Path,
+  private[graft] def aggregateFileStats(spark: SparkSession, root: Path,
                                         files: Seq[(String, (Long, Long))],
                                         format: String, statsCols: Seq[String],
                                         colmap: Map[String, String] = Map.empty)
@@ -2015,7 +2091,7 @@ object TxLog {
     // stats are keyed by LOGICAL column names throughout the manifest;
     // freshly-written files carry physical names, so surface them
     // logically before aggregating
-    val dfRaw = spark.read.format(format).load(dataDir.toString)
+    val dfRaw = spark.read.format(format).load(files.map(e => new Path(root, e._1).toString): _*)
     val rev = colmap.map(_.swap)
     val df =
       if (rev.isEmpty || !dfRaw.columns.exists(rev.contains)) dfRaw
@@ -2487,19 +2563,21 @@ object TxLog {
     * the zone is read, so the commit costs the batch, not the zone, and
     * a lost publish race just rebases like an append.
     *
-    * Spark jobs: a reduced batch's shuffle runs once, then one job
-    * collects its keys ([[collectBatchKeys]]) and one writes its upserts,
-    * both reading the shuffle's output (three jobs); caller-supplied
-    * updates add the aggregate proving their keys unique. The data is
-    * written in the batch's own partitioning (the reduction's adaptive
-    * shuffle sizes it: one file for a small batch, parallel writers for a
-    * large one), each file sorted by key. The key file is written on the
-    * driver, and its key bounds, row count and null-key count come from
-    * the collected keys; zero rows make the batch a no-op. A batch the
-    * zone's layout makes due for a fold, or with more keys than
-    * [[MaxPendingKeys]] allows ([[foldDue]], re-checked when a rival
-    * commit moves the head), folds instead, its key bounds taken from the
-    * collected keys. */
+    * Spark jobs: a reduced batch's shuffle runs once, then ONE job reads
+    * its output and writes the upserts ([[stageTasks]]): each task writes
+    * its partition's upsert rows, sorted by key, and reports the file, its
+    * footer stats and every key it saw, tombstones too (two jobs);
+    * caller-supplied updates add the aggregate proving their keys unique.
+    * The data is written in the batch's own partitioning (the
+    * reduction's adaptive shuffle sizes it: one file for a small batch,
+    * parallel writers for a large one). The key file is written on the
+    * driver from the reported keys, which also give its key bounds and
+    * the null-key count; zero rows make the batch a no-op. A batch the
+    * zone's layout already makes due for a fold collects its keys in one
+    * job instead ([[collectBatchKeys]]) and folds with them; one with
+    * more keys than [[MaxPendingKeys]] allows ([[foldDue]], re-checked
+    * when a rival commit moves the head) drops its staged files and
+    * folds. */
   private def mergeOnReadCommit(spark: SparkSession, zone: String, head0: Snapshot,
                                 updates: DataFrame,
                                 key: String,
@@ -2523,35 +2601,55 @@ object TxLog {
                                prePublishHook: () => Unit, batchId: Option[Long],
                                opCol: Option[String],
                                lwwReduced: Boolean): Option[MergeStats] = {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
     def noOp = Some(MergeStats(head0.gen, 0L, head0.files.size.toLong, 0L, 0L))
     if (!lwwReduced && batchShape(updRows, key, opCol).isEmpty) return noOp
-    val keyType = updRows.schema(key).dataType
+    def refuseNullKeys(nullKeys: Long, rows: Long): Unit =
+      require(nullKeys == 0,
+        s"merge key '$key' is null in $nullKeys of $rows update rows — drop " +
+          "or fill null keys before merging")
     def fold(head: Snapshot, batchKeys: Option[Array[Any]]) = foldCommit(spark, zone, head,
       updRows, key, prePublishHook, batchId, opCol, batchKeys)
-    val keys = collectBatchKeys(updRows.select(col(key))).getOrElse(return fold(head0, None))
-    if (keys.isEmpty) return noOp
-    val nullKeys = keys.count(_ == null)
-    require(nullKeys == 0,
-      s"merge key '$key' is null in $nullKeys of ${keys.length} update rows — drop " +
-        "or fill null keys before merging")
-    val sorted = sortKeys(keys)
-    if (foldDue(head0, key, sorted.length.toLong)) return fold(head0, Some(sorted))
+    // a layout already due for a fold needs the keys before it writes
+    if (foldDue(head0, key, 0L)) {
+      val keys = collectBatchKeys(updRows.select(col(key))).getOrElse(return fold(head0, None))
+      if (keys.isEmpty) return noOp
+      refuseNullKeys(keys.count(_ == null).toLong, keys.length.toLong)
+      return fold(head0, Some(sortKeys(keys)))
+    }
     val cmap = colMap(head0.meta)
-    val dataRows = opCol.map(c => updRows.filter(col(c) =!= "D").drop(c)).getOrElse(updRows)
-    val schema = evolvedSchema(spark, zone, head0, dataRows.schema)
-    val data = stage(spark, zone, head0.format, toPhysical(conform(dataRows, schema), cmap)
-      .sortWithinPartitions(col(cmap.getOrElse(key, key))),
-      effectiveStatsCols(Nil, head0.meta), cmap)
-    val keyDir = newDir(fs(spark, zone).makeQualified(new Path(zone)), "k-")
+    val physKey = cmap.getOrElse(key, key)
+    val schema = evolvedSchema(spark, zone, head0, opCol.fold(updRows)(updRows.drop(_)).schema)
+    // the op column becomes the upsert flag, last and never written: a
+    // tombstone (op "D", or a null op, which a filter on op != "D" drops)
+    // is not written, and every row's key is reported
+    val flagged = opCol.fold(updRows)(c =>
+      updRows.withColumn(c, coalesce(col(c) =!= "D", lit(false))))
+    val out = toPhysical(conform(flagged,
+        opCol.fold(schema)(schema.add(_, org.apache.spark.sql.types.BooleanType))), cmap)
+      .sortWithinPartitions(col(physKey))
+    val (data, reports) = stageTasks(spark, zone, head0.format, out,
+      effectiveStatsCols(Nil, head0.meta), cmap, Some(physKey -> opCol))
+    val f = fs(spark, zone)
+    def unstage(): Unit = data.dirs.foreach(f.delete(_, true))
+    val nKeys = reports.iterator.map(_.keys.length.toLong).sum
+    val nullKeys = reports.iterator.map(_.nullKeys).sum
+    // past the bound the reports hold only part of the keys
+    if (nKeys > MaxPendingKeys) { unstage(); return fold(head0, None) }
+    if (nKeys + nullKeys == 0L) { unstage(); return noOp }
+    if (nullKeys > 0L) unstage()
+    refuseNullKeys(nullKeys, nKeys + nullKeys)
+    val keys = sortKeys(reports.flatMap(_.keys).toArray)
+    if (foldDue(head0, key, nKeys)) { unstage(); return fold(head0, Some(keys)) }
+    val keyDir = newDir(f.makeQualified(new Path(zone)), "k-")
     val staged = data.dirs :+ keyDir
-    val keyFile = try writeKeyFile(spark, zone, keyDir, keyType, sorted)
-      catch { case e: Throwable => staged.foreach(fs(spark, zone).delete(_, true)); throw e }
+    val keyFile = try writeKeyFile(spark, zone, keyDir, updRows.schema(key).dataType, keys)
+      catch { case e: Throwable => staged.foreach(f.delete(_, true)); throw e }
     val newKeys = Map(keyFile._1 -> KeyFile(ThisGen, keyFile._2))
     commitLoop[MergeStats](spark, zone, "merge", head0, Rebase, batchId, prePublishHook) { head =>
       // a rival's commit may make the zone due for a fold: the loop
       // removes this staging once the fold is done
-      if (foldDue(head, key, sorted.length.toLong)) Finish(fold(head, Some(sorted)))
+      if (foldDue(head, key, keys.length.toLong)) Finish(fold(head, Some(keys)))
       else Publish(nextState(head, Set.empty, data, ThisGen).copy(
           meta = head.meta ++ Map("schema" -> evolvedSchema(spark, zone, head, schema).json,
             MergeKeyMeta -> key, "op" -> "merge"),
@@ -2567,16 +2665,18 @@ object TxLog {
     * or a pending key file's range touches — survivors of the pending
     * deletes and of the batch's keys, plus the batch's upserts — range-
     * clustered by `key` into as many files as the touched files that
-    * predate the pending key files, and publish it with the key files
-    * dropped. Untouched files hold no key of any dropped key file, so
-    * dropping them all is exact. `batchKeys` are the batch's sorted keys
-    * when a streaming commit already collected them: they give the key
-    * bounds and mask the touched rows as a hash set, like the pending
-    * keys ([[loadFiles]]); otherwise the batch aggregate ([[batchShape]])
-    * gives the bounds and an anti-join the mask. Spark jobs: that
+    * predate the pending key files (the BASE files), and publish it with
+    * the key files dropped. Untouched files hold no key of any dropped
+    * key file, so dropping them all is exact. `batchKeys` are the batch's
+    * sorted keys when a streaming commit already collected them: they
+    * give the key bounds and mask the touched rows as a hash set, like
+    * the pending keys ([[loadFiles]]); otherwise the batch aggregate
+    * ([[batchShape]]) gives the bounds and an anti-join the mask. The
+    * rows are placed without sampling ([[foldLayout]]). Spark jobs: that
     * aggregate and join, the matched-key count (the batch merge only),
-    * the range sample and the rewrite; the new files' stats come from
-    * their footers ([[collectFileStats]]). */
+    * and the rewrite — one job when the base files' key ranges are
+    * disjoint, else a shuffle and the write; the new files' stats come
+    * from their footers ([[stage]]). */
   private def foldCommit(spark: SparkSession, zone: String, head0: Snapshot,
                          updRows: DataFrame, key: String,
                          prePublishHook: () => Unit, batchId: Option[Long],
@@ -2603,14 +2703,17 @@ object TxLog {
       val schema = evolvedSchema(spark, zone, head, dataRows.schema)
       // no distinct: batchShape proved the keys unique and non-null
       val updKeys = updRows.select(col(key))
-      val touchedDf =
-        if (touched.isEmpty) conform(dataRows, schema).filter(lit(false))
-        else loadFiles(spark, zone, head, touched)
-      val survivors = batchKeys match {
-        // a null key is in no set, as it matches no key in the join
-        case Some(k) => touchedDf.filter(coalesce(!keyIn(touchedDf, key, k), lit(true)))
-        case None => touchedDf.join(updKeys, Seq(key), "left_anti")
-      }
+      // the live rows of `files` the batch does not replace
+      def survivors(files: Seq[String]): DataFrame =
+        if (files.isEmpty) conform(dataRows, schema).filter(lit(false))
+        else {
+          val df = loadFiles(spark, zone, head, files)
+          conform(batchKeys match {
+            // a null key is in no set, as it matches no key in the join
+            case Some(k) => df.filter(coalesce(!keyIn(df, key, k), lit(true)))
+            case None => df.join(updKeys, Seq(key), "left_anti")
+          }, schema)
+        }
       // count MATCHED UPDATE KEYS, not matched target rows: a zone
       // holding duplicate rows for one key would overcount updates and
       // push insertedRows negative. The semi join keeps each (unique)
@@ -2620,20 +2723,19 @@ object TxLog {
       // total update rows and insertedRows >= 0.) A streaming fold
       // reports no counts, so it skips the join.
       val updatedRows =
-        if (batchId.nonEmpty) 0L
-        else updKeys.join(touchedDf.select(col(key)), Seq(key), "left_semi").count()
+        if (batchId.nonEmpty || touched.isEmpty) 0L
+        else updKeys.join(loadFiles(spark, zone, head, touched).select(col(key)), Seq(key),
+          "left_semi").count()
       val insertedRows = math.max(0L, upsertCount - updatedRows)
-      // insert-only fast path: no touched files -> no survivors side, so
-      // don't union an empty frame in
-      val newData =
-        if (touched.isEmpty) conform(dataRows, schema)
-        else conform(survivors, schema).unionByName(conform(dataRows, schema))
       val cmap = colMap(head.meta)
-      val physKey = col(cmap.getOrElse(key, key))
       val oldestKey = head.keys.valuesIterator.map(_.gen).minOption.getOrElse(Long.MaxValue)
-      val nOut = math.max(1, touched.count(p => head.dataGen(p) < oldestKey))
-      val out = stage(spark, zone, head.format, toPhysical(newData, cmap)
-        .repartitionByRange(nOut, physKey).sortWithinPartitions(physKey),
+      val base = touched.filter(p => head.dataGen(p) < oldestKey)
+      val placed = foldLayout(key, base, touched.filterNot(base.toSet),
+        if (tracked && sameKey) base.map(p => head.colStats.get(p).flatMap(_.get(key))) else Nil,
+        survivors, conform(dataRows, schema), batchKeys)
+      val physKey = col(cmap.getOrElse(key, key))
+      val out = stage(spark, zone, head.format,
+        toPhysical(placed, cmap).sortWithinPartitions(physKey),
         effectiveStatsCols(Nil, head.meta), cmap)
       // untouched files keep their committed stats; touched files' entries
       // drop. The fold applied every pending key file: the commit drops them
@@ -2644,6 +2746,118 @@ object TxLog {
         s => MergeStats(s.gen, touched.size.toLong, head.files.size.toLong,
           updatedRows, insertedRows))
     }
+  }
+
+  /** The fold's rows (`survivors` of the touched files, then `upserts`),
+    * placed in range partitions of `key`, one per touched BASE file
+    * (`base`, with their committed key stats `baseStats`; `rest` are the
+    * other touched files), without sampling the rows:
+    *  - base files whose key ranges are disjoint (the layout an earlier
+    *    fold left) keep them. With the batch's keys in hand (a streaming
+    *    fold: the masks are hash sets, no join), each partition is one
+    *    base file's survivors plus the other rows in its range, side by
+    *    side with no shuffle, so the write is the fold's only job; else
+    *    the ranges' lower bounds are the split points;
+    *  - overlapping ranges (the first fold after a plain write) split at
+    *    quantiles of the base files' rows, taken as spread evenly over
+    *    each file's [min, max] (numeric keys), or of the batch's sorted
+    *    keys (other keys);
+    *  - split points place the rows with `repartitionById`. Without them
+    *    — a base file without a key stat (an untracked key, a rival merge
+    *    key, an all-null key), or overlapping non-numeric ranges and no
+    *    batch keys (a batch [[merge]]) — `repartitionByRange` samples.
+    * Placement decides only the layout; every row lands in exactly one
+    * partition. */
+  private def foldLayout(key: String, base: Seq[String], rest: Seq[String],
+                         baseStats: Seq[Option[ColStat]], survivors: Seq[String] => DataFrame,
+                         upserts: DataFrame, batchKeys: Option[Array[Any]]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val nOut = math.max(1, base.size)
+    // empty base files hold no row to place
+    val ranged = base.zip(baseStats).collect {
+      case (p, Some(st)) if st.rows > 0 && st.min.nonEmpty => (p, st)
+    }
+    val known = baseStats.size == base.size && baseStats.forall(_.exists(st =>
+      st.rows == 0 || st.min.nonEmpty))
+    val kind = ranged.headOption.map(_._2.kind).getOrElse("num")
+    val lt: (String, String) => Boolean =
+      if (kind == "num") (a, b) => a.toDouble < b.toDouble else (a, b) => a < b
+    val ordered = ranged.sortWith((a, b) => lt(a._2.min.get, b._2.min.get))
+    val disjoint = ordered.zip(ordered.drop(1)).forall { case (a, b) =>
+      lt(a._2.max.get, b._2.min.get) }
+    if (known && disjoint && batchKeys.nonEmpty) {
+      val others = survivors(rest).unionByName(upserts)
+      if (ordered.isEmpty) return others.coalesce(1)
+      val at = rangeIds(others, key, kind, ordered.drop(1).map(_._2.min.get))
+      return org.apache.spark.sql.graft.WriteBridge.sideBySide(ordered.zipWithIndex.map {
+        case ((p, _), i) => survivors(Seq(p)).unionByName(others.filter(at === lit(i)))
+      })
+    }
+    val splits =
+      if (!known) None
+      else if (disjoint) Some(ordered.drop(1).map(_._2.min.get))
+      else if (kind == "num") Some(spreadSplits(ordered.map(_._2), nOut))
+      else batchKeys.filter(_.nonEmpty).map { k =>
+        (1 until nOut).map(j => k(j * k.length / nOut).toString)
+      }
+    val all = survivors(base ++ rest).unionByName(upserts)
+    splits.fold(all.repartitionByRange(nOut, col(key)))(s =>
+      all.repartitionById(nOut, rangeIds(all, key, kind, s)))
+  }
+
+  /** `nOut - 1` split points (as "num" stat strings) that cut the rows of
+    * files with these key stats into equal shares, each file's non-null
+    * rows taken as spread evenly over its [min, max]. */
+  private def spreadSplits(stats: Seq[ColStat], nOut: Int): Seq[String] = {
+    val spans = stats.map(st => (st.min.get.toDouble, st.max.get.toDouble,
+      (st.rows - st.nulls).toDouble))
+    val total = spans.map(_._3).sum
+    // rows at or below x
+    def below(x: Double): Double = spans.map { case (a, b, w) =>
+      if (x >= b) w else if (x < a) 0.0 else w * (x - a) / (b - a)
+    }.sum
+    val (lo, hi) = (spans.map(_._1).min, spans.map(_._2).max)
+    (1 until nOut).map { j =>
+      val want = total * j / nOut
+      var (l, h) = (lo, hi)
+      for (_ <- 0 until 64) {
+        val m = l + (h - l) / 2
+        if (below(m) < want) l = m else h = m
+      }
+      java.lang.Double.toString(h)
+    }
+  }
+
+  /** The range partition of `df`'s `key` among `splits` (ascending stat
+    * strings of `kind`): how many splits are at or below the key, which
+    * is compared as a double ("num") or as its string form ("str"); a
+    * null key is in partition 0. */
+  private def rangeIds(df: DataFrame, key: String, kind: String,
+                       splits: Seq[String]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.api.java.UDF1
+    import org.apache.spark.sql.types.IntegerType
+    // splits at or below k: the first index past them, by bisection
+    def count[T](s: Array[T], atOrBelow: T => Boolean): Int = {
+      var (l, h) = (0, s.length)
+      while (l < h) { val m = (l + h) >>> 1; if (atOrBelow(s(m))) l = m + 1 else h = m }
+      l
+    }
+    val f =
+      if (kind == "num") {
+        val s = splits.map(_.toDouble).toArray
+        new UDF1[Any, Int] {
+          def call(k: Any): Int = if (k == null) 0
+            else { val v = k.asInstanceOf[java.lang.Double].doubleValue; count[Double](s, _ <= v) }
+        }
+      } else {
+        val s = splits.toArray
+        new UDF1[Any, Int] {
+          def call(k: Any): Int = if (k == null) 0
+            else { val v = k.toString; count[String](s, _ <= v) }
+        }
+      }
+    org.apache.spark.sql.functions.udf(f, IntegerType)(
+      df.col(key).cast(if (kind == "num") "double" else "string"))
   }
 
   /** Exactly-once streaming MERGE: the upsert twin of

@@ -179,10 +179,13 @@ class ShardStoreSpec extends SparkSpec {
     for ((l, i) <- lines.zipWithIndex) st.put((i % 20).toString, l)
 
     val base = java.nio.file.Files.createTempDirectory("graft_shard_a13").toString
+    // drain what is there and stop: the default 60 s processing-time
+    // trigger would make the drain wait on its grid
     val q = graft.streaming.CdcStream.pipeline(
       graft.sources.ShardCdcSource(dir).stream(spark),
-      s"$base/lake", s"$base/err", s"$base/ckpt").start()
-    q.processAllAvailable(); q.stop()
+      s"$base/lake", s"$base/err", s"$base/ckpt",
+      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination()
 
     val streamed = spark.read.json(s"$base/lake/year=*/month=*/day=*/hour=*")
       .select("id", "name", "Event")

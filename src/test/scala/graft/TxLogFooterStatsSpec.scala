@@ -51,7 +51,7 @@ class TxLogFooterStatsSpec extends SparkSpec {
     val files = listed(root, dir)
     val foot = TxLog.footerFileStats(conf, root, files, df.schema, "parquet",
       typed, colmap)
-    val agg = TxLog.aggregateFileStats(spark, root, dir, files, "parquet",
+    val agg = TxLog.aggregateFileStats(spark, root, files, "parquet",
       typed, colmap)
     (foot, agg, files)
   }
@@ -143,7 +143,7 @@ class TxLogFooterStatsSpec extends SparkSpec {
     assert(groups.exists(_ > 1), s"expected a multi-row-group file, got $groups")
     val foot = TxLog.footerFileStats(conf, root, files, df.schema, "parquet",
       Seq("l", "str", "d"))
-    val agg = TxLog.aggregateFileStats(spark, root, dir, files, "parquet",
+    val agg = TxLog.aggregateFileStats(spark, root, files, "parquet",
       Seq("l", "str", "d"))
     assertIdentical(foot, agg, files)
   }
@@ -166,7 +166,7 @@ class TxLogFooterStatsSpec extends SparkSpec {
     val added = head.files.filterNot(renamed.files.toSet)
     val root = new Path(zone).getFileSystem(conf).makeQualified(new Path(zone))
     val dir = new Path(root, added.head.takeWhile(_ != '/'))
-    val aggAdded = TxLog.aggregateFileStats(spark, root, dir, listed(root, dir), "parquet",
+    val aggAdded = TxLog.aggregateFileStats(spark, root, listed(root, dir), "parquet",
       Seq("key", "v"), Map("key" -> "id"))
     assert(added.map(f => f -> head.colStats(f)).toMap === aggAdded)
     assert(TxLog.readWhereCol(spark, zone, "key", 25L, 27L).count() === 3L)
@@ -194,7 +194,7 @@ class TxLogFooterStatsSpec extends SparkSpec {
     val head = TxLog.latest(spark, zone).get
     val root = new Path(zone).getFileSystem(conf).makeQualified(new Path(zone))
     val dir = new Path(root, head.files.head.takeWhile(_ != '/'))
-    val agg = TxLog.aggregateFileStats(spark, root, dir, listed(root, dir), "parquet",
+    val agg = TxLog.aggregateFileStats(spark, root, listed(root, dir), "parquet",
       Seq("id", "dbl", "ts"))
     assert(head.colStats === agg)
     assert(head.colStats.values.exists(_("dbl").max.contains("NaN")))
