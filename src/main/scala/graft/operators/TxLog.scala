@@ -992,10 +992,12 @@ object TxLog {
     * name, bytes, mtime; None when it wrote none), that file's stats from
     * its own footer (None when the footer cannot give them,
     * [[footerFileStats]]), and for a keyed write every non-null key it
-    * saw (at most [[MaxPendingKeys]] + 1) with its count of null keys. */
+    * saw (at most [[MaxPendingKeys]] + 1: `seen` counts them) with its
+    * count of null keys. The driver drops `keys` once the job's running
+    * total of `seen` passes the bound ([[stageTasks]]). */
   private final case class TaskReport(file: Option[(String, (Long, Long))],
                                       stats: Option[Map[String, ColStat]],
-                                      keys: Array[Any], nullKeys: Long)
+                                      keys: Array[Any], seen: Int, nullKeys: Long)
 
   /** Write `out` (physical column names) as `format` into a fresh `d-`
     * dir of `zone` in ONE Spark job ([[org.apache.spark.sql.graft.WriteBridge]])
@@ -1014,7 +1016,8 @@ object TxLog {
     * column) the merge-on-read batch write: each task reports every key
     * of its partition and, given a flag (a boolean column, last in `out`
     * and never written), writes only the rows it flags. Returns the
-    * reports too. */
+    * reports too; once their keys pass [[MaxPendingKeys]] in all, the
+    * driver keeps no more of them (the batch folds), only their counts. */
   private def stageTasks(spark: SparkSession, zone: String, format: String, out: DataFrame,
                          statsCols: Seq[String], colmap: Map[String, String],
                          keyed: Option[(String, Option[String])]): (Staged, Seq[TaskReport]) = {
@@ -1025,10 +1028,17 @@ object TxLog {
     val written = org.apache.spark.sql.types.StructType(
       if (flag.isEmpty) out.schema.fields else out.schema.fields.init)
     try {
-      val reports = org.apache.spark.sql.graft.WriteBridge.write(out, format, written,
-        dir.toString)(writeTask(root.toString, dir.getName, format, written, statsCols, colmap,
-        keyed.map { case (k, _) => (out.schema.fieldIndex(k), out.schema(k).dataType,
-          if (flag.isEmpty) -1 else written.length) })).toSeq
+      val got = scala.collection.mutable.ArrayBuffer.empty[TaskReport]
+      var seen = 0L
+      org.apache.spark.sql.graft.WriteBridge.write(out, format, written, dir.toString)(
+        writeTask(root.toString, dir.getName, format, written, statsCols, colmap,
+          keyed.map { case (k, _) => (out.schema.fieldIndex(k), out.schema(k).dataType,
+            if (flag.isEmpty) -1 else written.length) }),
+        (_: Int, r: TaskReport) => {
+          seen += r.seen
+          got += (if (seen > MaxPendingKeys) r.copy(keys = Array.empty) else r)
+        })
+      val reports = got.toSeq
       val info = reports.flatMap(_.file).sortBy(_._1)
       val stats =
         if (statsCols.isEmpty || info.isEmpty) Map.empty[String, Map[String, ColStat]]
@@ -1072,7 +1082,7 @@ object TxLog {
       if (statsCols.isEmpty) Some(Map.empty[String, ColStat])
       else footerFileStats(file.hadoopConf, new Path(root), Seq(e), written, format,
         statsCols, colmap).map(_(e._1)))
-    TaskReport(rel, stats, keys.toArray, nullKeys)
+    TaskReport(rel, stats, keys.toArray, keys.length, nullKeys)
   }
 
   /** The files already written under `dir` that `keep` accepts, with the
@@ -2632,7 +2642,7 @@ object TxLog {
       effectiveStatsCols(Nil, head0.meta), cmap, Some(physKey -> opCol))
     val f = fs(spark, zone)
     def unstage(): Unit = data.dirs.foreach(f.delete(_, true))
-    val nKeys = reports.iterator.map(_.keys.length.toLong).sum
+    val nKeys = reports.iterator.map(_.seen.toLong).sum
     val nullKeys = reports.iterator.map(_.nullKeys).sum
     // past the bound the reports hold only part of the keys
     if (nKeys > MaxPendingKeys) { unstage(); return fold(head0, None) }
@@ -2672,11 +2682,12 @@ object TxLog {
     * give the key bounds and mask the touched rows as a hash set, like
     * the pending keys ([[loadFiles]]); otherwise the batch aggregate
     * ([[batchShape]]) gives the bounds and an anti-join the mask. The
-    * rows are placed without sampling ([[foldLayout]]). Spark jobs: that
-    * aggregate and join, the matched-key count (the batch merge only),
-    * and the rewrite — one job when the base files' key ranges are
-    * disjoint, else a shuffle and the write; the new files' stats come
-    * from their footers ([[stage]]). */
+    * rows are placed by the base files' key ranges ([[foldLayout]]).
+    * Spark jobs: that aggregate and join, the matched-key count (the
+    * batch merge only), and the rewrite — one job when a streaming fold
+    * keeps the base files' disjoint ranges, else range sampling, a
+    * shuffle and the write; the new files' stats come from their footers
+    * ([[stage]]). */
   private def foldCommit(spark: SparkSession, zone: String, head0: Snapshot,
                          updRows: DataFrame, key: String,
                          prePublishHook: () => Unit, batchId: Option[Long],
@@ -2732,7 +2743,8 @@ object TxLog {
       val base = touched.filter(p => head.dataGen(p) < oldestKey)
       val placed = foldLayout(key, base, touched.filterNot(base.toSet),
         if (tracked && sameKey) base.map(p => head.colStats.get(p).flatMap(_.get(key))) else Nil,
-        survivors, conform(dataRows, schema), batchKeys)
+        survivors, conform(dataRows, schema), batchKeys,
+        if (head.keys.isEmpty) Nil else pendingKeyGens(spark, zone, head, head.keys).keys)
       val physKey = col(cmap.getOrElse(key, key))
       val out = stage(spark, zone, head.format,
         toPhysical(placed, cmap).sortWithinPartitions(physKey),
@@ -2751,113 +2763,83 @@ object TxLog {
   /** The fold's rows (`survivors` of the touched files, then `upserts`),
     * placed in range partitions of `key`, one per touched BASE file
     * (`base`, with their committed key stats `baseStats`; `rest` are the
-    * other touched files), without sampling the rows:
-    *  - base files whose key ranges are disjoint (the layout an earlier
-    *    fold left) keep them. With the batch's keys in hand (a streaming
-    *    fold: the masks are hash sets, no join), each partition is one
-    *    base file's survivors plus the other rows in its range, side by
-    *    side with no shuffle, so the write is the fold's only job; else
-    *    the ranges' lower bounds are the split points;
-    *  - overlapping ranges (the first fold after a plain write) split at
-    *    quantiles of the base files' rows, taken as spread evenly over
-    *    each file's [min, max] (numeric keys), or of the batch's sorted
-    *    keys (other keys);
-    *  - split points place the rows with `repartitionById`. Without them
-    *    — a base file without a key stat (an untracked key, a rival merge
-    *    key, an all-null key), or overlapping non-numeric ranges and no
-    *    batch keys (a batch [[merge]]) — `repartitionByRange` samples.
-    * Placement decides only the layout; every row lands in exactly one
-    * partition. */
+    * other touched files). When the base files' numeric key ranges are
+    * disjoint (the layout an earlier fold left) and the batch's keys are
+    * in hand (a streaming fold: the masks are hash sets, no join), each
+    * partition is one base file's survivors plus the other rows in its
+    * range, side by side with no shuffle, so the write is the fold's only
+    * job. That keeps the ranges, so it is taken only while it keeps them
+    * even ([[evenRanges]]): fresh INSERT keys past the top file's max
+    * would otherwise all land in the last file, fold after fold. Every
+    * other fold — overlapping ranges (the first after a plain write), a
+    * base file without a numeric key stat, a batch [[merge]], or a layout
+    * the new keys would unbalance — samples the rows with
+    * `repartitionByRange`, which evens the ranges out. Placement decides
+    * only the layout; every row lands in exactly one partition. */
   private def foldLayout(key: String, base: Seq[String], rest: Seq[String],
                          baseStats: Seq[Option[ColStat]], survivors: Seq[String] => DataFrame,
-                         upserts: DataFrame, batchKeys: Option[Array[Any]]): DataFrame = {
+                         upserts: DataFrame, batchKeys: Option[Array[Any]],
+                         pendingKeys: => Iterable[Any]): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val nOut = math.max(1, base.size)
-    // empty base files hold no row to place
-    val ranged = base.zip(baseStats).collect {
-      case (p, Some(st)) if st.rows > 0 && st.min.nonEmpty => (p, st)
-    }
+    // empty base files hold no row to place: (file, min, max, rows)
+    val ordered = base.zip(baseStats).collect {
+      case (p, Some(st)) if st.rows > 0 && st.min.nonEmpty =>
+        (p, st.min.get.toDouble, st.max.get.toDouble, st.rows)
+    }.sortBy(_._2)
     val known = baseStats.size == base.size && baseStats.forall(_.exists(st =>
-      st.rows == 0 || st.min.nonEmpty))
-    val kind = ranged.headOption.map(_._2.kind).getOrElse("num")
-    val lt: (String, String) => Boolean =
-      if (kind == "num") (a, b) => a.toDouble < b.toDouble else (a, b) => a < b
-    val ordered = ranged.sortWith((a, b) => lt(a._2.min.get, b._2.min.get))
-    val disjoint = ordered.zip(ordered.drop(1)).forall { case (a, b) =>
-      lt(a._2.max.get, b._2.min.get) }
-    if (known && disjoint && batchKeys.nonEmpty) {
-      val others = survivors(rest).unionByName(upserts)
-      if (ordered.isEmpty) return others.coalesce(1)
-      val at = rangeIds(others, key, kind, ordered.drop(1).map(_._2.min.get))
-      return org.apache.spark.sql.graft.WriteBridge.sideBySide(ordered.zipWithIndex.map {
-        case ((p, _), i) => survivors(Seq(p)).unionByName(others.filter(at === lit(i)))
-      })
-    }
-    val splits =
-      if (!known) None
-      else if (disjoint) Some(ordered.drop(1).map(_._2.min.get))
-      else if (kind == "num") Some(spreadSplits(ordered.map(_._2), nOut))
-      else batchKeys.filter(_.nonEmpty).map { k =>
-        (1 until nOut).map(j => k(j * k.length / nOut).toString)
-      }
-    val all = survivors(base ++ rest).unionByName(upserts)
-    splits.fold(all.repartitionByRange(nOut, col(key)))(s =>
-      all.repartitionById(nOut, rangeIds(all, key, kind, s)))
+      st.rows == 0 || st.min.nonEmpty && st.kind == "num"))
+    val disjoint = ordered.zip(ordered.drop(1)).forall { case (a, b) => a._3 < b._2 }
+    val sideBySide = known && disjoint && batchKeys.exists(k =>
+      evenRanges(ordered.map(f => (f._2, f._3, f._4)), k.toSet ++ pendingKeys))
+    if (!sideBySide)
+      return survivors(base ++ rest).unionByName(upserts)
+        .repartitionByRange(math.max(1, base.size), col(key))
+    val others = survivors(rest).unionByName(upserts)
+    if (ordered.isEmpty) return others.coalesce(1)
+    val at = rangeIds(others, key, ordered.drop(1).map(_._2))
+    org.apache.spark.sql.graft.WriteBridge.sideBySide(ordered.zipWithIndex.map {
+      case (f, i) => survivors(Seq(f._1)).unionByName(others.filter(at === lit(i)))
+    })
   }
 
-  /** `nOut - 1` split points (as "num" stat strings) that cut the rows of
-    * files with these key stats into equal shares, each file's non-null
-    * rows taken as spread evenly over its [min, max]. */
-  private def spreadSplits(stats: Seq[ColStat], nOut: Int): Seq[String] = {
-    val spans = stats.map(st => (st.min.get.toDouble, st.max.get.toDouble,
-      (st.rows - st.nulls).toDouble))
-    val total = spans.map(_._3).sum
-    // rows at or below x
-    def below(x: Double): Double = spans.map { case (a, b, w) =>
-      if (x >= b) w else if (x < a) 0.0 else w * (x - a) / (b - a)
-    }.sum
-    val (lo, hi) = (spans.map(_._1).min, spans.map(_._2).max)
-    (1 until nOut).map { j =>
-      val want = total * j / nOut
-      var (l, h) = (lo, hi)
-      for (_ <- 0 until 64) {
-        val m = l + (h - l) / 2
-        if (below(m) < want) l = m else h = m
+  /** Whether disjoint `ranges` (min, max, rows; ascending), each taking
+    * the keys from its min up to the next one's, stay even when the
+    * integral `keys` of the fold's new and pending rows join them: no
+    * range would hold more than twice the mean, counting a row for each
+    * key outside its range's [min, max] (a key inside one updates or
+    * deletes a row it already holds). */
+  private def evenRanges(ranges: Seq[(Double, Double, Long)], keys: => Iterable[Any]): Boolean =
+    ranges.isEmpty || {
+      val lows = ranges.drop(1).map(_._2).toArray
+      val rows = ranges.map(_._3.toDouble).toArray
+      keys.foreach { k =>
+        val v = k.asInstanceOf[Number].doubleValue
+        val i = splitsAtOrBelow(lows, v)
+        if (v < ranges(i)._1 || v > ranges(i)._2) rows(i) += 1
       }
-      java.lang.Double.toString(h)
+      rows.max <= 2 * rows.sum / rows.length
     }
+
+  /** How many of the ascending `splits` are at or below `v`, by bisection. */
+  private def splitsAtOrBelow(splits: Array[Double], v: Double): Int = {
+    var (l, h) = (0, splits.length)
+    while (l < h) { val m = (l + h) >>> 1; if (splits(m) <= v) l = m + 1 else h = m }
+    l
   }
 
-  /** The range partition of `df`'s `key` among `splits` (ascending stat
-    * strings of `kind`): how many splits are at or below the key, which
-    * is compared as a double ("num") or as its string form ("str"); a
-    * null key is in partition 0. */
-  private def rangeIds(df: DataFrame, key: String, kind: String,
-                       splits: Seq[String]): org.apache.spark.sql.Column = {
+  /** The range partition of `df`'s numeric `key` among ascending
+    * `splits`: how many of them are at or below the key; a null key is in
+    * partition 0. */
+  private def rangeIds(df: DataFrame, key: String,
+                       splits: Seq[Double]): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.api.java.UDF1
     import org.apache.spark.sql.types.IntegerType
-    // splits at or below k: the first index past them, by bisection
-    def count[T](s: Array[T], atOrBelow: T => Boolean): Int = {
-      var (l, h) = (0, s.length)
-      while (l < h) { val m = (l + h) >>> 1; if (atOrBelow(s(m))) l = m + 1 else h = m }
-      l
+    val s = splits.toArray
+    val f = new UDF1[Any, Int] {
+      def call(k: Any): Int = if (k == null) 0
+        else splitsAtOrBelow(s, k.asInstanceOf[java.lang.Double].doubleValue)
     }
-    val f =
-      if (kind == "num") {
-        val s = splits.map(_.toDouble).toArray
-        new UDF1[Any, Int] {
-          def call(k: Any): Int = if (k == null) 0
-            else { val v = k.asInstanceOf[java.lang.Double].doubleValue; count[Double](s, _ <= v) }
-        }
-      } else {
-        val s = splits.toArray
-        new UDF1[Any, Int] {
-          def call(k: Any): Int = if (k == null) 0
-            else { val v = k.toString; count[String](s, _ <= v) }
-        }
-      }
-    org.apache.spark.sql.functions.udf(f, IntegerType)(
-      df.col(key).cast(if (kind == "num") "double" else "string"))
+    org.apache.spark.sql.functions.udf(f, IntegerType)(df.col(key).cast("double"))
   }
 
   /** Exactly-once streaming MERGE: the upsert twin of

@@ -71,7 +71,9 @@ object FileSourceBridge {
     * Returns the serializable factory plus the prepared Hadoop conf the
     * executor-side TaskAttemptContext must carry (prepareWrite mutates
     * the job's conf; writers built against a fresh conf would lose the
-    * compression/schema settings). */
+    * compression/schema settings). A schema `df.write` would refuse
+    * (duplicate column names, a type or field name the format cannot
+    * hold) is refused here. */
   def writeFactory(spark: SparkSession, format: String,
                    dataSchema: StructType)
       : (org.apache.spark.sql.execution.datasources.OutputWriterFactory,
@@ -81,6 +83,11 @@ object FileSourceBridge {
       case _     => new ParquetFileFormat()
     }
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    // what InsertIntoHadoopFsRelationCommand and FileFormatWriter check
+    org.apache.spark.sql.util.SchemaUtils.checkColumnNameDuplication(
+      dataSchema.fieldNames.toSeq, classic.sessionState.conf.caseSensitiveAnalysis)
+    org.apache.spark.sql.execution.datasources.DataSourceUtils.verifySchema(fmt, dataSchema)
+    org.apache.spark.sql.execution.datasources.DataSourceUtils.checkFieldNames(fmt, dataSchema)
     val job = org.apache.hadoop.mapreduce.Job.getInstance(
       classic.sessionState.newHadoopConfWithOptions(Map.empty))
     job.setOutputKeyClass(classOf[Void])

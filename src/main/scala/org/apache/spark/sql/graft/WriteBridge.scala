@@ -79,13 +79,16 @@ object WriteBridge {
     * execution id, so listeners see it as they see `df.write`. `task`
     * runs once per partition on the partition's rows and its file and
     * returns that partition's report; a task that throws removes its
-    * file first. Returns the reports of the attempts that succeeded, by
-    * partition. A frame with no partition runs one empty partition 0.
+    * file first. `result` gets the report of each attempt that
+    * succeeded, with its partition, as it arrives on the driver. A frame
+    * with no partition runs one empty partition 0. `schema` passes the
+    * checks `df.write` makes (duplicate column names under the
+    * session's case sensitivity, the format's types and field names).
     * `spark.sql.files.maxRecordsPerFile` would split a task's output
     * into several files, which one report per task cannot name: a
     * positive value is refused. */
   def write[R: ClassTag](df: DataFrame, format: String, schema: StructType, dir: String)(
-      task: (Iterator[InternalRow], TaskFile) => R): Array[R] = {
+      task: (Iterator[InternalRow], TaskFile) => R, result: (Int, R) => Unit): Unit = {
     require(format == "parquet" || format == "orc",
       s"txlog writes parquet or orc files, not '$format'")
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
@@ -100,13 +103,11 @@ object WriteBridge {
       val planned = qe.toRdd
       val rdd =
         if (planned.partitions.isEmpty) sc.parallelize(Seq.empty[InternalRow], 1) else planned
-      val reports = new Array[R](rdd.partitions.length)
       sc.runJob(rdd, (tc: TaskContext, rows: Iterator[InternalRow]) => {
         val file = new TaskFile(factory, conf, dir, schema, tc.partitionId(), tc.taskAttemptId())
         try task(rows, file)
         catch { case t: Throwable => file.abort(); throw t }
-      }, rdd.partitions.indices, (i: Int, r: R) => reports(i) = r)
-      reports
+      }, rdd.partitions.indices, result)
     }
   }
 

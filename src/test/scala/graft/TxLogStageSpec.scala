@@ -158,6 +158,49 @@ class TxLogStageSpec extends SparkSpec {
     assert(TxLog.read(spark, zone).count() === n - 10L)
   }
 
+  test("duplicate column names are refused before anything is written or published") {
+    val zone = freshZone("dup")
+    seed(zone, 50L)
+    val before = TxLog.latest(spark, zone).get
+    val dirs = dataDirs(zone)
+    val twice = spark.range(50L, 60L).select($"id", $"id".cast("string").as("v"),
+      $"id".cast("string").as("v"))
+    val cased = spark.range(50L, 60L).select($"id", $"id".as("ID"))
+    for (df <- Seq(twice, cased)) {
+      intercept[Exception](TxLog.append(spark, zone, df))
+      intercept[Exception](TxLog.replace(spark, zone, df, statsCols = Seq("id")))
+    }
+    assert(TxLog.latest(spark, zone).get.gen === before.gen)
+    assert(dataDirs(zone) === dirs, "a refused write must leave no dir")
+    assert(TxLog.read(spark, zone).count() === 50L)
+  }
+
+  test("folds of inserts past the top file's max keep every file within twice the mean") {
+    val zone = freshZone("even")
+    seed(zone, 400L)
+    val rnd = new scala.util.Random(31L)
+    var folds = 0
+    for (b <- 0 until 12) {
+      // fresh ids past the zone's max, as a CDC stream's inserts arrive,
+      // and updates spread over the ids already there, so every fold
+      // touches every file
+      val top = 400L + b * 40L
+      val upd = rnd.shuffle((0L until top).toVector).take(20)
+        .map(k => (k, s"u${b}_$k", "U"))
+      val ins = (top until top + 40L).map(k => (k, s"n_$k", "I"))
+      assert(TxLog.changesExactlyOnce(spark, zone, (upd ++ ins).toDF("id", "v", "op").repartition(2),
+        "id", "op", b.toLong))
+      val head = TxLog.latest(spark, zone).get
+      if (head.keys.isEmpty) {
+        folds += 1
+        val rows = head.files.map(f => head.colStats(f)("id").rows)
+        assert(rows.max <= 2 * rows.sum / rows.size, s"fold $folds left files of $rows rows")
+      }
+    }
+    assert(folds >= 2)
+    assert(TxLog.read(spark, zone).count() === 400L + 12 * 40L)
+  }
+
   test("the write runs under a SQL execution id and refuses maxRecordsPerFile") {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
