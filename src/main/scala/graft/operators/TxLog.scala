@@ -1031,7 +1031,7 @@ object TxLog {
       val got = scala.collection.mutable.ArrayBuffer.empty[TaskReport]
       var seen = 0L
       org.apache.spark.sql.graft.WriteBridge.write(out, format, written, dir.toString)(
-        writeTask(root.toString, dir.getName, format, written, statsCols, colmap,
+        new WriteTask(root.toString, dir.getName, format, written, statsCols, colmap,
           keyed.map { case (k, _) => (out.schema.fieldIndex(k), out.schema(k).dataType,
             if (flag.isEmpty) -1 else written.length) }),
         (_: Int, r: TaskReport) => {
@@ -1052,37 +1052,43 @@ object TxLog {
   /** The task body of [[stageTasks]]: write the partition's rows — with
     * `keyed` = (key ordinal, key type, flag ordinal or -1) keeping their
     * keys and writing only the flagged ones without the flag — then close
-    * the file and read its stats from its footer. */
-  private def writeTask(root: String, dirName: String, format: String,
-                        written: org.apache.spark.sql.types.StructType,
-                        statsCols: Seq[String], colmap: Map[String, String],
-                        keyed: Option[(Int, org.apache.spark.sql.types.DataType, Int)])
-      : (Iterator[org.apache.spark.sql.catalyst.InternalRow],
-         org.apache.spark.sql.graft.WriteBridge.TaskFile) => TaskReport = (rows, file) => {
-    val keys = scala.collection.mutable.ArrayBuffer.empty[Any]
-    var nullKeys = 0L
-    keyed match {
-      case None => rows.foreach(file.write)
-      case Some((keyAt, keyType, flagAt)) =>
-        val data = org.apache.spark.sql.catalyst.ProjectingInternalRow(written,
-          0 until written.length)
-        rows.foreach { r =>
-          if (r.isNullAt(keyAt)) nullKeys += 1
-          else if (keys.length <= MaxPendingKeys) keys += (r.get(keyAt, keyType) match {
-            case s: org.apache.spark.unsafe.types.UTF8String => s.copy()
-            case k => k
-          })
-          if (flagAt < 0) file.write(r)
-          else if (r.getBoolean(flagAt)) { data.project(r); file.write(data) }
-        }
+    * the file and read its stats from its footer. A class, not a lambda:
+    * a task deserializes a Scala lambda through its defining class's
+    * `$deserializeLambda$`, whose reflective lookup makes the JVM cache
+    * every method of `TxLog` (~800) for the rest of the run. */
+  private final class WriteTask(root: String, dirName: String, format: String,
+                                written: org.apache.spark.sql.types.StructType,
+                                statsCols: Seq[String], colmap: Map[String, String],
+                                keyed: Option[(Int, org.apache.spark.sql.types.DataType, Int)])
+      extends ((Iterator[org.apache.spark.sql.catalyst.InternalRow],
+                org.apache.spark.sql.graft.WriteBridge.TaskFile) => TaskReport) with Serializable {
+    def apply(rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
+              file: org.apache.spark.sql.graft.WriteBridge.TaskFile): TaskReport = {
+      val keys = scala.collection.mutable.ArrayBuffer.empty[Any]
+      var nullKeys = 0L
+      keyed match {
+        case None => rows.foreach(file.write)
+        case Some((keyAt, keyType, flagAt)) =>
+          val data = org.apache.spark.sql.catalyst.ProjectingInternalRow(written,
+            0 until written.length)
+          rows.foreach { r =>
+            if (r.isNullAt(keyAt)) nullKeys += 1
+            else if (keys.length <= MaxPendingKeys) keys += (r.get(keyAt, keyType) match {
+              case s: org.apache.spark.unsafe.types.UTF8String => s.copy()
+              case k => k
+            })
+            if (flagAt < 0) file.write(r)
+            else if (r.getBoolean(flagAt)) { data.project(r); file.write(data) }
+          }
+      }
+      val rel = file.close().map(st =>
+        (dirName + "/" + st.getPath.getName, (st.getLen, st.getModificationTime)))
+      val stats = rel.flatMap(e =>
+        if (statsCols.isEmpty) Some(Map.empty[String, ColStat])
+        else footerFileStats(file.hadoopConf, new Path(root), Seq(e), written, format,
+          statsCols, colmap).map(_(e._1)))
+      TaskReport(rel, stats, keys.toArray, keys.length, nullKeys)
     }
-    val rel = file.close().map(st =>
-      (dirName + "/" + st.getPath.getName, (st.getLen, st.getModificationTime)))
-    val stats = rel.flatMap(e =>
-      if (statsCols.isEmpty) Some(Map.empty[String, ColStat])
-      else footerFileStats(file.hadoopConf, new Path(root), Seq(e), written, format,
-        statsCols, colmap).map(_(e._1)))
-    TaskReport(rel, stats, keys.toArray, keys.length, nullKeys)
   }
 
   /** The files already written under `dir` that `keep` accepts, with the
