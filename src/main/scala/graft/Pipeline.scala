@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.current_timestamp
 import org.apache.spark.sql.streaming.Trigger
 import graft.operators.{Cdc, FullLoad}
+import graft.sources.Tables
 import graft.streaming.CdcStream
 
 /** A17 "pipeline compilation" (SURVEY §2.1 / §3.3): the reference's
@@ -116,7 +117,7 @@ object Pipeline {
 
   final class FullLoadPlan private[Pipeline] (spark: SparkSession, spec: FullLoadSpec) {
     def run(): Unit = {
-      val src = spark.read.parquet(spec.sourcePath)
+      val src = Tables.load(spark, spec.sourcePath)
         .repartition(spec.splits) // the reference's scan-split parallelism (A1/A2)
       FullLoad.run(src, spec.destPath,
         spec.outputPartitions.getOrElse(Runtime.getRuntime.availableProcessors()))
@@ -175,7 +176,7 @@ object Pipeline {
       * stage — deterministic end to end. */
     def corpus(): DataFrame = {
       val id = col(spec.idCol)
-      var docs = spark.read.parquet(spec.sourcePath)
+      var docs = Tables.load(spark, spec.sourcePath)
       if (spec.minQuality > 0.0)
         docs = docs.filter(
           TextAnalysis.qualityScore(TextAnalysis.tokens(col(spec.textCol))) >= spec.minQuality)
@@ -254,7 +255,7 @@ object Pipeline {
         require(frames.nonEmpty,
           s"no split zone under ${spec.destPath} has data or a recorded schema")
         frames.reduce(_.unionByName(_))
-      } else spark.read.parquet(spec.destPath)
+      } else Tables.load(spark, spec.destPath)
   }
 
   /** The DURABLE end-to-end training lake (round-12 directive #5): the

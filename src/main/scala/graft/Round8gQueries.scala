@@ -83,11 +83,15 @@ object Round8gQueries {
         val top = p.groupBy("ai")
           .agg(max(struct(col("sim"), (-col("bi")).as("nb"))).as("w"))
           .select(col("ai"), (-col("w.nb")).as("bi"), col("w.sim").as("sim"))
-        top.as("x").join(top.as("y"),
-            col("x.ai") === col("y.bi") && col("x.bi") === col("y.ai"))
-          .filter(col("x.ai") < col("x.bi"))
-          .select(col("x.ai").as("a_id"), col("x.bi").as("b_id"),
-            round(col("x.sim"), 4).as("sim"))
+        // mutual iff the unordered pair holds both directions' top-1: one
+        // aggregate over `top`, not a self-join that plans it twice; the
+        // pair's sim is the a_id -> b_id row's, as the oracle's x.sim
+        top.groupBy(least(col("ai"), col("bi")).as("a_id"),
+            greatest(col("ai"), col("bi")).as("b_id"))
+          .agg(count(lit(1)).as("n"),
+            max(when(col("ai") < col("bi"), col("sim"))).as("sim"))
+          .filter(col("n") === 2)
+          .select(col("a_id"), col("b_id"), round(col("sim"), 4).as("sim"))
           .orderBy("a_id")
       }),
 

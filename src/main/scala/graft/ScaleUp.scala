@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** Dev tool: replicate a testdata sf dir N-fold with key-shifted copies,
   * preserving every cross-table join relationship (each replica shifts a
@@ -45,7 +46,7 @@ object ScaleUp {
     val bigB = 10000000L // event/user/doc/vec ids
 
     def rep(table: String, shifts: Map[String, Long]): Unit = {
-      val df = spark.read.parquet(s"$src/$table.parquet")
+      val df = Tables.table(spark, src, table)
       val one: Long => DataFrame = i =>
         shifts.foldLeft(df) { case (acc, (c, base)) =>
           acc.withColumn(c, col(c) + lit(i * base))
@@ -58,7 +59,7 @@ object ScaleUp {
     // dimension-of-dimensions stay single-copy (nation/region keys are
     // referenced unshifted everywhere)
     for (t <- Seq("nation", "region"))
-      spark.read.parquet(s"$src/$t.parquet")
+      Tables.table(spark, src, t)
         .write.mode("overwrite").parquet(s"$dest/$t.parquet")
 
     rep("customer", Map("c_custkey" -> custB))
@@ -71,7 +72,7 @@ object ScaleUp {
 
     // documents: shift ids AND perturb text per replica (see scaladoc)
     locally {
-      val df = spark.read.parquet(s"$src/documents.parquet")
+      val df = Tables.documents(spark, src)
       val out = (0L until copies.toLong).map { i =>
         val shifted = df.withColumn("doc_id", col("doc_id") + lit(i * bigB))
         if (i == 0L) shifted
@@ -88,7 +89,7 @@ object ScaleUp {
 
     // embeddings: shift ids AND nudge each replica's direction
     locally {
-      val df = spark.read.parquet(s"$src/embeddings.parquet")
+      val df = Tables.embeddings(spark, src)
       val out = (0L until copies.toLong).map { i =>
         val shifted = df.withColumn("vec_id", col("vec_id") + lit(i * bigB))
         if (i == 0L) shifted

@@ -150,7 +150,7 @@ object Compaction {
     val old = new Path(live.getParent, oldPrefix(live.getName) + tag)
 
     try {
-      val df = spark.read.format(format).load(path)
+      val df = graft.sources.Tables.load(spark, path, format)
       // partitioned zones repartition BY the partition columns so each
       // value's rows land in one task -> one file per value, not
       // wantFiles x values

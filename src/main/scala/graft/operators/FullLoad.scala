@@ -59,5 +59,5 @@ object FullLoad {
 
   def readBack(spark: SparkSession, destPath: String,
                format: String = "parquet"): DataFrame =
-    spark.read.format(format).load(destPath)
+    graft.sources.Tables.load(spark, destPath, format)
 }

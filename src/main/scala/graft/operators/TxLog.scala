@@ -1044,7 +1044,7 @@ object TxLog {
         if (statsCols.isEmpty || info.isEmpty) Map.empty[String, Map[String, ColStat]]
         else if (reports.forall(r => r.file.isEmpty || r.stats.nonEmpty))
           reports.flatMap(r => r.file.map(_._1).zip(r.stats)).toMap
-        else aggregateFileStats(spark, root, info, format, statsCols, colmap)
+        else aggregateFileStats(spark, root, info, format, statsCols, colmap, Some(written))
       (Staged(Seq(dir), info, stats), reports)
     } catch { case e: Throwable => f.delete(dir, true); throw e }
   }
@@ -1527,7 +1527,7 @@ object TxLog {
   def read(spark: SparkSession, zone: String): DataFrame =
     latest(spark, zone) match {
       case Some(s) => readSnapshot(spark, zone, s)
-      case None    => spark.read.parquet(zone)
+      case None    => graft.sources.Tables.load(spark, zone)
     }
 
   /** Read a SPECIFIC snapshot — stable under concurrent publishes, valid
@@ -1953,7 +1953,7 @@ object TxLog {
     if (statsCols.isEmpty) Map.empty
     else written.flatMap(w => footerFileStats(spark.sparkContext.hadoopConfiguration,
         root, files, w, format, statsCols, colmap))
-      .getOrElse(aggregateFileStats(spark, root, files, format, statsCols, colmap))
+      .getOrElse(aggregateFileStats(spark, root, files, format, statsCols, colmap, written))
 
   /** [[collectFileStats]] from Parquet footers, or None when some stats
     * column or row group cannot give exactly what [[aggregateFileStats]]
@@ -2097,17 +2097,21 @@ object TxLog {
     * every stats column's bounds and null count in ONE
     * `groupBy(input_file_name)` job. Numeric columns record doubles
     * ("num"); everything else records its string form ("str" — ISO
-    * date/timestamp strings order chronologically). */
+    * date/timestamp strings order chronologically). `written`, the
+    * schema the files were written with (physical names), spares the
+    * read-back Spark's schema-inference job. */
   private[graft] def aggregateFileStats(spark: SparkSession, root: Path,
                                         files: Seq[(String, (Long, Long))],
                                         format: String, statsCols: Seq[String],
-                                        colmap: Map[String, String] = Map.empty)
+                                        colmap: Map[String, String] = Map.empty,
+                                        written: Option[org.apache.spark.sql.types.StructType] = None)
       : Map[String, Map[String, ColStat]] = {
     import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min, when}
     // stats are keyed by LOGICAL column names throughout the manifest;
     // freshly-written files carry physical names, so surface them
     // logically before aggregating
-    val dfRaw = spark.read.format(format).load(files.map(e => new Path(root, e._1).toString): _*)
+    val dfRaw = written.fold(spark.read)(spark.read.schema).format(format)
+      .load(files.map(e => new Path(root, e._1).toString): _*)
     val rev = colmap.map(_.swap)
     val df =
       if (rev.isEmpty || !dfRaw.columns.exists(rev.contains)) dfRaw

@@ -1,14 +1,22 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchemaBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
-/** Loaders for the driver testdata tables (TESTDATA.md).
+/** Loaders for the driver testdata tables (TESTDATA.md), and [[load]],
+  * the file-table read every plain parquet read of the engine goes
+  * through.
   *
-  * All loads are plain parquet scans — Catalyst's predicate pushdown and
-  * column pruning reach the vectorized parquet reader, so callers should
-  * filter/select on these frames directly rather than materializing.
+  * All loads are parquet scans — Catalyst's predicate pushdown and column
+  * pruning reach the vectorized parquet reader, so callers should
+  * filter/select on these frames directly rather than materializing. The
+  * scan's schema comes from ONE parquet footer read on the driver — the
+  * file Spark's own inference would touch, converted by Spark's own
+  * footer-to-schema function under the session's parquet settings
+  * ([[org.apache.spark.sql.execution.datasources.parquet.FooterSchemaBridge]])
+  * — so planning a table read starts no Spark job.
   *
   * `events.ts` has shipped in three physical encodings across driver
   * rounds — `timestamp[ns]` (read as a nanos long via
@@ -22,8 +30,21 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   */
 object Tables {
 
+  /** `spark.read.format(format).load(path)`, planned without a Spark
+    * job where that gives the same frame: a flat parquet directory (or
+    * one parquet file) without `mergeSchema` is read with the schema its
+    * footer gives on the driver. Other formats, partitioned or nested
+    * directories, globs, `mergeSchema`, and a missing or empty path read
+    * through plain `spark.read`, with Spark's own errors. */
+  def load(spark: SparkSession, path: String, format: String = "parquet"): DataFrame = {
+    val schema =
+      if (format.equalsIgnoreCase("parquet")) FooterSchemaBridge.inferredSchema(spark, path)
+      else None
+    schema.fold(spark.read)(spark.read.schema).format(format).load(path)
+  }
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    load(spark, s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "nation")
